@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.Tables
+import graft.sources.OrcIo
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -64,19 +66,69 @@ object Acid {
       } finally { pool.shutdown() }
     }
 
-  /** Resolve base+delta event rows to current-state rows. Input must
-    * have the ACID event columns plus payload columns nested under
-    * `row`. */
-  def resolve(events: DataFrame): DataFrame = {
+  /** A `delta_M` (one transaction) or `delta_A_B` (a minor-compacted
+    * range) event directory and the txn range [low, high] it holds. */
+  private[graft] final case class Delta(name: String, low: Long, high: Long)
+
+  /**
+   * A table directory's ACID layout (`site/_docs/acid.md:26-60`), listed
+   * and parsed once: `base_N/` holds plain rows, the compacted state as
+   * of txn N; `delta_M/` and `delta_A_B/` hold events. Both are ordered
+   * NUMERICALLY ("base_10" < "base_2" lexically, and a compaction crash
+   * can legitimately leave two bases behind). Names of any other shape —
+   * `_tmp_base_*` staging, `.purged_old_*` / `.purge_tmp_*` purge
+   * debris — are not part of the table.
+   */
+  private[graft] final case class Layout(dir: String, fs: FileSystem,
+      bases: Seq[(String, Long)], deltas: Seq[Delta]) {
+    /** Txn of the newest base; Long.MinValue when there is none. */
+    def baseTxn: Long = bases.lastOption.fold(Long.MinValue)(_._2)
+    def newestBase: (String, Long) = {
+      require(bases.nonEmpty, s"no base_N directory under $dir")
+      bases.last
+    }
+    /** Deltas not folded into the newest base. A straddling range
+      * (delta_A_B with A ≤ baseTxn < B) stays visible; its events
+      * ≤ baseTxn are the base's own history and readers drop them. */
+    def visible: Seq[Delta] = deltas.filter(_.high > baseTxn)
+    def names: Seq[String] = bases.map(_._1) ++ deltas.map(_.name)
+    def delete(name: String): Unit = fs.delete(new Path(s"$dir/$name"), true)
+  }
+
+  private val BaseName = """base_(\d+)""".r
+  private val DeltaName = """delta_(\d+)(?:_(\d+))?""".r
+
+  private[graft] def layout(spark: SparkSession, tableDir: String): Layout = {
+    val root = new Path(tableDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val names = fs.listStatus(root).filter(_.isDirectory)
+      .map(_.getPath.getName).toSeq
+    Layout(tableDir, fs,
+      names.collect { case n @ BaseName(t) => n -> t.toLong }.sortBy(_._2),
+      names.collect { case n @ DeltaName(lo, hi) =>
+        Delta(n, lo.toLong, Option(hi).getOrElse(lo).toLong)
+      }.sortBy(d => (d.low, d.high)))
+  }
+
+  /** The latest event per row key (originalTransaction, bucket, rowId),
+    * deletes included: one shuffle on the key. */
+  private def latestPerKey(events: DataFrame): DataFrame = {
     val w = Window
       .partitionBy(col("originalTransaction"), col("bucket"), col("rowId"))
       .orderBy(col("currentTransaction").desc)
     events
       .withColumn("_version_rank", row_number().over(w))
       .filter(col("_version_rank") === 1)
+      .drop("_version_rank")
+  }
+
+  /** Resolve base+delta event rows to current-state rows. Input must
+    * have the ACID event columns plus payload columns nested under
+    * `row`. */
+  def resolve(events: DataFrame): DataFrame =
+    latestPerKey(events)
       .filter(col("operation") =!= OpDelete)
       .select(col("row.*"))
-  }
 
   /** The reference's ACID stats user-metadata key and its
     * "inserts,updates,deletes" serialization
@@ -85,6 +137,8 @@ object Acid {
 
   case class AcidStats(inserts: Long, updates: Long, deletes: Long) {
     def serialize: String = s"$inserts,$updates,$deletes"
+    def +(o: AcidStats): AcidStats =
+      AcidStats(inserts + o.inserts, updates + o.updates, deletes + o.deletes)
   }
 
   object AcidStats {
@@ -95,31 +149,38 @@ object Acid {
   }
 
   /**
-   * Event-type counts of an event frame — what the reference tallies
-   * per delta file while writing.
+   * Event-type counts of the events above txn `afterTxn` — what the
+   * reference tallies per delta file while writing.
    *
-   * Deliberately tallied over FULL rows (`.rdd`), not a pruned
-   * aggregate: files carrying the exact ACID event schema are genuine
-   * ACID deltas to the format, and the ORC reader's acid detection
-   * (`SchemaEvolution.checkAcidSchema:468-476` in the reference; same
-   * logic in the bundled ORC jars) remaps column ids on such files,
-   * which breaks column-pruned plain scans (AIOOBE in the vectorized
-   * reader). Full-width reads are unaffected — and every other engine
-   * path (resolve / readTable / compaction) reads full events anyway.
+   * Deliberately tallied over FULL rows (`.rdd`), never an aggregate:
+   * ORC files carrying the exact ACID event schema cannot be read
+   * through the vectorized reader at all. Spark's
+   * OrcColumnarBatchReader detects the Hive-ACID pattern in the FILE
+   * schema (OrcUtils checkAcidSchema; `SchemaEvolution
+   * .checkAcidSchema:468-476` in the reference) and remaps requested
+   * top-level ids into the inner `row` struct's children, so a pruned
+   * scan (a `count()`, a projected aggregate) throws
+   * ArrayIndexOutOfBoundsException, and no formulation — schema-forced
+   * full width, count(struct(*)) pinned against ColumnPruning — gets
+   * past it; the ACID metadata columns are exactly what the remap
+   * hides. The row-oriented reader is the only path to them, and
+   * `AcidSpec`'s canary test pins the quirk. Every frame that scans
+   * ACID-schema ORC either references all six event columns (resolve,
+   * compaction, CDC) or goes through here.
    */
-  def acidStatsOf(events: DataFrame): AcidStats = {
+  private def tally(events: DataFrame,
+      afterTxn: Long = Long.MinValue): AcidStats = {
     val opIdx = events.schema.fieldIndex("operation")
-    val (i, u, d) = events.rdd
+    val ctIdx = events.schema.fieldIndex("currentTransaction")
+    events.rdd
+      .filter(_.getLong(ctIdx) > afterTxn)
       .map(r => r.getInt(opIdx) match {
-        case OpInsert => (1L, 0L, 0L)
-        case OpUpdate => (0L, 1L, 0L)
-        case OpDelete => (0L, 0L, 1L)
-        case _ => (0L, 0L, 0L)
+        case OpInsert => AcidStats(1L, 0L, 0L)
+        case OpUpdate => AcidStats(0L, 1L, 0L)
+        case OpDelete => AcidStats(0L, 0L, 1L)
+        case _ => AcidStats(0L, 0L, 0L)
       })
-      .fold((0L, 0L, 0L)) { case ((a1, b1, c1), (a2, b2, c2)) =>
-        (a1 + a2, b1 + b2, c1 + c2)
-      }
-    AcidStats(i, u, d)
+      .fold(AcidStats(0L, 0L, 0L))(_ + _)
   }
 
   private def writeStatsSidecar(outPath: String, stats: AcidStats): Unit =
@@ -134,9 +195,6 @@ object Acid {
     rows.headOption.map(r => AcidStats.parse(r.getString(0)))
   }
 
-  /** Major compaction: resolve then rewrite as a plain base dataset,
-    * recording the event tallies under `hive.acid.stats` like the
-    * reference's writer (a compacted base carries only inserts). */
   /** Output file count for a compaction rewrite: track the INPUT byte
     * volume against a target file size ([[graft.sources.OrcIo.merge]]'s
     * rule), never the shuffle-partition count — compaction exists to
@@ -144,19 +202,21 @@ object Acid {
     * of deltas into 32 shards re-creates the small-file problem it is
     * meant to fix. At gate scale this is one file; at 100 TB it is
     * thousands, each near the target size. */
-  private def sizedFileCount(fs: org.apache.hadoop.fs.FileSystem,
-      tableDir: String, dirs: Seq[String],
+  private def sizedFileCount(l: Layout, dirs: Seq[String],
       targetFileBytes: Long = 256L * 1024 * 1024): Int = {
-    val bytes = dirs.map(d => fs.getContentSummary(
-      new org.apache.hadoop.fs.Path(s"$tableDir/$d")).getLength).sum
+    val bytes = dirs.map(d =>
+      l.fs.getContentSummary(new Path(s"${l.dir}/$d")).getLength).sum
     math.max(1L, bytes / targetFileBytes).toInt
   }
 
+  /** Major compaction: resolve then rewrite as a plain base dataset,
+    * recording the event tallies under `hive.acid.stats` like the
+    * reference's writer (a compacted base carries only inserts). */
   def compact(events: DataFrame, outPath: String): Unit = {
     val resolved = resolve(events)
-    graft.sources.OrcIo.write(resolved, outPath)
+    OrcIo.write(resolved, outPath)
     // count the written output: counting the resolve plan would
-    // column-prune the event scan, which AIOOBEs on ACID-schema ORC
+    // column-prune the event scan (see [[tally]])
     writeStatsSidecar(outPath, AcidStats(
       resolved.sparkSession.read.orc(outPath).count(), 0L, 0L))
   }
@@ -166,19 +226,18 @@ object Acid {
     * The tally here runs as ONE codegen aggregate over the PRE-WRITE
     * frame: every current caller passes events derived from parquet
     * tables or an RDD, so the vectorized path is safe (the
-    * [[acidStatsOf]] row-reader constraint applies only to frames that
+    * [[tally]] row-reader constraint applies only to frames that
     * SCAN acid-schema ORC files). That invariant is ENFORCED, not just
     * documented: a frame whose plan reads any ORC source — the natural
-    * input of a future delta rewrite, where the column-pruned tally
-    * would hit the checkAcidSchema column-id remap AIOOBE — routes to
-    * the full-row [[acidStatsOf]] path instead. The guard is
-    * deliberately coarse (any ORC scan, acid-schema or not): a false
-    * positive only costs the slower-but-safe tally. */
+    * input of a future delta rewrite — routes to the full-row
+    * [[tally]] instead. The guard is deliberately coarse (any ORC scan,
+    * acid-schema or not): a false positive only costs the
+    * slower-but-safe tally. */
   def writeDelta(events: DataFrame, outPath: String): Unit = {
-    graft.sources.OrcIo.write(events, outPath)
+    OrcIo.write(events, outPath)
     val readsOrc = events.queryExecution.analyzed.toString
       .toLowerCase(java.util.Locale.ROOT).contains("orc")
-    if (readsOrc) { writeStatsSidecar(outPath, acidStatsOf(events)); return }
+    if (readsOrc) { writeStatsSidecar(outPath, tally(events)); return }
     val r = events.agg(
       coalesce(sum(when(col("operation") === OpInsert, 1L)
         .otherwise(0L)), lit(0L)),
@@ -207,6 +266,53 @@ object Acid {
       struct(col("o_orderkey"), col("o_custkey"),
         col("o_totalprice"), col("o_orderstatus")).as("row"))
 
+  /** One delta of a gate fixture: the fixture's orders rows with
+    * `o_orderkey % mod == 0`, as `op` events at `txn`. Updates scale
+    * the price by `factor`; inserts move the key to key + 2·10¹²,
+    * disjoint from every ScaleUp id domain. */
+  private final case class FixtureDelta(txn: Long, op: Int, mod: Int,
+      factor: Double = 1.0)
+
+  /** The [[morQuery]] events as directories: %10 updated at txn 2,
+    * %7 deleted at txn 3. */
+  private val MorDeltas = Seq(FixtureDelta(2L, OpUpdate, 10, 1.10),
+    FixtureDelta(3L, OpDelete, 7))
+  /** [[MorDeltas]] plus fresh inserts at txn 4, so all three
+    * operations shape a count. */
+  private val LedgerDeltas = MorDeltas :+ FixtureDelta(4L, OpInsert, 19)
+  /** Four single-txn deltas whose modular masses form non-trivial
+    * trigger groups at every sf under quota = |orders|/12. */
+  private val TriggerDeltas = Seq(FixtureDelta(2L, OpUpdate, 11, 1.05),
+    FixtureDelta(3L, OpUpdate, 13, 1.07), FixtureDelta(4L, OpDelete, 17),
+    FixtureDelta(5L, OpInsert, 19))
+
+  /** The orders payload every ACID gate fixture carries. */
+  private def fixtureOrders(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.load(spark, sfDir, "orders")
+      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
+        col("o_orderstatus"))
+
+  /** Write `orders` as `base_1` plus `deltas` under a fresh scratch
+    * table directory — every modular gate fixture is written here. The
+    * directories are independent, so they are written in parallel.
+    * Returns the table directory. */
+  private def writeFixture(orders: DataFrame, tag: String,
+      deltas: Seq[FixtureDelta]): String = {
+    val t = s"${OrcIo.scratchDir(tag)}/t"
+    inParallel((() => OrcIo.write(orders, s"$t/base_1")) +:
+      deltas.map { d => () =>
+        val rows = orders.filter(col("o_orderkey") % d.mod === 0)
+        writeDelta(ordersAsEvents(d.op match {
+          case OpUpdate =>
+            rows.withColumn("o_totalprice", col("o_totalprice") * d.factor)
+          case OpInsert =>
+            rows.withColumn("o_orderkey", col("o_orderkey") + 2000000000000L)
+          case _ => rows
+        }, d.op, d.txn), s"$t/delta_${d.txn}")
+      })
+    t
+  }
+
   /**
    * Minor compaction (`site/_docs/acid.md:26-60`): merge several delta
    * directories into one without touching the base. Unlike major
@@ -218,45 +324,26 @@ object Acid {
    */
   def minorCompact(spark: SparkSession, tableDir: String,
       subset: Option[Seq[String]] = None): String = {
-    val fs = new org.apache.hadoop.fs.Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = subset.map(_.toArray).getOrElse(
-      fs.listStatus(new org.apache.hadoop.fs.Path(tableDir))
-        .filter(_.isDirectory).map(_.getPath.getName)
-        .filter(_.startsWith("delta_")))
-    require(dirs.nonEmpty, s"no delta_* directories under $tableDir")
-    val txns = dirs.flatMap(_.stripPrefix("delta_").split("_")
-      .map(_.toLong))
+    val l = layout(spark, tableDir)
+    val deltas = subset.fold(l.deltas)(s =>
+      l.deltas.filter(d => s.contains(d.name)))
+    require(deltas.nonEmpty, s"no delta_* directories under $tableDir")
+    require(subset.forall(_.distinct.size == deltas.size),
+      s"not all of ${subset.get.mkString(", ")} are deltas of $tableDir")
+    val dirs = deltas.map(_.name)
     val events = dirs.map(d => spark.read.orc(s"$tableDir/$d"))
       .reduce(_.unionByName(_))
-    val w = Window
-      .partitionBy(col("originalTransaction"), col("bucket"), col("rowId"))
-      .orderBy(col("currentTransaction").desc)
-    val merged = events
-      .withColumn("_version_rank", row_number().over(w))
-      .filter(col("_version_rank") === 1)
-      .drop("_version_rank")
-    val out = s"$tableDir/delta_${txns.min}_${txns.max}"
-    graft.sources.OrcIo.write(
-      merged.repartition(sizedFileCount(fs, tableDir, dirs)), out)
+    val out =
+      s"$tableDir/delta_${deltas.map(_.low).min}_${deltas.map(_.high).max}"
+    OrcIo.write(latestPerKey(events).repartition(sizedFileCount(l, dirs)), out)
     // tally from the written output: one cheap scan instead of
     // re-running the window, and the counts describe exactly the files
     // the stats ride with
-    writeStatsSidecar(out, acidStatsOf(spark.read.orc(out)))
-    dirs.foreach(d =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$tableDir/$d"), true))
+    writeStatsSidecar(out, tally(spark.read.orc(out)))
+    dirs.foreach(l.delete)
     out
   }
 
-  /**
-   * Directory-layout merge-on-read (`site/_docs/acid.md:26-60`): a
-   * table directory holds `base_N/` (plain rows, the compacted state as
-   * of txn N) plus `delta_M/` event directories (M > N). Reading =
-   * base rows lifted to insert events at txn N, unioned with all delta
-   * events, resolved. Delta discovery is a metadata listing; the
-   * union+window is one shuffle on the row key regardless of delta
-   * count.
-   */
   /** [[readTable]] with snapshot isolation: resolve the table AS OF
     * transaction `asOfTxn` — deltas beyond the snapshot are skipped at
     * the METADATA level (directory-name txn ranges, nothing read), and
@@ -269,19 +356,20 @@ object Acid {
       rowIdCol: String = "id", buckets: Int = 4): DataFrame =
     readTable(spark, tableDir, rowIdCol, buckets, Some(asOfTxn))
 
+  /**
+   * Directory-layout merge-on-read (`site/_docs/acid.md:26-60`): a
+   * table directory holds `base_N/` (plain rows, the compacted state as
+   * of txn N) plus `delta_M/` event directories (M > N). Reading =
+   * base rows lifted to insert events at txn N, unioned with all delta
+   * events, resolved. Delta discovery is a metadata listing; the
+   * union+window is one shuffle on the row key regardless of delta
+   * count.
+   */
   def readTable(spark: SparkSession, tableDir: String,
       rowIdCol: String = "id", buckets: Int = 4,
       asOf: Option[Long] = None): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(tableDir))
-      .filter(_.isDirectory).map(_.getPath.getName)
-    // NUMERIC max, not string sort: "base_10" < "base_2" lexically, and
-    // a compaction crash can legitimately leave two bases behind
-    val baseDirs = dirs.filter(_.startsWith("base_"))
-    require(baseDirs.nonEmpty, s"no base_N directory under $tableDir")
-    val base = baseDirs.maxBy(_.stripPrefix("base_").toLong)
-    val baseTxn = base.stripPrefix("base_").toLong
+    val l = layout(spark, tableDir)
+    val (base, baseTxn) = l.newestBase
     // a snapshot OLDER than the newest base is unanswerable: the base
     // folded every event ≤ baseTxn, so lifting it and filtering to the
     // snapshot would fabricate an empty/partial before-state (every
@@ -289,13 +377,9 @@ object Acid {
     asOf.foreach(t => require(t >= baseTxn,
       s"history before base_$baseTxn has been compacted away " +
         s"(requested snapshot txn=$t under $tableDir)"))
-    // `delta_M` single-txn dirs and `delta_A_B` minor-compacted ranges
-    val deltas = dirs.filter(_.startsWith("delta_"))
-      .filter(_.stripPrefix("delta_").split("_").last.toLong > baseTxn)
-      // snapshot pruning: a delta whose LOW txn exceeds the snapshot
-      // is invisible wholesale (metadata-only skip)
-      .filter(d => asOf.forall(
-        _ >= d.stripPrefix("delta_").split("_").head.toLong))
+    // snapshot pruning: a delta whose LOW txn exceeds the snapshot is
+    // invisible wholesale (metadata-only skip)
+    val deltas = l.visible.filter(d => asOf.forall(_ >= d.low))
     val baseRows = spark.read.orc(s"$tableDir/$base")
     val baseEvents = baseRows.select(
       lit(OpInsert).as("operation"),
@@ -316,7 +400,7 @@ object Acid {
     // crash window safe: straddling deltas survive until after the
     // base rename, and the new base shadows their folded prefix here.
     val all = deltas.foldLeft(baseEvents) { (acc, d) =>
-      acc.unionByName(spark.read.orc(s"$tableDir/$d")
+      acc.unionByName(spark.read.orc(s"$tableDir/${d.name}")
         .filter(col("currentTransaction") > baseTxn))
     }
     // stragglers above the snapshot inside kept ranges filter out here
@@ -333,22 +417,45 @@ object Acid {
    * resolution.
    */
   def minorCompactQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val orders = Tables.load(spark, sfDir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-        col("o_orderstatus"))
-    val dir = graft.sources.OrcIo.scratchDir("acid_minor_q")
-    inParallel(Seq(
-      () => graft.sources.OrcIo.write(orders, s"$dir/t/base_1"),
-      () => writeDelta(ordersAsEvents(
-        orders.filter(col("o_orderkey") % 10 === 0)
-          .withColumn("o_totalprice", col("o_totalprice") * 1.10),
-        OpUpdate, 2L), s"$dir/t/delta_2"),
-      () => writeDelta(ordersAsEvents(
-        orders.filter(col("o_orderkey") % 7 === 0),
-        OpDelete, 3L), s"$dir/t/delta_3")))
-    minorCompact(spark, s"$dir/t")
-    readTable(spark, s"$dir/t", rowIdCol = "o_orderkey")
+    val t = writeFixture(fixtureOrders(spark, sfDir), "acid_minor_q",
+      MorDeltas)
+    minorCompact(spark, t)
+    readTable(spark, t, rowIdCol = "o_orderkey")
       .orderBy(col("o_orderkey"))
+  }
+
+  /**
+   * Swap `state` in as the table's `base_txn`, crash-safe — the shared
+   * tail of [[majorCompact]] and [[restoreTo]]. Ordered so every
+   * intermediate state is readable:
+   *   1. stage under `_tmp_base_txn`, a name the layout ignores (crash
+   *      → table untouched, stray staging dir inert);
+   *   2. drop `early` and a colliding `base_txn` (an already-compacted
+   *      table is its own input);
+   *   3. rename the staged base into place — [[readTable]]'s numeric
+   *      max now picks it, and every older delta's events ≤ txn are
+   *      shadowed by its currentTransaction > baseTxn filter;
+   *   4. drop the rest of the old layout last — it is invisible behind
+   *      the new base already.
+   * Returns the new base path.
+   */
+  private def swapInBase(spark: SparkSession, l: Layout, txn: Long,
+      state: DataFrame, early: Seq[String] = Nil): String = {
+    val tmp = s"${l.dir}/_tmp_base_$txn"
+    OrcIo.write(state.repartition(sizedFileCount(l, l.names)), tmp)
+    // count the WRITTEN base, not `state`: counting the resolve plan
+    // would column-prune the delta scans (see [[tally]])
+    writeStatsSidecar(tmp, AcidStats(spark.read.orc(tmp).count(), 0L, 0L))
+    val newBase = s"base_$txn"
+    (early :+ newBase).filter(l.names.contains).foreach(l.delete)
+    val dst = new Path(s"${l.dir}/$newBase")
+    // Hadoop rename reports failure by RETURNING FALSE, not throwing;
+    // proceeding to the deletes below would strand the only current
+    // state in the ignored _tmp_ dir — fail loudly before any delete
+    require(l.fs.rename(new Path(tmp), dst),
+      s"rename $tmp -> $dst failed; aborting before deletes")
+    l.names.filter(_ != newBase).foreach(l.delete)
+    dst.toString
   }
 
   /**
@@ -361,40 +468,9 @@ object Acid {
    */
   def majorCompact(spark: SparkSession, tableDir: String,
       rowIdCol: String = "id", buckets: Int = 4): String = {
-    val fs = new org.apache.hadoop.fs.Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(tableDir))
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(d => d.startsWith("base_") || d.startsWith("delta_"))
-    val maxTxn = dirs.flatMap(_.split("_").tail.map(_.toLong)).max
-    val resolved = readTable(spark, tableDir, rowIdCol, buckets)
-    // crash-safe swap: stage under a name [[readTable]] IGNORES (no
-    // base_/delta_ prefix), rename into place FIRST, delete old
-    // directories LAST — a crash at any point leaves the table
-    // readable (old layout before the rename; new base after it, old
-    // deltas all ≤ maxTxn so the reader skips them). The one edge is
-    // an already-compacted table (base_maxTxn is the input), where the
-    // colliding base must be dropped just before the rename.
-    val out = s"$tableDir/_tmp_base_$maxTxn"
-    graft.sources.OrcIo.write(
-      resolved.repartition(sizedFileCount(fs, tableDir, dirs)), out)
-    // count the WRITTEN base, not `resolved`: counting the resolve plan
-    // would column-prune the delta scans, and the ORC jars AIOOBE on
-    // pruned reads of ACID-schema files (checkAcidSchema detection)
-    writeStatsSidecar(out,
-      AcidStats(spark.read.orc(out).count(), 0L, 0L))
-    val newBase = s"base_$maxTxn"
-    if (dirs.contains(newBase))
-      fs.delete(new org.apache.hadoop.fs.Path(s"$tableDir/$newBase"), true)
-    val dst = new org.apache.hadoop.fs.Path(s"$tableDir/$newBase")
-    // Hadoop rename reports failure by RETURNING FALSE, not throwing;
-    // proceeding to the deletes below would strand the only current
-    // state in the ignored _tmp_ dir — fail loudly before any delete
-    require(fs.rename(new org.apache.hadoop.fs.Path(out), dst),
-      s"rename $out -> $dst failed; aborting compaction before deletes")
-    dirs.filter(_ != newBase).foreach(d =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$tableDir/$d"), true))
-    dst.toString
+    val l = layout(spark, tableDir)
+    val maxTxn = (l.bases.map(_._2) ++ l.deltas.map(_.high)).max
+    swapInBase(spark, l, maxTxn, readTable(spark, tableDir, rowIdCol, buckets))
   }
 
   /**
@@ -404,6 +480,16 @@ object Acid {
    * base passthrough). Oracle identical to q_acid_mor — compaction must
    * not change state, and the new base must carry `hive.acid.stats`.
    */
+  def majorCompactQuery(spark: SparkSession, sfDir: String): DataFrame = {
+    val t = writeFixture(fixtureOrders(spark, sfDir), "acid_major_q",
+      MorDeltas)
+    val newBase = majorCompact(spark, t, rowIdCol = "o_orderkey")
+    require(readAcidStats(spark, newBase).exists(_.inserts > 0),
+      s"major compaction must carry $AcidStatsKey")
+    readTable(spark, t, rowIdCol = "o_orderkey")
+      .orderBy(col("o_orderkey"))
+  }
+
   /**
    * Delta-compaction TRIGGER — the push-side twin of
    * [[graft.operators.Scale.compactionPlan]]: q_compact_plan bins a
@@ -427,27 +513,12 @@ object Acid {
   def compactionTrigger(spark: SparkSession, tableDir: String,
       quota: Long): DataFrame = {
     require(quota > 0, s"quota must be positive, got $quota")
-    val fs = new org.apache.hadoop.fs.Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(tableDir))
-      .filter(_.isDirectory).map(_.getPath.getName)
-    val baseTxn = dirs.filter(_.startsWith("base_"))
-      .map(_.stripPrefix("base_").toLong)
-      .reduceOption(_ max _).getOrElse(Long.MinValue)
-    val deltas = inParallel(dirs.filter(_.startsWith("delta_"))
-      .filter(_.stripPrefix("delta_").split("_").last.toLong > baseTxn)
-      .toSeq.map { d => () =>
-        val ts = d.stripPrefix("delta_").split("_").map(_.toLong)
-        // full-width .rdd count: a pruned COUNT(*) scan of
-        // ACID-schema ORC trips the vectorized reader's
-        // checkAcidSchema column-id remap (the acidStatsOf gotcha);
-        // the per-delta count jobs are independent — overlapped
-        val df = spark.read.orc(s"$tableDir/$d")
-        val ctIdx = df.schema.fieldIndex("currentTransaction")
-        (ts.head, ts.last,
-          df.rdd.filter(_.getLong(ctIdx) > baseTxn).count())
-      })
-      .sortBy(_._1)
+    val l = layout(spark, tableDir)
+    // the per-delta count jobs are independent — overlapped
+    val deltas = inParallel(l.visible.map { d => () =>
+      val s = tally(spark.read.orc(s"$tableDir/${d.name}"), l.baseTxn)
+      (d.low, d.high, s.inserts + s.updates + s.deletes)
+    })
     var cum = 0L
     val planned = deltas.map { case (lo, hi, ne) =>
       val grp = cum / quota
@@ -461,7 +532,7 @@ object Acid {
         g.length.toLong, g.map(_._3).sum, g.length >= 2)
     }
     import spark.implicits._
-    out.toSeq.toDF("low_txn", "high_txn", "n_events", "grp",
+    out.toDF("low_txn", "high_txn", "n_events", "grp",
       "grp_low", "grp_high", "grp_deltas", "grp_events", "do_merge")
       .orderBy(col("low_txn"))
   }
@@ -475,33 +546,14 @@ object Acid {
     * window. */
   def compactionTriggerQuery(spark: SparkSession, sfDir: String)
       : DataFrame = {
-    val orders = Tables.load(spark, sfDir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-        col("o_orderstatus"))
-    val dir = graft.sources.OrcIo.scratchDir("acid_trigger_q")
-    inParallel(Seq(
-      () => graft.sources.OrcIo.write(orders, s"$dir/t/base_1"),
-      () => writeDelta(ordersAsEvents(
-        orders.filter(col("o_orderkey") % 11 === 0)
-          .withColumn("o_totalprice", col("o_totalprice") * 1.05),
-        OpUpdate, 2L), s"$dir/t/delta_2"),
-      () => writeDelta(ordersAsEvents(
-        orders.filter(col("o_orderkey") % 13 === 0)
-          .withColumn("o_totalprice", col("o_totalprice") * 1.07),
-        OpUpdate, 3L), s"$dir/t/delta_3"),
-      () => writeDelta(ordersAsEvents(
-        orders.filter(col("o_orderkey") % 17 === 0),
-        OpDelete, 4L), s"$dir/t/delta_4"),
-      () => writeDelta(ordersAsEvents(
-        orders.filter(col("o_orderkey") % 19 === 0)
-          .withColumn("o_orderkey", col("o_orderkey") + 2000000000000L),
-        OpInsert, 5L), s"$dir/t/delta_5")))
-    val quota = math.max(1L, orders.count() / 12)
-    compactionTrigger(spark, s"$dir/t", quota)
+    val orders = fixtureOrders(spark, sfDir)
+    val t = writeFixture(orders, "acid_trigger_q", TriggerDeltas)
+    compactionTrigger(spark, t, math.max(1L, orders.count() / 12))
   }
 
   /**
-   * Execute a [[compactionTrigger]] plan — the other half of the
+   * Execute a [[compactionTrigger]] plan, given as its collected rows
+   * (grp, low_txn, high_txn, do_merge) — the other half of the
    * trigger's planner/executor pair (the trigger decides WHICH delta
    * groups have accumulated enough events to merge; this runs each
    * `do_merge` group as ONE subset minor compaction into its
@@ -515,19 +567,7 @@ object Acid {
    * window, cost ∝ the group's events — exactly the work the trigger
    * quota bounded.
    */
-  def executeTriggerPlan(spark: SparkSession, tableDir: String,
-      plan: DataFrame): Seq[(Long, String)] =
-    executeTriggerPlanRows(spark, tableDir,
-      plan.select(col("grp").cast("long"), col("low_txn").cast("long"),
-          col("high_txn").cast("long"), col("do_merge"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getBoolean(3))))
-
-  /** Core of [[executeTriggerPlan]] on already-collected plan rows
-    * (grp, low_txn, high_txn, do_merge) — callers that hold the plan
-    * driver-side pass it once instead of re-collecting. */
-  private[graft] def executeTriggerPlanRows(spark: SparkSession,
+  private[graft] def executeTriggerPlan(spark: SparkSession,
       tableDir: String, rows: Seq[(Long, Long, Long, Boolean)])
       : Seq[(Long, String)] = {
     def dirName(lo: Long, hi: Long) =
@@ -552,82 +592,32 @@ object Acid {
     * execution must not change resolution). */
   def triggerExecQuery(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val orders = Tables.load(spark, sfDir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-        col("o_orderstatus"))
-    val dir = graft.sources.OrcIo.scratchDir("acid_trigexec_q")
-    inParallel(Seq(
-      () => graft.sources.OrcIo.write(orders, s"$dir/t/base_1"),
-      () => writeDelta(ordersAsEvents(
-        orders.filter(col("o_orderkey") % 11 === 0)
-          .withColumn("o_totalprice", col("o_totalprice") * 1.05),
-        OpUpdate, 2L), s"$dir/t/delta_2"),
-      () => writeDelta(ordersAsEvents(
-        orders.filter(col("o_orderkey") % 13 === 0)
-          .withColumn("o_totalprice", col("o_totalprice") * 1.07),
-        OpUpdate, 3L), s"$dir/t/delta_3"),
-      () => writeDelta(ordersAsEvents(
-        orders.filter(col("o_orderkey") % 17 === 0),
-        OpDelete, 4L), s"$dir/t/delta_4"),
-      () => writeDelta(ordersAsEvents(
-        orders.filter(col("o_orderkey") % 19 === 0)
-          .withColumn("o_orderkey", col("o_orderkey") + 2000000000000L),
-        OpInsert, 5L), s"$dir/t/delta_5")))
+    val orders = fixtureOrders(spark, sfDir)
+    val t = writeFixture(orders, "acid_trigexec_q", TriggerDeltas)
     val quota = math.max(1L, orders.count() / 12)
     // ONE collect serves both the executor and the gate columns
     // (compactionTrigger's frame is driver-local, but a second
     // collect after execution would be a latent re-evaluation hazard
     // if it ever became lazy)
-    val planDf = compactionTrigger(spark, s"$dir/t", quota)
+    val planRows = compactionTrigger(spark, t, quota)
       .select(col("grp"), col("low_txn"), col("high_txn"),
         col("grp_low"), col("grp_high"), col("grp_deltas"),
         col("grp_events"), col("do_merge"))
-    val planRows = planDf.collect()
+      .collect()
     val plan = planRows.map(r => (r.getLong(0), r.getLong(3),
       r.getLong(4), r.getLong(5), r.getLong(6), r.getBoolean(7)))
-    executeTriggerPlanRows(spark, s"$dir/t",
+    executeTriggerPlan(spark, t,
       planRows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getBoolean(7))))
-    val fs = new org.apache.hadoop.fs.Path(s"$dir/t")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val post = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/t"))
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith("delta_"))
-      .map { d =>
-        val ts = d.stripPrefix("delta_").split("_").map(_.toLong)
-        (ts.head, ts.last)
-      }
-    val resolvedRows = readTable(spark, s"$dir/t",
-      rowIdCol = "o_orderkey").rdd.count()
-    val groups = plan.distinct.sortBy(_._1)
-    groups.map { case (grp, lo, hi, nd, ne, merged) =>
-      val covering = post
-        .count(p => p._1 >= lo && p._2 <= hi).toLong
+    val post = layout(spark, t).deltas
+    val resolvedRows = readTable(spark, t, rowIdCol = "o_orderkey")
+      .rdd.count()
+    plan.distinct.sortBy(_._1).map { case (grp, lo, hi, nd, ne, merged) =>
+      val covering = post.count(p => p.low >= lo && p.high <= hi).toLong
       (grp, lo, hi, nd, ne, merged, covering, resolvedRows)
     }.toSeq.toDF("grp", "grp_low", "grp_high", "grp_deltas",
       "grp_events", "merged", "post_dirs", "resolved_rows")
       .orderBy(col("grp"))
-  }
-
-  def majorCompactQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val orders = Tables.load(spark, sfDir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-        col("o_orderstatus"))
-    val dir = graft.sources.OrcIo.scratchDir("acid_major_q")
-    inParallel(Seq(
-      () => graft.sources.OrcIo.write(orders, s"$dir/t/base_1"),
-      () => writeDelta(ordersAsEvents(
-        orders.filter(col("o_orderkey") % 10 === 0)
-          .withColumn("o_totalprice", col("o_totalprice") * 1.10),
-        OpUpdate, 2L), s"$dir/t/delta_2"),
-      () => writeDelta(ordersAsEvents(
-        orders.filter(col("o_orderkey") % 7 === 0),
-        OpDelete, 3L), s"$dir/t/delta_3")))
-    val newBase = majorCompact(spark, s"$dir/t", rowIdCol = "o_orderkey")
-    require(readAcidStats(spark, newBase).exists(_.inserts > 0),
-      s"major compaction must carry $AcidStatsKey")
-    readTable(spark, s"$dir/t", rowIdCol = "o_orderkey")
-      .orderBy(col("o_orderkey"))
   }
 
   /**
@@ -662,21 +652,9 @@ object Acid {
    * the state the table had at the snapshot.
    */
   def timeTravelQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val orders = Tables.load(spark, sfDir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-        col("o_orderstatus"))
-    val dir = graft.sources.OrcIo.scratchDir("acid_asof_q")
-    inParallel(Seq(
-      () => graft.sources.OrcIo.write(orders, s"$dir/t/base_1"),
-      () => writeDelta(ordersAsEvents(
-        orders.filter(col("o_orderkey") % 10 === 0)
-          .withColumn("o_totalprice", col("o_totalprice") * 1.10),
-        OpUpdate, 2L), s"$dir/t/delta_2"),
-      () => writeDelta(ordersAsEvents(
-        orders.filter(col("o_orderkey") % 7 === 0),
-        OpDelete, 3L), s"$dir/t/delta_3")))
-    readTableAsOf(spark, s"$dir/t", asOfTxn = 2L,
-      rowIdCol = "o_orderkey")
+    val t = writeFixture(fixtureOrders(spark, sfDir), "acid_asof_q",
+      MorDeltas)
+    readTableAsOf(spark, t, asOfTxn = 2L, rowIdCol = "o_orderkey")
       .orderBy(col("o_orderkey"))
   }
 
@@ -712,32 +690,19 @@ object Acid {
   def changesBetween(spark: SparkSession, tableDir: String,
       fromTxn: Long, toTxn: Long, rowIdCol: String = "id",
       buckets: Int = 4): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val winDirs = fs.listStatus(new org.apache.hadoop.fs.Path(tableDir))
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith("delta_"))
-      // metadata pruning: keep a delta only if its txn RANGE
-      // intersects (fromTxn, toTxn]
-      .filter { d =>
-        val ts = d.stripPrefix("delta_").split("_").map(_.toLong)
-        ts.last > fromTxn && ts.head <= toTxn
-      }
+    // metadata pruning: keep a delta only if its txn RANGE intersects
+    // (fromTxn, toTxn]
+    val winDirs = layout(spark, tableDir).deltas
+      .filter(d => d.high > fromTxn && d.low <= toTxn)
     require(winDirs.nonEmpty,
       s"no delta directories intersect ($fromTxn, $toTxn] under $tableDir")
-    val win = winDirs.map(d => spark.read.orc(s"$tableDir/$d"))
+    val win = winDirs.map(d => spark.read.orc(s"$tableDir/${d.name}"))
       .reduce(_.unionByName(_))
       .filter(col("currentTransaction") > fromTxn &&
         col("currentTransaction") <= toTxn)
-    // the full ACID key triple, as in [[resolve]] — which also keeps
-    // every event column referenced: ACID-schema ORC files remap
-    // column ids (checkAcidSchema), so a column-pruned scan of a
-    // delta AIOOBEs in the vectorized reader (see [[acidStatsOf]])
-    val w = Window.partitionBy(col("originalTransaction"), col("bucket"),
-        col("rowId"))
-      .orderBy(col("currentTransaction").desc)
-    val last = win.withColumn("_rk", row_number().over(w))
-      .filter(col("_rk") === 1)
+    // the window references every event column, so the delta scan is
+    // never column-pruned (see [[tally]])
+    val last = latestPerKey(win)
       .select(col("bucket"), col("rowId"), col("operation"),
         col("currentTransaction").as("change_txn"), col("row"))
     val before = readTableAsOf(spark, tableDir, fromTxn, rowIdCol, buckets)
@@ -760,20 +725,6 @@ object Acid {
   }
 
   /**
-   * Correctness-gate query for [[changesBetween]]: the deterministic
-   * [[morQuery]] layout plus an insert population —
-   *   base_1:  every order at txn 1;
-   *   delta_2: %10 keys updated (price × 1.10) AND %13 keys
-   *            re-inserted as NEW rows at key + 10^12 with
-   *            price + 1000 (the offset keeps synthesized keys
-   *            disjoint from every ScaleUp id domain);
-   *   delta_3: %7 keys deleted.
-   * CDC over (1, 3] must classify each touched key once: deletes win
-   * over earlier updates (%70 keys), inserts have no old row, and the
-   * old/new prices witness the actual payloads. The oracle replays
-   * the classification as CASE logic over `orders`.
-   */
-  /**
    * Roll a MOR table back to snapshot `txn` — the recovery path after
    * a bad write lands: the `txn` state ([[readTableAsOf]], future
    * deltas pruned at the metadata level) is rewritten as a fresh
@@ -787,48 +738,15 @@ object Acid {
    */
   def restoreTo(spark: SparkSession, tableDir: String, txn: Long,
       rowIdCol: String = "id", buckets: Int = 4): String = {
-    val fs = new org.apache.hadoop.fs.Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(tableDir))
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(d => d.startsWith("base_") || d.startsWith("delta_"))
-    val restored = readTableAsOf(spark, tableDir, txn, rowIdCol, buckets)
-    // crash-safe swap, ordered so every intermediate state is readable
-    // and at-or-between the two snapshots:
-    //   1. stage the restored state under a name [[readTable]] ignores
-    //      (crash → table untouched, stray _tmp_ dir inert);
-    //   2. erase only the FULLY-future (low txn > txn) deltas and a
-    //      colliding base_txn — crash mid-way reads as a partial
-    //      rollback, re-runnable. A STRADDLING minor-compacted range
-    //      (delta_A_B with A ≤ txn < B) must survive until after the
-    //      rename: its (A, txn] events are part of the snapshot, and
-    //      deleting it pre-rename would lose them forever if the
-    //      rename never happens;
-    //   3. rename the staged base into place (readTable's numeric max
-    //      now picks it; straddling deltas' folded prefix ≤ txn is
-    //      shadowed by readTable's currentTransaction > baseTxn
-    //      filter, and a re-run of restoreTo(txn) after a crash here
-    //      reconstructs the identical snapshot);
-    //   4. drop the subsumed past (old bases, remaining deltas) last —
-    //      they are invisible behind the new base already.
-    val tmp = s"$tableDir/_tmp_base_$txn"
-    graft.sources.OrcIo.write(
-      restored.repartition(sizedFileCount(fs, tableDir, dirs)), tmp)
-    writeStatsSidecar(tmp,
-      AcidStats(spark.read.orc(tmp).count(), 0L, 0L))
-    val newBase = s"base_$txn"
-    dirs.filter(d => d == newBase || (d.startsWith("delta_") &&
-        d.stripPrefix("delta_").split("_").head.toLong > txn))
-      .foreach(d =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$tableDir/$d"), true))
-    val dst = new org.apache.hadoop.fs.Path(s"$tableDir/$newBase")
-    // rename failure returns false (no throw); deleting history below
-    // without a readable base_txn in place would corrupt the table
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmp), dst),
-      s"rename $tmp -> $dst failed; aborting restore before deletes")
-    dirs.filter(_ != newBase).foreach(d =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$tableDir/$d"), true))
-    dst.toString
+    val l = layout(spark, tableDir)
+    // only FULLY-future deltas (low txn > txn) go before the rename (a
+    // crash mid-way reads as a partial rollback, re-runnable). A
+    // STRADDLING range (delta_A_B with A ≤ txn < B) holds (A, txn]
+    // events of the snapshot and must survive until after the rename;
+    // a re-run after a crash there reconstructs the identical snapshot
+    swapInBase(spark, l, txn,
+      readTableAsOf(spark, tableDir, txn, rowIdCol, buckets),
+      early = l.deltas.filter(_.low > txn).map(_.name))
   }
 
   /** The deterministic CDC fixture layout (base_1 + delta_2 updates
@@ -837,10 +755,8 @@ object Acid {
     * table directory. */
   private[graft] def cdcFixture(spark: SparkSession, sfDir: String)
       : String = {
-    val orders = Tables.load(spark, sfDir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-        col("o_orderstatus"))
-    val dir = graft.sources.OrcIo.scratchDir("acid_cdc_q")
+    val orders = fixtureOrders(spark, sfDir)
+    val dir = OrcIo.scratchDir("acid_cdc_q")
     val updates = ordersAsEvents(
       orders.filter(col("o_orderkey") % 10 === 0)
         .withColumn("o_totalprice", col("o_totalprice") * 1.10),
@@ -854,7 +770,7 @@ object Acid {
       OpInsert, 2L)
     // the three fixture directories are independent — overlap them
     inParallel(Seq(
-      () => graft.sources.OrcIo.write(orders, s"$dir/t/base_1"),
+      () => OrcIo.write(orders, s"$dir/t/base_1"),
       () => writeDelta(updates.unionByName(inserts), s"$dir/t/delta_2"),
       () => writeDelta(ordersAsEvents(
         orders.filter(col("o_orderkey") % 7 === 0),
@@ -878,6 +794,20 @@ object Acid {
       .orderBy(col("o_orderkey"))
   }
 
+  /**
+   * Correctness-gate query for [[changesBetween]]: the deterministic
+   * [[morQuery]] layout plus an insert population —
+   *   base_1:  every order at txn 1;
+   *   delta_2: %10 keys updated (price × 1.10) AND %13 keys
+   *            re-inserted as NEW rows at key + 10^12 with
+   *            price + 1000 (the offset keeps synthesized keys
+   *            disjoint from every ScaleUp id domain);
+   *   delta_3: %7 keys deleted.
+   * CDC over (1, 3] must classify each touched key once: deletes win
+   * over earlier updates (%70 keys), inserts have no old row, and the
+   * old/new prices witness the actual payloads. The oracle replays
+   * the classification as CASE logic over `orders`.
+   */
   def cdcQuery(spark: SparkSession, sfDir: String): DataFrame = {
     changesBetween(spark, cdcFixture(spark, sfDir), fromTxn = 1L,
       toTxn = 3L, rowIdCol = "o_orderkey")
@@ -910,67 +840,21 @@ object Acid {
    * ledger entirely — a fresh base — and is always safe.)
    *
    * Cost shape: the base contributes a count-only scan (ORC answers
-   * it from stripe footers); each delta contributes a 3-counter
-   * map-side partial over its `operation` column. (The reader reads
-   * delta files full-width — the ACID-schema column-pruning quirk —
-   * but nothing beyond `operation`/`currentTransaction` is
-   * aggregated and nothing resolves.) The gate ALSO runs the full
-   * resolve-path count and hashes the equality — the invariant the
-   * fast path rests on.
+   * it from stripe footers); each delta contributes one full-row
+   * [[tally]] — cost stays delta-bound, not base-bound, and nothing
+   * resolves. The gate ALSO runs the full resolve-path count and
+   * hashes the equality — the invariant the fast path rests on.
    */
   def fastCount(spark: SparkSession, tableDir: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(tableDir))
-      .filter(_.isDirectory).map(_.getPath.getName)
-    val base = dirs.filter(_.startsWith("base_"))
-      .maxBy(_.stripPrefix("base_").toLong)
-    val baseTxn = base.stripPrefix("base_").toLong
-    val deltas = dirs.filter(_.startsWith("delta_"))
-      .filter(_.stripPrefix("delta_").split("_").last.toLong > baseTxn)
+    val l = layout(spark, tableDir)
+    val (base, baseTxn) = l.newestBase
     val baseCnt = spark.read.orc(s"$tableDir/$base")
       .agg(count(lit(1)).as("n_base"))
-    val tallies =
-      if (deltas.isEmpty)
-        spark.range(1).select(lit(0L).as("n_ins"),
-          lit(0L).as("n_upd"), lit(0L).as("n_del"))
-      else {
-        // full-width .rdd tallies, one delta dir at a time. NEGATIVE
-        // RESULT (r13, VERDICT r12 #6 experiment, graft.tools
-        // .AcidReadProbe): NO vectorized formulation reads these
-        // files — not schema-forced full width, not count(struct(*))
-        // pinned against ColumnPruning, not even a fully-pruned
-        // count(). The AIOOBE index tracks the REQUESTED width
-        // (0/0, 1/1, 2/2), proving Spark's OrcColumnarBatchReader
-        // detects the Hive-ACID pattern in the FILE schema
-        // (OrcUtils checkAcidSchema) and remaps requested top-level
-        // ids into the inner `row` struct's children regardless of
-        // what was asked; the ACID metadata columns this tally needs
-        // (operation, currentTransaction) are exactly what the remap
-        // hides, so the row-oriented reader is the only path to
-        // them. Cost stays delta-bound, not base-bound.
-        val (ins, upd, del) = inParallel(deltas.toSeq.map { d => () =>
-          val df = spark.read.orc(s"$tableDir/$d")
-          val opIdx = df.schema.fieldIndex("operation")
-          val ctIdx = df.schema.fieldIndex("currentTransaction")
-          df.rdd
-            .filter(_.getLong(ctIdx) > baseTxn)
-            .map { r =>
-              r.getInt(opIdx) match {
-                case OpInsert => (1L, 0L, 0L)
-                case OpUpdate => (0L, 1L, 0L)
-                case _ => (0L, 0L, 1L)
-              }
-            }
-            .fold((0L, 0L, 0L)) { (a, b) =>
-              (a._1 + b._1, a._2 + b._2, a._3 + b._3)
-            }
-        }).fold((0L, 0L, 0L)) { (a, b) =>
-          (a._1 + b._1, a._2 + b._2, a._3 + b._3)
-        }
-        spark.range(1).select(lit(ins).as("n_ins"),
-          lit(upd).as("n_upd"), lit(del).as("n_del"))
-      }
+    val s = inParallel(l.visible.map(d => () =>
+        tally(spark.read.orc(s"$tableDir/${d.name}"), baseTxn)))
+      .foldLeft(AcidStats(0L, 0L, 0L))(_ + _)
+    val tallies = spark.range(1).select(lit(s.inserts).as("n_ins"),
+      lit(s.updates).as("n_upd"), lit(s.deletes).as("n_del"))
     baseCnt.crossJoin(broadcast(tallies))
       .withColumn("meta_count",
         col("n_base") + col("n_ins") - col("n_del"))
@@ -982,30 +866,12 @@ object Acid {
     * the resolve-path count, and the oracle replays both from the
     * modular rules. */
   def fastCountQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val orders = Tables.load(spark, sfDir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-        col("o_orderstatus"))
-    val dir = graft.sources.OrcIo.scratchDir("acid_fastcount_q")
-    inParallel(Seq(
-      () => graft.sources.OrcIo.write(orders, s"$dir/t/base_1"),
-      () => writeDelta(ordersAsEvents(
-        orders.filter(col("o_orderkey") % 10 === 0)
-          .withColumn("o_totalprice", col("o_totalprice") * 1.10),
-        OpUpdate, 2L), s"$dir/t/delta_2"),
-      () => writeDelta(ordersAsEvents(
-        orders.filter(col("o_orderkey") % 7 === 0),
-        OpDelete, 3L), s"$dir/t/delta_3"),
-      () => writeDelta(ordersAsEvents(
-        orders.filter(col("o_orderkey") % 19 === 0)
-          .withColumn("o_orderkey", col("o_orderkey") + 2000000000000L),
-        OpInsert, 4L), s"$dir/t/delta_4")))
+    val t = writeFixture(fixtureOrders(spark, sfDir), "acid_fastcount_q",
+      LedgerDeltas)
     // .rdd.count(), NOT .agg(count): a count() over the resolve plan
-    // prunes the delta read schema (even `row` drops out) and the
-    // pruned ACID-schema scan AIOOBEs in the vectorized reader — the
-    // same quirk the tally path above works around
-    val scanCount = readTable(spark, s"$dir/t",
-      rowIdCol = "o_orderkey").rdd.count()
-    fastCount(spark, s"$dir/t")
+    // prunes the delta read schema (see [[tally]])
+    val scanCount = readTable(spark, t, rowIdCol = "o_orderkey").rdd.count()
+    fastCount(spark, t)
       .select(col("n_base"), col("n_ins"), col("n_upd"), col("n_del"),
         col("meta_count"), lit(scanCount).as("scan_count"),
         (col("meta_count") === lit(scanCount)).as("consistent"))
@@ -1024,19 +890,18 @@ object Acid {
    *
    * Mechanics: the base is plain ORC — a vectorized filtered rewrite
    * through a temp dir + atomic-ish swap. Deltas are ACID-schema ORC,
-   * which the vectorized reader cannot read at all (see [[fastCount]]
-   * / AcidReadProbe) — each rewrites through the row reader
-   * (`.rdd.filter` + createDataFrame on the original schema), and its
-   * ACID-stats sidecar is recomputed. Cost ∝ table + history size —
-   * inherent to physical erasure — parallel per file split like any
-   * scan; the subject key set broadcasts (erasure requests are small).
+   * which the vectorized reader cannot read at all (see [[tally]]) —
+   * each rewrites through the row reader (`.rdd.filter` +
+   * createDataFrame on the original schema), and its ACID-stats
+   * sidecar is recomputed. Cost ∝ table + history size — inherent to
+   * physical erasure — parallel per file split like any scan; the
+   * subject key set broadcasts (erasure requests are small).
    */
   def purgeKeys(spark: SparkSession, tableDir: String,
       keys: Set[Long], rowIdCol: String): Unit = {
     import spark.implicits._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(tableDir)
-    val fs = root.getFileSystem(conf)
+    val root = new Path(tableDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // Crash self-heal (ADVICE r13): a crash inside swapIn's two-rename
     // window leaves the live base_/delta_ dir ABSENT, with the only
     // complete copy at dot-prefixed .purged_old_<d> — which readTable
@@ -1048,10 +913,9 @@ object Acid {
     // dir is idempotent, so the heal is always safe.
     fs.listStatus(root).filter(_.isDirectory).map(_.getPath.getName)
       .foreach { n =>
-        val p = new org.apache.hadoop.fs.Path(root, n)
+        val p = new Path(root, n)
         if (n.startsWith(".purged_old_")) {
-          val live = new org.apache.hadoop.fs.Path(
-            root, n.stripPrefix(".purged_old_"))
+          val live = new Path(root, n.stripPrefix(".purged_old_"))
           if (!fs.exists(live))
             require(fs.rename(p, live),
               s"purge crash-heal restore failed for $n")
@@ -1060,8 +924,7 @@ object Acid {
           fs.delete(p, true)
         }
       }
-    val dirs = fs.listStatus(root).filter(_.isDirectory)
-      .map(_.getPath.getName)
+    val l = layout(spark, tableDir)
     val bcast = spark.sparkContext.broadcast(keys)
     // the subject keys as a BROADCAST dimension for the base anti-join
     // (ADVICE r13): isInCollection(keys) embeds the whole set in the
@@ -1074,43 +937,36 @@ object Acid {
     // the whole base/delta — data loss far beyond the erasure
     // request — if the rename failed or the process died between the
     // two calls)
-    def swapIn(tmp: String, dst: String): Unit = {
-      val tmpP = new org.apache.hadoop.fs.Path(tmp)
-      val dstP = new org.apache.hadoop.fs.Path(dst)
-      // dot-prefixed so a crash leftover never matches readTable's
-      // base_/delta_ directory listing (base_1.purged_old would)
-      val oldP = new org.apache.hadoop.fs.Path(
-        dstP.getParent, s".purged_old_${dstP.getName}")
-      fs.delete(oldP, true) // clear any debris from a prior crash
-      require(fs.rename(dstP, oldP), s"purge aside-rename failed for $dst")
-      require(fs.rename(tmpP, dstP), s"purge swap failed for $dst")
-      fs.delete(oldP, true)
+    def swapIn(d: String): Unit = {
+      val dst = new Path(root, d)
+      // dot-prefixed so a crash leftover is never part of the layout
+      val old = new Path(root, s".purged_old_$d")
+      fs.delete(old, true) // clear any debris from a prior crash
+      require(fs.rename(dst, old), s"purge aside-rename failed for $dst")
+      require(fs.rename(new Path(root, s".purge_tmp_$d"), dst),
+        s"purge swap failed for $dst")
+      fs.delete(old, true)
     }
     // each directory's rewrite touches only its own files and swap
     // names — independent jobs, overlapped (the sequential loop was
     // half driver-side gaps: per-dir planning + sidecars + renames)
-    inParallel(dirs.toSeq.map { d => () =>
-      val path = s"$tableDir/$d"
-      val tmp = s"$tableDir/.purge_tmp_$d"
-      if (d.startsWith("base_")) {
-        val kept = spark.read.orc(path)
-          .join(keysDf, Seq(rowIdCol), "left_anti")
-        graft.sources.OrcIo.write(kept, tmp)
-        swapIn(tmp, path)
-      } else if (d.startsWith("delta_")) {
-        val df = spark.read.orc(path)
-        val schema = df.schema
-        val idIdx = schema.fieldIndex("rowId")
-        val keptRdd = df.rdd
-          .filter(r => !bcast.value.contains(r.getLong(idIdx)))
-        // the RDD-backed frame reads the ORIGINAL files lazily while
-        // writing to the temp dir — no read-while-overwrite hazard;
-        // writeDelta recomputes the ACID-stats sidecar from the
-        // surviving events (no ORC vectorized path involved)
-        val kept = spark.createDataFrame(keptRdd, schema)
-        writeDelta(kept, tmp)
-        swapIn(tmp, path)
-      }
+    inParallel(l.bases.map { case (b, _) => () =>
+      OrcIo.write(spark.read.orc(s"$tableDir/$b")
+        .join(keysDf, Seq(rowIdCol), "left_anti"),
+        s"$tableDir/.purge_tmp_$b")
+      swapIn(b)
+    } ++ l.deltas.map { d => () =>
+      val df = spark.read.orc(s"$tableDir/${d.name}")
+      val idIdx = df.schema.fieldIndex("rowId")
+      // the RDD-backed frame reads the ORIGINAL files lazily while
+      // writing to the temp dir — no read-while-overwrite hazard;
+      // writeDelta recomputes the ACID-stats sidecar from the
+      // surviving events (no ORC vectorized path involved)
+      writeDelta(spark.createDataFrame(
+          df.rdd.filter(r => !bcast.value.contains(r.getLong(idIdx))),
+          df.schema),
+        s"$tableDir/.purge_tmp_${d.name}")
+      swapIn(d.name)
     })
     ()
   }
@@ -1129,24 +985,9 @@ object Acid {
     // independent and this is the costliest fixture gate (4 dirs
     // written + all rewritten + 3 as-of row-reader scans) — the sf1
     // re-gate still exercises scale
-    val orders = Tables.load(spark, sfDir, "orders")
+    val orders = fixtureOrders(spark, sfDir)
       .filter(col("o_orderkey") % 3 === 0)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-        col("o_orderstatus"))
-    val dir = graft.sources.OrcIo.scratchDir("acid_purge_q")
-    inParallel(Seq(
-      () => graft.sources.OrcIo.write(orders, s"$dir/t/base_1"),
-      () => writeDelta(ordersAsEvents(
-        orders.filter(col("o_orderkey") % 10 === 0)
-          .withColumn("o_totalprice", col("o_totalprice") * 1.10),
-        OpUpdate, 2L), s"$dir/t/delta_2"),
-      () => writeDelta(ordersAsEvents(
-        orders.filter(col("o_orderkey") % 7 === 0),
-        OpDelete, 3L), s"$dir/t/delta_3"),
-      () => writeDelta(ordersAsEvents(
-        orders.filter(col("o_orderkey") % 19 === 0)
-          .withColumn("o_orderkey", col("o_orderkey") + 2000000000000L),
-        OpInsert, 4L), s"$dir/t/delta_4")))
+    val t = writeFixture(orders, "acid_purge_q", LedgerDeltas)
     val subjects = orders
       .select(col("o_orderkey"))
       .unionByName(orders.filter(col("o_orderkey") % 19 === 0)
@@ -1154,11 +995,10 @@ object Acid {
           .as("o_orderkey")))
       .filter(col("o_orderkey") % 23 === 0)
       .collect().map(_.getLong(0)).toSet
-    purgeKeys(spark, s"$dir/t", subjects, rowIdCol = "o_orderkey")
+    purgeKeys(spark, t, subjects, rowIdCol = "o_orderkey")
     // the three as-of snapshot scans are independent — overlapped
     val out = inParallel(Seq(2L, 3L, 4L).map { asOf => () =>
-      val counts = readTableAsOf(spark, s"$dir/t", asOf,
-          rowIdCol = "o_orderkey")
+      val counts = readTableAsOf(spark, t, asOf, rowIdCol = "o_orderkey")
         .rdd.map { r =>
           val k = r.getLong(0)
           (1L, if (k % 23 == 0) 1L else 0L,

@@ -3,8 +3,11 @@ package graft.operators
 import graft.Tables
 import graft.functions.VectorOps.{foldRound => fr}
 import graft.sources.{OrcIo, OrcMeta}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.orc.TypeDescription
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Statistics engine (SURVEY.md §2.6, M2): COUNT/MIN/MAX/SUM answered
@@ -15,8 +18,8 @@ import org.apache.spark.sql.functions._
  * Scale: a stats-only aggregate over 100 TB touches only footers
  * (O(#files) metadata IOs, distributed via [[OrcMeta.columnStats]])
  * instead of the data itself — the same reason the reference keeps
- * three stat granularities. The merge across files is a tiny
- * DataFrame agg over #files×#columns rows.
+ * three stat granularities. The merge across files is local, over the
+ * #files×#columns footer rows collected once.
  */
 object Stats {
 
@@ -33,25 +36,50 @@ object Stats {
    * dataset pays a scan.
    */
   def statsOnlyColumnStats(spark: SparkSession, orcPath: String): DataFrame = {
-    val per = OrcMeta.columnStats(spark, orcPath)
-    val untrustedFiles = per.filter(!col("statsTrusted"))
-      .select(col("file")).distinct()
-      .collect().map(_.getString(0))    // driver-side: file LIST only
-    val trusted = per.filter(col("statsTrusted"))
-    val merged =
-      if (untrustedFiles.isEmpty) trusted
-      else trusted.unionByName(
-        scannedColumnStats(spark, untrustedFiles.toIndexedSeq))
-    merged.filter(col("columnId") > 0)
-      .groupBy(col("column"))
-      .agg(
-        sum(col("count")).as("n_values"),
-        max(col("hasNull").cast("int")).cast("boolean").as("has_null"),
-        min(col("min")).as("min_str"),
-        max(col("max")).as("max_str"),
-        sum(col("sum").cast("double")).as("sum_val"),
-        min(col("statsTrusted").cast("int")).cast("boolean")
-          .as("all_from_footer"))
+    import spark.implicits._
+    val footer = OrcMeta.typedColumnStats(spark, orcPath)
+    val untrusted = footer.collect { case (s, _) if !s.statsTrusted => s.file }
+      .distinct
+    val perFile = footer.collect { case (s, _) if s.statsTrusted => s } ++
+      (if (untrusted.isEmpty) Nil
+       else scannedColumnStats(spark, untrusted.toIndexedSeq)
+         .as[OrcMeta.ColStats].collect().toSeq)
+    val kind = footer.map { case (s, k) => s.column -> k }.toMap
+    val rows = perFile.filter(_.columnId > 0).groupBy(_.column).toSeq
+      .sortBy(_._2.map(_.columnId).min).map { case (c, fs) =>
+        // min/max merge by the column's type: per-file renderings of a
+        // numeric column compared as strings put "77090" above "149999"
+        val ord = typedOrdering(kind(c))
+        val sums = fs.flatMap(s => Option(s.sum)).map(_.toDouble)
+        Row(c, fs.map(_.count).sum, fs.exists(_.hasNull),
+          fs.flatMap(s => Option(s.min)).minOption(ord).orNull,
+          fs.flatMap(s => Option(s.max)).maxOption(ord).orNull,
+          if (sums.isEmpty) null else sums.sum,
+          fs.forall(_.statsTrusted))
+      }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("column", StringType), StructField("n_values", LongType),
+      StructField("has_null", BooleanType),
+      StructField("min_str", StringType), StructField("max_str", StringType),
+      StructField("sum_val", DoubleType),
+      StructField("all_from_footer", BooleanType))))
+  }
+
+  /** Order of a column's min/max renderings ([[OrcMeta.columnStats]]
+    * and [[scannedColumnStats]] render alike) by its ORC type. */
+  private def typedOrdering(k: TypeDescription.Category): Ordering[String] = {
+    import TypeDescription.Category._
+    k match {
+      case BYTE | SHORT | INT | LONG | DATE => Ordering.by(_.toLong)
+      case FLOAT | DOUBLE => Ordering.by(_.toDouble)
+      case DECIMAL => Ordering.by(BigDecimal(_))
+      case TIMESTAMP | TIMESTAMP_INSTANT => Ordering.by { v =>
+        val t = java.sql.Timestamp.valueOf(v)
+        (t.getTime, t.getNanos)
+      }
+      // UTF-8 byte order, as ORC writes string statistics
+      case _ => Ordering.by(UTF8String.fromString)
+    }
   }
 
   /**
@@ -64,10 +92,11 @@ object Stats {
    */
   private def scannedColumnStats(spark: SparkSession,
       files: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.types._
     val df = spark.read.orc(files: _*)
     val aggs = df.schema.fields.zipWithIndex.flatMap { case (f, i) =>
       val c = col(s"`${f.name}`")
+      // dates as epoch days, the footer rendering
+      val v = if (f.dataType == DateType) unix_date(c) else c
       val isPrim = f.dataType match {
         case _: StructType | _: ArrayType | _: MapType | BinaryType => false
         case _ => true
@@ -76,8 +105,8 @@ object Stats {
         count(c).as(s"_cnt_$i"),
         max(c.isNull.cast("int")).cast("boolean").as(s"_nul_$i")) ++
         (if (isPrim) Seq(
-          min(c).cast("string").as(s"_min_$i"),
-          max(c).cast("string").as(s"_max_$i"),
+          min(v).cast("string").as(s"_min_$i"),
+          max(v).cast("string").as(s"_max_$i"),
           (f.dataType match {
             // try_sum: null on long overflow — the same "sum not
             // defined" contract as ORC footer stats (isSumDefined).
@@ -196,21 +225,6 @@ object Stats {
     OrcMeta.fileMeta(spark, orcPath).agg(sum($"rawDataSize")).as[Long].head()
   }
 
-  /**
-   * Equi-width histogram of a numeric column — the profiling operator
-   * behind optimizer NDV/selectivity guesses and data-quality drift
-   * views. Two scan-shaped passes: a one-row (min, max) aggregate
-   * broadcast back onto the scan, then one groupBy over ≤ `buckets`
-   * keys — the [[Sampling.domainMixQuery]] shape; no sort, no wide
-   * shuffle, scales to any corpus. The deliberate contrast is the
-   * equi-DEPTH twin: exact deciles need the full sort of
-   * `q_percentiles`, whose documented scale path is the GK sketch
-   * (`q_approx_percentiles`).
-   *
-   * Exactness: bucket = least(floor((x−min)/width), buckets−1) in
-   * DOUBLE with the identical expression tree in the oracle; money
-   * sums use the q1/q5 DECIMAL rule.
-   */
   /**
    * Exact second-moment statistics per group: mean / stddev /
    * covariance / Pearson correlation of (quantity, price) — the
@@ -332,6 +346,21 @@ object Stats {
   def corrMatrixQuery(spark: SparkSession, sfDir: String): DataFrame =
     corrMatrixWith(spark, sfDir, c => sum(c.cast("decimal(28,8)")))
 
+  /**
+   * Equi-width histogram of a numeric column — the profiling operator
+   * behind optimizer NDV/selectivity guesses and data-quality drift
+   * views. Two scan-shaped passes: a one-row (min, max) aggregate
+   * broadcast back onto the scan, then one groupBy over ≤ `buckets`
+   * keys — the [[Sampling.domainMixQuery]] shape; no sort, no wide
+   * shuffle, scales to any corpus. The deliberate contrast is the
+   * equi-DEPTH twin: exact deciles need the full sort of
+   * `q_percentiles`, whose documented scale path is the GK sketch
+   * (`q_approx_percentiles`).
+   *
+   * Exactness: bucket = least(floor((x−min)/width), buckets−1) in
+   * DOUBLE with the identical expression tree in the oracle; money
+   * sums use the q1/q5 DECIMAL rule.
+   */
   def histogramQuery(spark: SparkSession, sfDir: String,
       buckets: Int = 10): DataFrame = {
     val li = Tables.load(spark, sfDir, "lineitem")

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.orc.{ColumnStatistics, OrcFile, Reader}
+import org.apache.orc.{ColumnStatistics, OrcFile, Reader, TypeDescription}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
@@ -76,6 +76,19 @@ object OrcMeta {
     * (`ColumnStatisticsImpl`, SURVEY.md W5). */
   def columnStats(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
+    footerStats(spark, path).map(_._1).toDF()
+  }
+
+  /** [[columnStats]] collected, each row with its
+    * column's ORC type category — what a merge across files by type
+    * ([[graft.operators.Stats.statsOnlyColumnStats]]) needs. One
+    * footer pass, no shuffle. */
+  private[graft] def typedColumnStats(spark: SparkSession, path: String)
+      : Seq[(ColStats, TypeDescription.Category)] =
+    footerStats(spark, path).collect().toSeq
+
+  private def footerStats(spark: SparkSession, path: String)
+      : org.apache.spark.rdd.RDD[(ColStats, TypeDescription.Category)] = {
     val files = orcFiles(spark, path)
     spark.sparkContext.parallelize(files, math.max(1, files.size / 16))
       .flatMap { file =>
@@ -86,10 +99,11 @@ object OrcMeta {
           r.getStatistics.zipWithIndex.map { case (cs, id) =>
             val (min, max, sum) = renderStats(cs)
             ColStats(file, id, names.getOrElse(id, s"_col$id"),
-              cs.getNumberOfValues, cs.hasNull, min, max, sum, trusted)
+              cs.getNumberOfValues, cs.hasNull, min, max, sum, trusted) ->
+              schema.findSubtype(id).getCategory
           }.toSeq
         }
-      }.toDF()
+      }
   }
 
   case class StripeColStats(file: String, stripe: Int, columnId: Int,
@@ -149,7 +163,10 @@ object OrcMeta {
           try {
             import scala.jdk.CollectionConverters._
             r.getStripes.asScala.zipWithIndex.flatMap { case (_, si) =>
-              val idx = rows.readRowIndex(si, include, null)
+              // the third argument selects the columns whose bloom
+              // filters are read alongside the index; null fails on any
+              // file that carries bloom filters
+              val idx = rows.readRowIndex(si, include, include)
               idx.getRowGroupIndex.zipWithIndex
                 .filter { case (ri, ci) => ri != null && include
                   .lift(ci).getOrElse(false) }

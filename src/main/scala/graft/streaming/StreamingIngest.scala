@@ -884,15 +884,11 @@ object StreamingIngest {
    * any table-sized rescan.
    */
   def streamDeltas(spark: SparkSession, tableDir: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val first = fs.listStatus(new org.apache.hadoop.fs.Path(tableDir))
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith("delta_")).sorted.headOption
-      .getOrElse(throw new IllegalArgumentException(
+    val first = graft.operators.Acid.layout(spark, tableDir).deltas
+      .headOption.getOrElse(throw new IllegalArgumentException(
         s"no delta_* directory under $tableDir to derive the event " +
           "schema from"))
-    val schema = spark.read.orc(s"$tableDir/$first").schema
+    val schema = spark.read.orc(s"$tableDir/${first.name}").schema
     val streamSession = spark.newSession()
     streamSession.conf.set("spark.sql.shuffle.partitions", "4")
     streamSession.readStream
@@ -908,7 +904,7 @@ object StreamingIngest {
     val tableDir = graft.operators.Acid.cdcFixture(spark, sfDir)
     // sink the FULL event frame: a projected stream would column-prune
     // the ORC delta scan, and ACID-schema files remap column ids under
-    // pruning (the checkAcidSchema AIOOBE — see Acid.acidStatsOf);
+    // pruning (the checkAcidSchema AIOOBE — see Acid.tally);
     // the gate projection happens on the parquet read-back instead
     val out = runToParquet(streamDeltas(spark, tableDir), "stream_deltas")
     spark.read.parquet(out)

@@ -136,21 +136,24 @@ class OrcIoSpec extends SparkSpec {
   }
 
   test("rowGroupIndex surfaces 10k-row-group min/max entries") {
-    val dir = OrcIo.scratchDir("rgidx")
-    OrcIo.write(Tables.load(spark, sfDir, "lineitem").coalesce(1),
-      s"$dir/li", indexStride = 1000)
-    val rg = graft.sources.OrcMeta.rowGroupIndex(spark, s"$dir/li",
-      Seq("l_orderkey"))
-    val entries = rg.filter(col("column") === "l_orderkey").collect()
-    assert(entries.length >= 6, // ~6k rows / 1k stride
-      s"expected >=6 row groups, got ${entries.length}")
-    // per-RG counts sum to the table; min/max are orderkey-ranged
-    assert(entries.map(_.getAs[Long]("count")).sum ==
-      Tables.load(spark, sfDir, "lineitem").count())
-    val globalMin = entries.map(_.getAs[String]("min").toLong).min
-    val actualMin = Tables.load(spark, sfDir, "lineitem")
-      .agg(min(col("l_orderkey"))).head().getLong(0)
-    assert(globalMin == actualMin, s"rg min $globalMin != $actualMin")
+    // with and without bloom filters beside the row index
+    for (bloom <- Seq(Nil, Seq("l_partkey"))) {
+      val dir = OrcIo.scratchDir("rgidx")
+      OrcIo.write(Tables.load(spark, sfDir, "lineitem").coalesce(1),
+        s"$dir/li", indexStride = 1000, bloomColumns = bloom)
+      val rg = graft.sources.OrcMeta.rowGroupIndex(spark, s"$dir/li",
+        Seq("l_orderkey"))
+      val entries = rg.filter(col("column") === "l_orderkey").collect()
+      assert(entries.length >= 6, // ~6k rows / 1k stride
+        s"expected >=6 row groups, got ${entries.length}")
+      // per-RG counts sum to the table; min/max are orderkey-ranged
+      assert(entries.map(_.getAs[Long]("count")).sum ==
+        Tables.load(spark, sfDir, "lineitem").count())
+      val globalMin = entries.map(_.getAs[String]("min").toLong).min
+      val actualMin = Tables.load(spark, sfDir, "lineitem")
+        .agg(min(col("l_orderkey"))).head().getLong(0)
+      assert(globalMin == actualMin, s"rg min $globalMin != $actualMin")
+    }
   }
 
   test("encoding selection (W2): dictionary for low-cardinality, " +

@@ -28,6 +28,18 @@ class StatsSpec extends SparkSpec {
     assert(footer.getAs[String]("max_str").toDouble == scan.getDouble(1))
     assert(math.abs(footer.getAs[Double]("sum_val") - scan.getDouble(2))
       < 1e-6 * math.abs(scan.getDouble(2)))
+    // a long column range-split over files: the per-file extremes
+    // differ in digit count, so only a numeric merge finds them
+    // (as strings, "5000" > "20000")
+    val ranged = OrcIo.scratchDir("stats_ranged")
+    OrcIo.write(spark.range(1, 20001).toDF("k")
+      .repartitionByRange(4, col("k")), s"$ranged/k")
+    val k = Stats.statsOnlyColumnStats(spark, s"$ranged/k")
+      .filter(col("column") === "k").head()
+    assert(k.getAs[String]("min_str") == "1")
+    assert(k.getAs[String]("max_str") == "20000")
+    assert(k.getAs[Long]("n_values") == 20000L)
+    assert(k.getAs[Double]("sum_val") == 20000.0 * 20001 / 2)
   }
 
   test("pre-HIVE-8732 writer: footers distrusted, answers come from scan") {
