@@ -183,16 +183,21 @@ object Acid {
       .fold(AcidStats(0L, 0L, 0L))(_ + _)
   }
 
+  private val AcidStatsFile = "_acid_stats.orc"
+
   private def writeStatsSidecar(outPath: String, stats: AcidStats): Unit =
-    graft.sources.OrcMeta.writeMetadataFile(
-      s"$outPath/_acid_stats.orc",
+    graft.sources.OrcMeta.writeMetadataFile(s"$outPath/$AcidStatsFile",
       Map(AcidStatsKey -> stats.serialize))
 
-  /** Read back the `hive.acid.stats` entry of a dataset directory. */
+  /** Read back the `hive.acid.stats` entry of a dataset directory from
+    * its carrier file; None when the directory has none. */
   def readAcidStats(spark: SparkSession, path: String): Option[AcidStats] = {
-    val rows = graft.sources.OrcMeta.userMetadata(spark, path)
+    val carrier = new Path(path, AcidStatsFile)
+    if (!carrier.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(carrier)) None
+    else graft.sources.OrcMeta.userMetadata(spark, carrier.toString)
       .filter(col("key") === AcidStatsKey).select(col("value")).collect()
-    rows.headOption.map(r => AcidStats.parse(r.getString(0)))
+      .headOption.map(r => AcidStats.parse(r.getString(0)))
   }
 
   /** Output file count for a compaction rewrite: track the INPUT byte

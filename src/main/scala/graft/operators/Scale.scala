@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.VectorOps.{foldRound => fr}
+import graft.sources.OrcMeta
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -896,13 +897,9 @@ object Scale {
       .collect()
       .groupBy(_.getLong(0))
       .view.mapValues(_.map(_.getString(1)).toSeq.sorted).toMap
-    def layout(f: String): (String, String) = {
-      val r = org.apache.orc.OrcFile.createReader(
-        new org.apache.hadoop.fs.Path(f),
-        org.apache.orc.OrcFile.readerOptions(conf))
-      try (r.getSchema.toString, r.getCompressionKind.name())
-      finally r.close()
-    }
+    def layout(f: String): (String, String) =
+      OrcMeta.withReader(f, conf)(r =>
+        (r.getSchema.toString, r.getCompressionKind.name()))
     // bins write to disjoint bin=N directories — independent,
     // overlapped (results keep bin order via the pre-sorted seq)
     Acid.inParallel(groups.toSeq.sortBy(_._1)
@@ -922,11 +919,8 @@ object Scale {
               spark.read.orc(files: _*).coalesce(1), binDir)
             "rewrite"
           }
-        val fs = new org.apache.hadoop.fs.Path(binDir).getFileSystem(conf)
-        val outFiles = fs.listStatus(new org.apache.hadoop.fs.Path(binDir))
-          .count(s => s.isFile && s.getPath.getName.endsWith(".orc")
-            && !s.getPath.getName.startsWith("_"))
-        (bin, mode, files.size.toLong, outFiles.toLong)
+        (bin, mode, files.size.toLong,
+          OrcMeta.dataFiles(spark, binDir).size.toLong)
       })
   }
 
@@ -963,13 +957,8 @@ object Scale {
         s"$dir/in/p$b",
         compression = if (b >= 8L) "zlib" else "snappy")
     })
-    val conf = spark.sparkContext.hadoopConfiguration
-    def partFile(b: Long): String = {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/in/p$b")
-      p.getFileSystem(conf).listStatus(p)
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".orc"))
-        .map(_.getPath.toString).head
-    }
+    def partFile(b: Long): String =
+      OrcMeta.dataFiles(spark, s"$dir/in/p$b").head
     val inv = (0L until 12L)
       .map(b => (b, partFile(b), 1000L + b)).toDF("pkey", "file", "psize")
     val plan = compactionPlan(inv, Seq(), "pkey", "psize",

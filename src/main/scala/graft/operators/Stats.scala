@@ -34,6 +34,13 @@ object Stats {
    * REPLACED by a real scan of just those files — trusted files still
    * answer metadata-only, and at 100 TB only the legacy tail of the
    * dataset pays a scan.
+   *
+   * The one merge across files: min/max by the column's ORC type over
+   * the files holding values; `sum_val` null when any such file's sum
+   * is undefined (integer overflow). Floating-point sums add as
+   * doubles, as the footer stores them; every other sum (integers,
+   * decimals, string lengths) adds exactly and casts to double once —
+   * a double add of per-file partials rounds once per file past 2^53.
    */
   def statsOnlyColumnStats(spark: SparkSession, orcPath: String): DataFrame = {
     import spark.implicits._
@@ -50,12 +57,19 @@ object Stats {
         // min/max merge by the column's type: per-file renderings of a
         // numeric column compared as strings put "77090" above "149999"
         val ord = typedOrdering(kind(c))
-        val sums = fs.flatMap(s => Option(s.sum)).map(_.toDouble)
+        val held = fs.filter(_.count > 0)
+        val sums = fs.flatMap(s => Option(s.sum))
+        import TypeDescription.Category.{DOUBLE, FLOAT}
+        val sum =
+          if (sums.isEmpty || held.exists(_.sum == null)) null
+          else kind(c) match {
+            case FLOAT | DOUBLE => sums.map(_.toDouble).sum
+            case _ => sums.map(BigDecimal(_)).sum.toDouble
+          }
         Row(c, fs.map(_.count).sum, fs.exists(_.hasNull),
-          fs.flatMap(s => Option(s.min)).minOption(ord).orNull,
-          fs.flatMap(s => Option(s.max)).maxOption(ord).orNull,
-          if (sums.isEmpty) null else sums.sum,
-          fs.forall(_.statsTrusted))
+          held.flatMap(s => Option(s.min)).minOption(ord).orNull,
+          held.flatMap(s => Option(s.max)).maxOption(ord).orNull,
+          sum, fs.forall(_.statsTrusted))
       }
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
       StructField("column", StringType), StructField("n_values", LongType),
@@ -133,55 +147,28 @@ object Stats {
 
   /**
    * Correctness-gate query: write 3 lineitem columns to ORC, answer
-   * MIN/MAX/SUM/COUNT from footers only, and emit one row per column.
-   * The oracle computes the same from a full scan of the parquet
-   * source — footer answers must be scan-exact.
-   *
-   * Note min/max of numeric columns are re-cast from the stat strings;
-   * string-typed min()/max() over numeric renderings would be wrong
-   * lexicographically, so the per-file numeric cast happens before the
-   * cross-file merge.
+   * MIN/MAX/SUM/COUNT from footers only ([[statsOnlyColumnStats]]),
+   * and emit one row per column. The oracle computes the same from a
+   * full scan of the parquet source — footer answers must be
+   * scan-exact. Fractional columns take the 2 dp floor-form; the
+   * integral sum is cast to double once, never round-tripped through
+   * ×100 (the floor-form at scale 2 loses ulps beyond 2^53·1e-2).
    */
-  // Magnitude note: for DOUBLE columns the ORC footer itself
-  // accumulates the per-file sum in double (DoubleColumnStatistics),
-  // so beyond ~1e11 per file the FOOTER value drifts from the exact
-  // scan sum by design — a property of the format (the reference
-  // behaves identically), not of this reader. The gate corpus stays
-  // well under that; integer-column footer sums are exact longs.
   def statsOnlyQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val src = Tables.load(spark, sfDir, "lineitem")
       .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
     val dir = OrcIo.scratchDir("orc_stats")
     // Multiple files: repartition(4) so the merge across footers is real.
     OrcIo.write(src.repartition(4), s"$dir/li", compression = "snappy")
-    val per = OrcMeta.columnStats(spark, s"$dir/li")
-      .filter(col("columnId") > 0)
-      .withColumn("min_d", col("min").cast("double"))
-      .withColumn("max_d", col("max").cast("double"))
-      // merge per-file sums in DECIMAL, not double: integer-column
-      // footer sums are exact longs, and a double ADD of per-file
-      // partials rounds once per file beyond 2^53 (diverged from the
-      // oracle's exact sum by 1 ulp at sf1) — decimal keeps the merge
-      // exact, the single final double cast matches CAST(sum AS DOUBLE)
-      .withColumn("sum_dec", col("sum").cast("decimal(38,6)"))
-      // integral ORC stats render sums without a decimal point; their
-      // merged total is an exact integer and must be cast to double
-      // ONCE, never round-tripped through ×100 (the floor-form at
-      // scale 2 loses ulps beyond 2^53·1e-2 — the l_orderkey sum hit
-      // 2.7e16 at sf1 and diverged from the oracle's exact cast by
-      // one ulp). Fractional stats keep the 2 dp floor-form.
-      .withColumn("is_frac", col("sum").contains(".").cast("int"))
-    per.groupBy(col("column").as("col_name"))
-      .agg(
-        sum(col("count")).as("n_values"),
-        fr(min(col("min_d")), 2).as("min_val"),
-        fr(max(col("max_d")), 2).as("max_val"),
-        max(col("is_frac")).as("_frac"),
-        sum(col("sum_dec")).cast("double").as("_sum_d"))
-      .select(col("col_name"), col("n_values"), col("min_val"),
-        col("max_val"),
-        when(col("_frac") === 1, fr(col("_sum_d"), 2))
-          .otherwise(col("_sum_d")).as("sum_val"))
+    val fractional = src.schema.fields.collect {
+      case StructField(n, FloatType | DoubleType | _: DecimalType, _, _) => n
+    }
+    statsOnlyColumnStats(spark, s"$dir/li")
+      .select(col("column").as("col_name"), col("n_values"),
+        fr(col("min_str").cast("double"), 2).as("min_val"),
+        fr(col("max_str").cast("double"), 2).as("max_val"),
+        when(col("column").isin(fractional.toIndexedSeq: _*),
+          fr(col("sum_val"), 2)).otherwise(col("sum_val")).as("sum_val"))
       .orderBy(col("col_name"))
   }
 

@@ -163,50 +163,44 @@ object OrcIo {
       : Long = {
     import scala.jdk.CollectionConverters._
     val conf = spark.sparkContext.hadoopConfiguration
-    val first = org.apache.orc.OrcFile.createReader(
-      new org.apache.hadoop.fs.Path(inFiles.head),
-      org.apache.orc.OrcFile.readerOptions(conf))
-    val schema = first.getSchema
-    val codec = first.getCompressionKind
-    val opts = org.apache.orc.OrcFile.writerOptions(conf)
-      .setSchema(schema)
-      .compress(codec)
-      .bufferSize(first.getCompressionSize)
-      .rowIndexStride(first.getRowIndexStride)
-      .overwrite(true)
-    first.close()
+    val opts = OrcMeta.withReader(inFiles.head, conf) { first =>
+      org.apache.orc.OrcFile.writerOptions(conf)
+        .setSchema(first.getSchema)
+        .compress(first.getCompressionKind)
+        .bufferSize(first.getCompressionSize)
+        .rowIndexStride(first.getRowIndexStride)
+        .overwrite(true)
+    }
+    val (schema, codec) = (opts.getSchema, opts.getCompress)
     val writer = org.apache.orc.OrcFile.createWriter(
       new org.apache.hadoop.fs.Path(outFile), opts)
     // user metadata merged across inputs, last writer wins per key
     val userMeta =
       scala.collection.mutable.LinkedHashMap[String, java.nio.ByteBuffer]()
-    var rows = 0L
-    inFiles.foreach { p =>
-      val path = new org.apache.hadoop.fs.Path(p)
-      val reader = org.apache.orc.OrcFile.createReader(path,
-        org.apache.orc.OrcFile.readerOptions(conf))
-      require(reader.getSchema.equals(schema),
-        s"concat schema mismatch at $p: ${reader.getSchema} vs $schema")
-      require(reader.getCompressionKind == codec,
-        s"concat compression mismatch at $p")
-      val stripeStats = reader.getStripeStatistics()
-      val fs = path.getFileSystem(conf)
-      val in = fs.open(path)
-      try {
-        reader.getStripes.asScala.zipWithIndex.foreach { case (si, i) =>
-          val len = si.getLength.toInt // index + data + stripe footer
-          val buf = new Array[Byte](len)
-          in.readFully(si.getOffset, buf, 0, len)
-          writer.appendStripe(buf, 0, len, si,
-            Array(stripeStats.get(i)))
+    val rows = inFiles.map { p =>
+      OrcMeta.withReader(p, conf) { reader =>
+        require(reader.getSchema.equals(schema),
+          s"concat schema mismatch at $p: ${reader.getSchema} vs $schema")
+        require(reader.getCompressionKind == codec,
+          s"concat compression mismatch at $p")
+        val stripeStats = reader.getStripeStatistics()
+        val path = new org.apache.hadoop.fs.Path(p)
+        val in = path.getFileSystem(conf).open(path)
+        try {
+          reader.getStripes.asScala.zipWithIndex.foreach { case (si, i) =>
+            val len = si.getLength.toInt // index + data + stripe footer
+            val buf = new Array[Byte](len)
+            in.readFully(si.getOffset, buf, 0, len)
+            writer.appendStripe(buf, 0, len, si,
+              Array(stripeStats.get(i)))
+          }
+        } finally in.close()
+        reader.getMetadataKeys.asScala.foreach { k =>
+          userMeta(k) = reader.getMetadataValue(k)
         }
-      } finally in.close()
-      reader.getMetadataKeys.asScala.foreach { k =>
-        userMeta(k) = reader.getMetadataValue(k)
+        reader.getNumberOfRows
       }
-      rows += reader.getNumberOfRows
-      reader.close()
-    }
+    }.sum
     userMeta.foreach { case (k, v) => writer.addUserMetadata(k, v) }
     writer.close()
     rows
@@ -216,42 +210,35 @@ object OrcIo {
     * an open/append-in-progress file (`OrcAcidUtils.java:27-60`). */
   val FlushLengthSuffix = "_flush_length"
 
-  /** Last complete long in the side file — the readable prefix length
-    * (`OrcAcidUtils.getLastFlushLength`). None if no side file. */
-  def lastFlushLength(spark: SparkSession, orcFile: String): Option[Long] = {
+  /** The complete longs in a file's side file, oldest first (empty if
+    * there is no side file). */
+  private def flushLengths(spark: SparkSession, orcFile: String)
+      : Seq[Long] = {
     val side = new org.apache.hadoop.fs.Path(orcFile + FlushLengthSuffix)
     val fs = side.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(side)) None
+    if (!fs.exists(side)) Nil
     else {
-      val n = fs.getFileStatus(side).getLen / 8
-      if (n == 0) None
-      else {
-        val in = fs.open(side)
-        try {
-          var last = 0L
-          (0L until n).foreach(_ => last = in.readLong())
-          Some(last)
-        } finally in.close()
-      }
+      val in = fs.open(side)
+      try Seq.fill((fs.getFileStatus(side).getLen / 8).toInt)(in.readLong())
+      finally in.close()
     }
   }
+
+  /** Last complete long in the side file — the readable prefix length
+    * (`OrcAcidUtils.getLastFlushLength`). None if no side file. */
+  def lastFlushLength(spark: SparkSession, orcFile: String): Option[Long] =
+    flushLengths(spark, orcFile).lastOption
 
   /** Append a flushed-length entry to a file's side file (the writer
     * side of W8's intermediate-footer contract). */
   def writeFlushLength(spark: SparkSession, orcFile: String,
       len: Long): Unit = {
+    val prior = flushLengths(spark, orcFile)
     val side = new org.apache.hadoop.fs.Path(orcFile + FlushLengthSuffix)
-    val fs = side.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // rewrite prior entries + the new one (local filesystems lack
     // append(); the file is a handful of longs)
-    val prior: Seq[Long] =
-      if (!fs.exists(side)) Nil
-      else {
-        val n = fs.getFileStatus(side).getLen / 8
-        val in = fs.open(side)
-        try (0L until n).map(_ => in.readLong()) finally in.close()
-      }
-    val out = fs.create(side, true)
+    val out = side.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(side, true)
     try (prior :+ len).foreach(out.writeLong) finally out.close()
   }
 
@@ -271,44 +258,21 @@ object OrcIo {
    */
   def readSalvage(spark: SparkSession, path: String)
       : (DataFrame, Seq[String]) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).filter(_.isFile).map(_.getPath)
-          .filterNot(f => f.getName.startsWith("_") ||
-            f.getName.startsWith(".") ||
-            f.getName.endsWith(FlushLengthSuffix))
-          .map(_.toString).toSeq
-      else Seq(path)
-    val (good, failed) = files.partition { f =>
-      try {
-        val r = org.apache.orc.OrcFile.createReader(
-          new org.apache.hadoop.fs.Path(f),
-          org.apache.orc.OrcFile.readerOptions(
-            spark.sparkContext.hadoopConfiguration))
-        r.close(); true
-      } catch { case _: Exception => false }
-    }
+    def opens(f: String, maxLength: Long = Long.MaxValue): Boolean =
+      try OrcMeta.withReader(f, spark.sparkContext.hadoopConfiguration,
+        maxLength)(_ => true)
+      catch { case _: Exception => false }
+    val (good, failed) = OrcMeta.dataFiles(spark, path).partition(opens(_))
     // side-file recovery: readable prefix via reader maxLength
-    val (recoverable, bad) = failed.partition { f =>
-      lastFlushLength(spark, f).exists { len =>
-        try {
-          val r = org.apache.orc.OrcFile.createReader(
-            new org.apache.hadoop.fs.Path(f),
-            org.apache.orc.OrcFile.readerOptions(
-              spark.sparkContext.hadoopConfiguration).maxLength(len))
-          r.close(); true
-        } catch { case _: Exception => false }
-      }
-    }
+    val lens = failed.flatMap(f => lastFlushLength(spark, f).map(f -> _))
+      .toMap
+    val (recoverable, bad) =
+      failed.partition(f => lens.get(f).exists(opens(f, _)))
     val goodDf =
       if (good.nonEmpty) Some(spark.read.orc(good: _*)) else None
     val recoveredDf =
       if (recoverable.isEmpty) None
       else {
-        val lens = recoverable.map(f =>
-          f -> lastFlushLength(spark, f).get).toMap
         val schema = UnionOrc.schemaOf(recoverable.head,
           lens(recoverable.head))
         val rdd = spark.sparkContext

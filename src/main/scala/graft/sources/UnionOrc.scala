@@ -117,15 +117,14 @@ object UnionOrc {
   /** Schema of an ORC file (unions encoded as tagged structs). A
     * non-struct root type — legal in ORC, unreadable by stock Spark —
     * becomes a single column named `value`. */
-  def schemaOf(path: String, maxLength: Long = Long.MaxValue): StructType = {
-    val reader = OrcFile.createReader(new Path(path),
-      OrcFile.readerOptions(new Configuration()).maxLength(maxLength))
-    try toSparkType(reader.getSchema) match {
-      case st: StructType if reader.getSchema.getCategory ==
-        Category.STRUCT => st
-      case other => StructType(Seq(StructField("value", other)))
-    } finally reader.close()
-  }
+  def schemaOf(path: String, maxLength: Long = Long.MaxValue): StructType =
+    OrcMeta.withReader(path, maxLength = maxLength) { reader =>
+      toSparkType(reader.getSchema) match {
+        case st: StructType if reader.getSchema.getCategory ==
+          Category.STRUCT => st
+        case other => StructType(Seq(StructField("value", other)))
+      }
+    }
 
   /**
    * Full-fidelity row iterator over one file, usable on driver or

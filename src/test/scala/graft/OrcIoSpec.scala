@@ -244,6 +244,34 @@ class OrcIoSpec extends SparkSpec {
     assert(bad2.exists(_.endsWith("lost.orc")))
   }
 
+  test("every footer surface lists exactly the files spark.read.orc " +
+      "scans") {
+    val t = s"${OrcIo.scratchDir("listing")}/t"
+    OrcIo.write(Tables.load(spark, sfDir, "nation").repartition(2), t)
+    OrcMeta.writeMetadataFile(s"$t/_acid_stats.orc", Map("k" -> "v"))
+    val names = new java.io.File(t).list().toSet
+    assert(Seq("_SUCCESS", "_acid_stats.orc").forall(names.contains))
+    assert(names.exists(n => n.startsWith(".") && n.endsWith(".crc")))
+    // as local paths: Spark renders `file:///…`, Hadoop's Path `file:/…`
+    def local(f: String) = new org.apache.hadoop.fs.Path(f).toUri.getPath
+    val scanned = spark.read.orc(t).inputFiles.map(local).toSet
+    assert(scanned.size == 2, scanned)
+    Seq(
+      "stripes" -> OrcMeta.stripes(spark, t),
+      "columnStats" -> OrcMeta.columnStats(spark, t),
+      "stripeStats" -> OrcMeta.stripeStats(spark, t),
+      "rowGroupIndex" -> OrcMeta.rowGroupIndex(spark, t),
+      "stripeEncodings" -> OrcMeta.stripeEncodings(spark, t),
+      "fileMeta" -> OrcMeta.fileMeta(spark, t),
+      "userMetadata" -> OrcMeta.userMetadata(spark, t),
+      "memoryEstimate" -> OrcMeta.memoryEstimate(spark, t)
+    ).foreach { case (surface, df) =>
+      val files = df.select(col("file")).as[String].collect().map(local)
+        .toSet
+      assert(files == scanned, surface)
+    }
+  }
+
   test("user metadata: write sidecar, read keys back (appendUserMetadata)") {
     val dir = OrcIo.scratchDir("user_meta")
     OrcMeta.writeMetadataFile(s"$dir/_meta.orc",

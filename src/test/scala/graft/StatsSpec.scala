@@ -1,10 +1,15 @@
 package graft
 
 import graft.operators.Stats
-import graft.sources.OrcIo
+import graft.sources.{OrcIo, OrcMeta}
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.hive.ql.exec.vector.{BytesColumnVector,
+  LongColumnVector}
+import org.apache.orc.{OrcFile, TypeDescription}
 import org.apache.spark.sql.functions._
 
 class StatsSpec extends SparkSpec {
+  import SparkSpec.spark.implicits._
 
   private lazy val dir: String = {
     val d = OrcIo.scratchDir("stats_spec")
@@ -16,6 +21,14 @@ class StatsSpec extends SparkSpec {
   test("statsOnlyCount answers COUNT(*) from footers, scan-exact") {
     val expected = Tables.load(spark, sfDir, "orders").count()
     assert(Stats.statsOnlyCount(spark, s"$dir/orders") == expected)
+  }
+
+  test("statsOnlyCount reads a hive-partitioned table like a scan") {
+    val d = OrcIo.scratchDir("stats_partitioned")
+    OrcIo.write(spark.range(1000).withColumn("p", col("id") % 3),
+      s"$d/t", partitionBy = Seq("p"))
+    assert(Stats.statsOnlyCount(spark, s"$d/t") ==
+      spark.read.orc(s"$d/t").count())
   }
 
   test("footer min/max/sum merge across files matches a full scan") {
@@ -40,6 +53,25 @@ class StatsSpec extends SparkSpec {
     assert(k.getAs[String]("max_str") == "20000")
     assert(k.getAs[Long]("n_values") == 20000L)
     assert(k.getAs[Double]("sum_val") == 20000.0 * 20001 / 2)
+    // per-file sums: one undefined sum (long overflow) leaves the merged
+    // sum undefined, and exact partials past 2^53 add without rounding
+    // once per file; an empty file's min/max sentinels take no part
+    def merged[T: org.apache.spark.sql.Encoder](files: Seq[T]*) = {
+      val d = OrcIo.scratchDir("stats_sums")
+      files.foreach(vs =>
+        OrcIo.write(vs.toDF("v").coalesce(1), s"$d/v", mode = "append"))
+      Stats.statsOnlyColumnStats(spark, s"$d/v").head()
+    }
+    val overflow = merged(Seq(Long.MaxValue, 1L), Seq(5L, 7L))
+    assert(overflow.isNullAt(overflow.fieldIndex("sum_val")))
+    assert(overflow.getAs[String]("min_str") == "1")
+    assert(overflow.getAs[String]("max_str") == Long.MaxValue.toString)
+    val big = merged(Seq.fill(3)(Seq(1L << 53, 1L)): _*)
+    assert(big.getAs[Double]("sum_val") == 27021597764222979.0)
+    assert(big.getAs[Double]("sum_val") == 2.702159776422298E16)
+    val negative = merged(Seq(-3.5, -1.25), Seq.empty[Double])
+    assert(negative.getAs[String]("min_str") == "-3.5")
+    assert(negative.getAs[String]("max_str") == "-1.25")
   }
 
   test("pre-HIVE-8732 writer: footers distrusted, answers come from scan") {
@@ -57,6 +89,55 @@ class StatsSpec extends SparkSpec {
     assert(!r.getAs[Boolean]("all_from_footer"),
       "untrusted file must not be answered from footers")
     val scan = spark.read.orc(old)
+      .agg(count(col("int1")), min(col("int1")), max(col("int1")),
+        sum(col("int1"))).head()
+    assert(r.getAs[Long]("n_values") == scan.getLong(0))
+    assert(r.getAs[String]("min_str").toLong == scan.getInt(1).toLong)
+    assert(r.getAs[String]("max_str").toLong == scan.getInt(2).toLong)
+    assert(r.getAs[Double]("sum_val") == scan.getLong(3).toDouble)
+  }
+
+  test("pre-HIVE-8732 writer, generated fixture: footers distrusted, " +
+      "merged with a trusted file's footers") {
+    // the same check as above on a file this test writes: an
+    // ORIGINAL-version file (orc-core keeps writerVersion protected,
+    // hence the subclass) beside a current-version file in one directory
+    val d = OrcIo.scratchDir("stats_original")
+    def writeOrc(name: String, writer: OrcFile.WriterVersion,
+        ints: Seq[Int]): Unit = {
+      val opts = new OrcFile.WriterOptions(new java.util.Properties(),
+          new org.apache.hadoop.conf.Configuration()) {
+        writerVersion(writer)
+      }.setSchema(TypeDescription.fromString(
+        "struct<int1:int,string1:string>"))
+      val w = OrcFile.createWriter(new Path(s"$d/$name"), opts)
+      val batch = opts.getSchema.createRowBatch(ints.size)
+      ints.zipWithIndex.foreach { case (v, i) =>
+        batch.cols(0).asInstanceOf[LongColumnVector].vector(i) = v
+        batch.cols(1).asInstanceOf[BytesColumnVector]
+          .setVal(i, s"s$v".getBytes("UTF-8"))
+      }
+      batch.size = ints.size
+      w.addRowBatch(batch)
+      w.close()
+    }
+    writeOrc("original.orc", OrcFile.WriterVersion.ORIGINAL,
+      (0 until 500).map(i => i * 37 % 1000 - 300))
+    writeOrc("current.orc", OrcFile.CURRENT_WRITER,
+      (0 until 300).map(i => i * 11 + 900))
+    val meta = OrcMeta.fileMeta(spark, d)
+      .select(col("file"), col("writerVersion")).as[(String, String)]
+      .collect().map { case (f, v) => new Path(f).getName -> v }.toMap
+    assert(meta("original.orc") == "ORIGINAL")
+    assert(meta("current.orc") != "ORIGINAL")
+    assert(OrcMeta.columnStats(spark, d).filter(col("statsTrusted"))
+      .select(col("file")).as[String].collect()
+      .forall(_.endsWith("current.orc")))
+    val r = Stats.statsOnlyColumnStats(spark, d)
+      .filter(col("column") === "int1").head()
+    assert(!r.getAs[Boolean]("all_from_footer"),
+      "untrusted file must not be answered from footers")
+    val scan = spark.read.orc(d)
       .agg(count(col("int1")), min(col("int1")), max(col("int1")),
         sum(col("int1"))).head()
     assert(r.getAs[Long]("n_values") == scan.getLong(0))
