@@ -59,11 +59,10 @@ object Tables {
     all.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 
   /**
-   * Cache key for per-corpus standing stores (PQ bases, brute-force
-   * reference sets, BPE merge snapshots, …): the sfDir path PLUS a
+   * Corpus half of a [[StoreCatalog]] key: the sfDir path PLUS a
    * fingerprint of every data file under it (name, length, mtime).
    * A corpus regenerated at the same path within one JVM then MISSES
-   * the cache instead of serving stale reference artifacts — the
+   * its stores instead of serving stale artifacts — the
    * failure mode of keying on the path alone. Listing ~10 tables'
    * files is microseconds against store-build cost; at 100 TB the
    * analogous key is the catalog's table snapshot/version id.

@@ -1047,30 +1047,23 @@ object Dedup {
     labels
   }
 
-  /** Cluster-index cache: like [[Similarity.buildIndex]], the dup
-    * cluster labelling is an offline artifact built once per corpus (a
-    * production pipeline persists it next to the data); the two
-    * cluster-level queries share it instead of re-running the pair
-    * graph + propagation. Persisted as scratch parquet and cached by
-    * PATH (like the media feature store): restart-safe and no
-    * executor storage pinned for the JVM lifetime, unlike holding the
-    * localCheckpoint-backed frame itself. */
-  private val clusterCache =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   /** (id, label) for every document — connected components over the
-    * [[ngramJaccard]] ≥ 0.5 pair graph, cached per corpus. */
+    * [[ngramJaccard]] ≥ 0.5 pair graph. Like [[Similarity.buildIndex]],
+    * the labelling is an offline artifact, a store built once per
+    * corpus; the two cluster-level queries share it instead of
+    * re-running the pair graph + propagation. It is served from
+    * parquet (like the media feature store), so no executor storage
+    * stays pinned for the JVM lifetime, unlike holding the
+    * localCheckpoint-backed frame itself. */
   def clusterLabels(spark: SparkSession, sfDir: String): DataFrame = {
-    val path = clusterCache.getOrElseUpdate(Tables.corpusKey(sfDir), {
+    val store = graft.StoreCatalog.pathStore("dup_clusters@v1", sfDir) { d =>
       val docs = Tables.load(spark, sfDir, "documents")
       val pairs = ngramJaccard(docs, maxShingleDf = 1000)
         .select(col("doc_a").as("a"), col("doc_b").as("b"))
-      val out = graft.sources.OrcIo.scratchDir("dup_clusters")
       connectedComponents(pairs, docs.select(col("doc_id").as("id")))
-        .write.mode("overwrite").parquet(s"$out/labels")
-      s"$out/labels"
-    })
-    spark.read.parquet(path)
+        .write.mode("overwrite").parquet(s"$d/labels")
+    }
+    spark.read.parquet(s"$store/labels")
   }
 
   /**

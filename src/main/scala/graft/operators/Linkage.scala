@@ -144,21 +144,16 @@ object Linkage {
     crm.unionByName(web).unionByName(app)
   }
 
-  private val entityLabelStore =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   /** Standing match-label store per corpus: the blocking + verify +
     * connected-components fit runs ONCE offline and its (id, label)
     * output is served from parquet — the gate then measures entity
     * assignment serving, not the iteration-bound graph fit (the
     * [[Similarity]] PQ-base doctrine applied to linkage). */
   def buildEntityLabels(spark: SparkSession, sfDir: String): String =
-    entityLabelStore.getOrElseUpdate(Tables.corpusKey(sfDir), {
-      val d = graft.sources.OrcIo.scratchDir("entity_labels")
+    graft.StoreCatalog.pathStore("entity_labels@v1", sfDir) { d =>
       matchLabels(entityRecords(spark, sfDir))
         .write.mode("overwrite").parquet(s"$d/labels")
-      s"$d/labels"
-    })
+    } + "/labels"
 
   /**
    * Jaro–Winkler string similarity — the record-linkage scorer that

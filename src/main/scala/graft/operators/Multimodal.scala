@@ -339,16 +339,11 @@ object Multimodal {
     * [[buildImageStore]]): encoding is fixture creation, not the
     * measured operator; built once, shared by the decode and energy
     * queries. */
-  private val audioStore =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   def buildAudioStore(spark: SparkSession, sfDir: String): String =
-    audioStore.getOrElseUpdate(Tables.corpusKey(sfDir), {
-      val store = graft.sources.OrcIo.scratchDir("media_audio")
+    graft.StoreCatalog.pathStore("media_audio@v1", sfDir) { d =>
       syntheticAudio(spark, sfDir)
-        .write.mode("overwrite").parquet(s"$store/audio")
-      s"$store/audio"
-    })
+        .write.mode("overwrite").parquet(s"$d/audio")
+    } + "/audio"
 
   /** Correctness-gate query for the REAL audio header decode: encode
     * WAVE files with id-derived rate/frame-count, decode them back via
@@ -680,20 +675,15 @@ object Multimodal {
 
   /** Materialized AVI corpus per sf dir (the video twin of
     * [[buildImageStore]] / [[buildAudioStore]]). */
-  private val videoStore =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   def buildVideoStore(spark: SparkSession, sfDir: String): String =
-    videoStore.getOrElseUpdate(Tables.corpusKey(sfDir), {
-      val store = graft.sources.OrcIo.scratchDir("media_video")
+    graft.StoreCatalog.pathStore("media_video@v1", sfDir) { d =>
       import spark.implicits._
       Scale.fanOut(Tables.load(spark, sfDir, "documents")
           .select(col("doc_id"))).as[Long]
         .mapPartitions(_.map(id => MediaRecord(id, "video", encodeAvi(id))))
         .toDF()
-        .write.mode("overwrite").parquet(s"$store/video")
-      s"$store/video"
-    })
+        .write.mode("overwrite").parquet(s"$d/video")
+    } + "/video"
 
   /** Correctness-gate query for the REAL video container parse: mux
     * AVIs with id-derived dims/frame-count, walk the RIFF tree back to
@@ -817,16 +807,11 @@ object Multimodal {
     * the image lake a real pipeline READS (encoding it is fixture
     * creation, not the measured operator); built once, shared by the
     * decode and resize queries, same pattern as [[buildFeatureStore]]. */
-  private val imageStore =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   def buildImageStore(spark: SparkSession, sfDir: String): String =
-    imageStore.getOrElseUpdate(Tables.corpusKey(sfDir), {
-      val store = graft.sources.OrcIo.scratchDir("media_images")
+    graft.StoreCatalog.pathStore("media_images@v1", sfDir) { d =>
       syntheticImages(spark, sfDir)
-        .write.mode("overwrite").parquet(s"$store/images")
-      s"$store/images"
-    })
+        .write.mode("overwrite").parquet(s"$d/images")
+    } + "/images"
 
   /** Correctness-gate query for the full raster chain: encode PNGs
     * (id-derived dims) → resize to fit 8 px → re-encode → DECODE THE
@@ -1009,23 +994,14 @@ object Multimodal {
   // measured completeness at sf1 for ~2.25x the candidate pairs —
   // still a vanishing fraction of the exhaustive quadratic.
   private val ivfProbe = 3
-  /** Feature-store cache: decode+embed is the offline half of the
-    * pipeline (like the IVF fit) — built once per corpus, reused by
-    * every serving query against it. */
-  private val featureStore =
-    scala.collection.concurrent.TrieMap[String, String]()
-
-  /** Test hook (WarmStoreSpec): forget the JVM-local registration
-    * sitting in front of the store catalog. */
-  private[graft] def dropJvmStores(): Unit = featureStore.clear()
 
   /** Build (or reuse) the materialized feature store for a corpus;
     * returns the path of its per-media `feats` dataset (the join-key
-    * dataset lands as a `keys` sibling — [[writeBlockKeys]]). */
+    * dataset lands as a `keys` sibling — [[writeBlockKeys]]).
+    * Decode+embed is the offline half of the pipeline (like the IVF
+    * fit): built once per corpus, reused by every serving query. */
   def buildFeatureStore(spark: SparkSession, sfDir: String): String =
-    featureStore.getOrElseUpdate(Tables.corpusKey(sfDir), {
-      val store = graft.StoreCatalog.pathStore("media_feats@v2",
-          Tables.corpusKey(sfDir)) { dir =>
+    graft.StoreCatalog.pathStore("media_feats@v2", sfDir) { dir =>
       // materialize the decode+embed pass ONCE before the k-means fit —
       // each fit iteration runs several jobs, and without this the
       // typed decode map re-executes in every one of them
@@ -1036,14 +1012,12 @@ object Multimodal {
       val cents = Similarity.fitCentroidMatrix(
         feats.select(col("media_id").as("vec_id"), col("embedding")),
         k = k)
-        feats
-          .withColumn("cells",
-            Similarity.nearestCellsCol(cents, col("embedding"), ivfProbe))
-          .write.mode("overwrite").parquet(s"$dir/feats")
-        writeBlockKeys(spark, s"$dir/feats", s"$dir/keys", nMedia, k)
-      }
-      s"$store/feats"
-    })
+      feats
+        .withColumn("cells",
+          Similarity.nearestCellsCol(cents, col("embedding"), ivfProbe))
+        .write.mode("overwrite").parquet(s"$dir/feats")
+      writeBlockKeys(spark, s"$dir/feats", s"$dir/keys", nMedia, k)
+    } + "/feats"
 
   /** Refined key for a re-blocked (cell, sub) pair: disjoint from the
     * plain [0, k) key space for any k < 2²⁴ (k = n/1024 crosses that
@@ -1447,16 +1421,11 @@ object Multimodal {
 
   /** Materialized mixed real-codec corpus per sf dir (fixture
     * creation, outside any measured operator). */
-  private val mediaStore =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   def buildMediaStore(spark: SparkSession, sfDir: String): String =
-    mediaStore.getOrElseUpdate(Tables.corpusKey(sfDir), {
-      val store = graft.sources.OrcIo.scratchDir("media_mixed")
+    graft.StoreCatalog.pathStore("media_mixed@v1", sfDir) { d =>
       syntheticMediaReal(spark, sfDir)
-        .write.mode("overwrite").parquet(s"$store/media")
-      s"$store/media"
-    })
+        .write.mode("overwrite").parquet(s"$d/media")
+    } + "/media"
 
   /** Full pipeline demo over the mixed REAL corpus: every payload
     * decodes through its genuine parser (PNG / WAVE / AVI dispatch in

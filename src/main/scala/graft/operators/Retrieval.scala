@@ -582,8 +582,7 @@ object Retrieval {
     * and persisted across JVMs via the store catalog (v2 layout =
     * block-max metadata). */
   def buildInvIndex(spark: SparkSession, sfDir: String): String =
-    graft.StoreCatalog.pathStore("inv_index@v2",
-      Tables.corpusKey(sfDir)) { d =>
+    graft.StoreCatalog.pathStore("inv_index@v2", sfDir) { d =>
       writeIndexSegment(Tables.load(spark, sfDir, "documents"), d,
         "overwrite")
     }
@@ -593,8 +592,7 @@ object Retrieval {
     * corpus-wide append convention) appended as a second segment —
     * no rebuild touches base postings. */
   def buildInvIndexAppended(spark: SparkSession, sfDir: String): String =
-    graft.StoreCatalog.pathStore("inv_index_app@v2",
-      Tables.corpusKey(sfDir)) { d =>
+    graft.StoreCatalog.pathStore("inv_index_app@v2", sfDir) { d =>
       val docs = Tables.load(spark, sfDir, "documents")
       val isNew = pmod(col("doc_id"), lit(4L)) === 3L
       writeIndexSegment(docs.filter(!isNew), d, "overwrite")

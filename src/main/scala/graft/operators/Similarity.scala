@@ -53,18 +53,13 @@ object Similarity {
     * a fresh brute-force run over that subset. The discipline a fleet
     * applies to ANY ground-truth set: compute it once, serve every
     * evaluation from the artifact. */
-  private val bruteRefStore =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   private def bruteRef80(spark: SparkSession, sfDir: String): DataFrame = {
-    val path = bruteRefStore.getOrElseUpdate(Tables.corpusKey(sfDir), {
-      val store = graft.sources.OrcIo.scratchDir("brute_ref")
+    val store = graft.StoreCatalog.pathStore("brute_ref@v1", sfDir) { d =>
       val emb = Tables.load(spark, sfDir, "embeddings")
       bruteForceTopK(emb.filter(col("vec_id") < 80), emb, 10)
-        .write.mode("overwrite").parquet(s"$store/ref")
-      s"$store/ref"
-    })
-    spark.read.parquet(path)
+        .write.mode("overwrite").parquet(s"$d/ref")
+    }
+    spark.read.parquet(s"$store/ref")
   }
 
   /** Correctness-gate query: top-10 for the first 5 vectors as queries
@@ -311,11 +306,10 @@ object Similarity {
     centsLit(m)
 
   /** Offline index build: fit the coarse quantizer for a corpus and
-    * cache it. Idempotent; returns the centroid matrix. */
+    * store it. Idempotent; returns the centroid matrix. */
   def buildIndex(spark: SparkSession, sfDir: String, k: Int = 20,
       iters: Int = 2): Array[Array[Float]] =
-    graft.StoreCatalog.modelStore("ivf_cents@v1",
-      Tables.corpusKey(sfDir)) {
+    graft.StoreCatalog.modelStore("ivf_cents@v1", sfDir) {
       fitCentroidMatrix(Tables.load(spark, sfDir, "embeddings"), k, iters)
     }
 
@@ -439,8 +433,7 @@ object Similarity {
   /** Offline PQ index build per corpus (idempotent, like
     * [[buildIndex]]). */
   def buildPqIndex(spark: SparkSession, sfDir: String): PqModel =
-    graft.StoreCatalog.modelStore("pq_model@v1",
-      Tables.corpusKey(sfDir))(
+    graft.StoreCatalog.modelStore("pq_model@v1", sfDir)(
       fitPq(Tables.load(spark, sfDir, "embeddings")))
 
   /** Encode column: the vector's `m` sub-space codes (L2-nearest
@@ -456,19 +449,14 @@ object Similarity {
     * half of the index build (one narrow pass over the fp32 corpus);
     * serving reads ONLY this table — at 100 TB the codes are ~3 TB and
     * live in memory while the fp32 vectors stay cold. */
-  private val pqStore =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   def buildPqStore(spark: SparkSession, sfDir: String): String =
-    pqStore.getOrElseUpdate(Tables.corpusKey(sfDir), {
+    graft.StoreCatalog.pathStore("pq_codes@v1", sfDir) { d =>
       val model = buildPqIndex(spark, sfDir)
-      val store = graft.sources.OrcIo.scratchDir("pq_codes")
       Tables.load(spark, sfDir, "embeddings")
         .select(col("vec_id").as("neighbor_id"),
           pqCodes(model, col("embedding")).as("codes"))
-        .write.mode("overwrite").parquet(s"$store/codes")
-      s"$store/codes"
-    })
+        .write.mode("overwrite").parquet(s"$d/codes")
+    } + "/codes"
 
   /**
    * PQ ANN top-k by asymmetric distance computation (ADC): the corpus
@@ -557,33 +545,32 @@ object Similarity {
     * static partition pruning (the unprobed ~`(1 − nprobe/k)` of the
     * store is never read), on top of the 32× fp32→code compression.
     * Returns (store path, residual PQ model). */
-  private val ivfPqStore =
-    scala.collection.concurrent.TrieMap[String, (String, PqModel)]()
-
   def buildIvfPqStore(spark: SparkSession, sfDir: String)
-      : (String, PqModel) =
-    ivfPqStore.getOrElseUpdate(Tables.corpusKey(sfDir), {
-      val cents = buildIndex(spark, sfDir)
-      val cLit = centsLit(cents)
-      // residuals feed both the codebook fit (8 sub-space k-means) and
-      // the encode pass — materialize once
-      val assigned = Tables.load(spark, sfDir, "embeddings")
-        .select(col("vec_id"), col("embedding"),
-          cellOf(cents, col("embedding")).as("cell"))
-        .withColumn("residual",
-          zip_with(col("embedding"), element_at(cLit, col("cell") + 1),
-            (a, b) => a - b).cast("array<float>"))
-        .localCheckpoint()
-      val resModel = fitPq(
-        assigned.select(col("vec_id"), col("residual").as("embedding")))
-      val store = graft.sources.OrcIo.scratchDir("ivfpq_codes")
-      assigned
-        .select(col("vec_id").as("neighbor_id"), col("cell"),
-          pqCodes(resModel, col("residual")).as("codes"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$store/codes")
-      (s"$store/codes", resModel)
-    })
+      : (String, PqModel) = {
+    val (resModel, store) =
+      graft.StoreCatalog.modelPathStore("ivfpq_codes@v1", sfDir) { d =>
+        val cents = buildIndex(spark, sfDir)
+        val cLit = centsLit(cents)
+        // residuals feed both the codebook fit (8 sub-space k-means) and
+        // the encode pass — materialize once
+        val assigned = Tables.load(spark, sfDir, "embeddings")
+          .select(col("vec_id"), col("embedding"),
+            cellOf(cents, col("embedding")).as("cell"))
+          .withColumn("residual",
+            zip_with(col("embedding"), element_at(cLit, col("cell") + 1),
+              (a, b) => a - b).cast("array<float>"))
+          .localCheckpoint()
+        val resModel = fitPq(
+          assigned.select(col("vec_id"), col("residual").as("embedding")))
+        assigned
+          .select(col("vec_id").as("neighbor_id"), col("cell"),
+            pqCodes(resModel, col("residual")).as("codes"))
+          .write.mode("overwrite").partitionBy("cell")
+          .parquet(s"$d/codes")
+        resModel
+      }
+    (s"$store/codes", resModel)
+  }
 
   /**
    * IVFADC serving — the composition a trillion-vector store actually
@@ -1136,7 +1123,7 @@ object Similarity {
     // kept in the store catalog like the IVF centroids, so warm
     // passes serve the assignment without re-running the Lloyd fit
     val matrix = graft.StoreCatalog.modelStore(
-      s"semantic_quant_k${k}_i$iters@v1", graft.Tables.corpusKey(sfDir))(
+      s"semantic_quant_k${k}_i$iters@v1", sfDir)(
       kmeansCentroids(emb, k, iters, l2 = true)
         .orderBy(col("cent_id")).select(col("cent_emb")).collect()
         .map(_.getSeq[Float](0).toArray))
@@ -1494,8 +1481,8 @@ object Similarity {
     val baseForFit = emb.filter(pmod(col("vec_id"), lit(4L)) =!= 0L)
       .select((col("vec_id") - 1L - expr("vec_id div 4")).as("vec_id"),
         col("embedding"))
-    graft.StoreCatalog.modelStore("ann_append_base@v1",
-      graft.Tables.corpusKey(sfDir))(fitCentroidMatrix(baseForFit, 20))
+    graft.StoreCatalog.modelStore("ann_append_base@v1", sfDir)(
+      fitCentroidMatrix(baseForFit, 20))
   }
 
   /** Fixture-phase builder for [[annAppendQuery]]'s standing base
@@ -1577,18 +1564,10 @@ object Similarity {
     * index must not be re-fitted and the base must not be re-encoded
     * inside the measured query (it was both, ~3.5 s of the gate's
     * 5 s at sf0.1). */
-  private val pqAppendBaseStore =
-    scala.collection.concurrent.TrieMap[String, (PqModel, String)]()
-
-  /** Test hook (WarmStoreSpec): forget the JVM-local registration
-    * sitting in front of the store catalog. */
-  private[graft] def dropJvmStores(): Unit = pqAppendBaseStore.clear()
-
   private def buildPqAppendBase(spark: SparkSession, sfDir: String)
-      : (PqModel, String) =
-    pqAppendBaseStore.getOrElseUpdate(Tables.corpusKey(sfDir), {
-      val store = graft.StoreCatalog.pathStore("pq_append_base@v1",
-        Tables.corpusKey(sfDir)) { dir =>
+      : (PqModel, String) = {
+    val (model, store) =
+      graft.StoreCatalog.modelPathStore("pq_append_base@v1", sfDir) { dir =>
         val emb = Tables.load(spark, sfDir, "embeddings")
         val base = emb.filter(pmod(col("vec_id"), lit(4L)) =!= 0L)
         // renumber to contiguous ids so stride seeding picks the same
@@ -1600,11 +1579,10 @@ object Similarity {
         base.select(col("vec_id"),
             pqCodes(model, col("embedding")).as("codes"))
           .write.mode("overwrite").parquet(s"$dir/codes")
-        graft.StoreCatalog.writeModel(s"$dir/model.bin", model)
+        model
       }
-      (graft.StoreCatalog.readModel[PqModel](s"$store/model.bin"),
-        s"$store/codes")
-    })
+    (model, s"$store/codes")
+  }
 
   def pqAppendQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.load(spark, sfDir, "embeddings")

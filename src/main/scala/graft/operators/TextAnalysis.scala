@@ -467,8 +467,7 @@ object TextAnalysis {
     * rarely and applied to every ingest batch, so the gate should
     * measure SCORING, not the refit. */
   def buildLangId2Model(spark: SparkSession, sfDir: String): String =
-    graft.StoreCatalog.pathStore("langid2@v1",
-      Tables.corpusKey(sfDir)) { d =>
+    graft.StoreCatalog.pathStore("langid2@v1", sfDir) { d =>
       val (model, prior) =
         langId2Fit(Tables.load(spark, sfDir, "documents"))
       model.write.mode("overwrite").parquet(s"$d/model")
@@ -837,28 +836,25 @@ object TextAnalysis {
       .limit(k)
   }
 
-  /** Fitted-vocabulary cache, keyed by corpus path (the BPE-merges
-    * pattern: the vocab is offline model material, fitted once per
-    * corpus and folded into the serving projection as a literal). */
-  private val vocabCache =
-    scala.collection.concurrent.TrieMap[(String, Int), Seq[String]]()
-
   /** Fit a frequency vocabulary: top-`size` tokens by corpus count,
     * ties to the lexicographically smaller token. The aggregation is
     * one (token, count) map-side-partial shuffle; the global top-V
     * rides TakeOrderedAndProject (per-partition heaps, no full sort),
     * so the fit scales to any corpus while only V strings ever reach
     * the driver. */
-  def fitVocab(docs: DataFrame, textCol: String, size: Int): Seq[String] =
+  def fitVocab(docs: DataFrame, textCol: String, size: Int): Vector[String] =
     docs.select(explode(split(col(textCol), " ")).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("tok"))
       .limit(size).select(col("tok"))
-      .collect().map(_.getString(0)).toSeq
+      .collect().map(_.getString(0)).toVector
 
-  /** Bench fixture hook: prefit the documents vocabulary. */
-  def buildVocab(spark: SparkSession, sfDir: String): Unit =
-    vocabCache.getOrElseUpdate((Tables.corpusKey(sfDir), 256),
+  /** The documents vocabulary (top 256) as a store — the BPE-merges
+    * pattern: the vocab is offline model material, fitted once per
+    * corpus and folded into the serving projection as a literal. Also
+    * the Bench fixture hook. */
+  def buildVocab(spark: SparkSession, sfDir: String): Vector[String] =
+    graft.StoreCatalog.modelStore("vocab_256@v1", sfDir)(
       fitVocab(Tables.load(spark, sfDir, "documents"), "text", 256))
 
   /**
@@ -875,8 +871,7 @@ object TextAnalysis {
    */
   def oovRateQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.load(spark, sfDir, "documents")
-    val vocab = vocabCache.getOrElseUpdate((Tables.corpusKey(sfDir), 256),
-      fitVocab(docs, "text", 256))
+    val vocab = buildVocab(spark, sfDir)
     val nIn = element_at(
       call_function("graft_count_in_sets", col("text"),
         typedLit(Seq(vocab))), 1).cast("bigint")

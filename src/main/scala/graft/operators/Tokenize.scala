@@ -34,7 +34,7 @@ object Tokenize {
    * table. The text projection is cached for the duration of the fit
    * so the source is scanned once, not once per round.
    */
-  def fitBpe(docs: DataFrame, nMerges: Int): Seq[String] = {
+  def fitBpe(docs: DataFrame, nMerges: Int): Vector[String] = {
     val text = docs.select(col("text")).persist()
     try {
       var merges = Vector.empty[String]
@@ -57,17 +57,13 @@ object Tokenize {
     } finally text.unpersist()
   }
 
-  private val mergeCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), Seq[String]]
-
   /** Offline model build: fit (or reuse) the merge table for a corpus —
     * the [[Similarity.buildIndex]] pattern; the fit is the offline half
     * of the tokenizer's serving path. Idempotent per (corpus, budget). */
   def buildMerges(spark: SparkSession, sfDir: String,
       nMerges: Int = 24): Seq[String] =
-    mergeCache.getOrElseUpdate((Tables.corpusKey(sfDir), nMerges), {
-      fitBpe(Tables.load(spark, sfDir, "documents"), nMerges)
-    })
+    graft.StoreCatalog.modelStore(s"bpe_merges_$nMerges@v1", sfDir)(
+      fitBpe(Tables.load(spark, sfDir, "documents"), nMerges))
 
   /** BPE token stream of `text` under the given ordered merges. */
   def bpeTokens(text: org.apache.spark.sql.Column, merges: Seq[String])
@@ -164,18 +160,14 @@ object Tokenize {
       .orderBy(col("doc_id"))
   }
 
-  private val snapMergeCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), Seq[String]]
-
   /** Merge table fitted ONLY on the reference snapshot
     * (doc_id % 2 = 0) — the shipped tokenizer [[bpeDriftQuery]]
     * monitors. Idempotent per (corpus, budget). */
   def buildSnapshotMerges(spark: SparkSession, sfDir: String,
       nMerges: Int = 24): Seq[String] =
-    snapMergeCache.getOrElseUpdate((Tables.corpusKey(sfDir), nMerges), {
+    graft.StoreCatalog.modelStore(s"bpe_snap_merges_$nMerges@v1", sfDir)(
       fitBpe(Tables.load(spark, sfDir, "documents")
-        .filter(pmod(col("doc_id"), lit(2L)) === 0L), nMerges)
-    })
+        .filter(pmod(col("doc_id"), lit(2L)) === 0L), nMerges))
 
   /**
    * Tokenizer COMPRESSION-RATIO DRIFT monitor — the
@@ -364,16 +356,12 @@ object Tokenize {
     } finally words.unpersist()
   }
 
-  private val unigramCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), UnigramModel]
-
   /** Offline unigram model build — the [[buildMerges]] pattern:
     * idempotent per (corpus, budget). */
   def buildUnigram(spark: SparkSession, sfDir: String,
       vocabSize: Int = 96): UnigramModel =
-    unigramCache.getOrElseUpdate((Tables.corpusKey(sfDir), vocabSize), {
-      fitUnigram(Tables.load(spark, sfDir, "documents"), vocabSize)
-    })
+    graft.StoreCatalog.modelStore(s"unigram_$vocabSize@v1", sfDir)(
+      fitUnigram(Tables.load(spark, sfDir, "documents"), vocabSize))
 
   /** Unigram token stream of `text` under the fitted model. */
   def unigramTokens(text: org.apache.spark.sql.Column, m: UnigramModel)
@@ -488,16 +476,12 @@ object Tokenize {
     } finally text.unpersist()
   }
 
-  private val wordpieceCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), WordpieceModel]
-
   /** Offline WordPiece model build — the [[buildMerges]] pattern:
     * idempotent per (corpus, budget). */
   def buildWordpiece(spark: SparkSession, sfDir: String,
       nMerges: Int = 24): WordpieceModel =
-    wordpieceCache.getOrElseUpdate((Tables.corpusKey(sfDir), nMerges), {
-      fitWordpiece(Tables.load(spark, sfDir, "documents"), nMerges)
-    })
+    graft.StoreCatalog.modelStore(s"wordpiece_$nMerges@v1", sfDir)(
+      fitWordpiece(Tables.load(spark, sfDir, "documents"), nMerges))
 
   /** WordPiece token stream of `text`: greedy longest-match-first
     * against the fitted vocabulary (codegen'd kernel, model as

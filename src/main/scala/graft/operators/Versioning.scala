@@ -142,25 +142,19 @@ object Versioning {
         lpad(sum(col("dg")).cast("string"), 26, "0").as("digest_sum"))
       .orderBy(col("shard"))
 
-  /** Published-store cache (fixture: publishing is the offline half;
-    * the gate reads the manifest OF THE WRITTEN FILES, so the hash
-    * match proves what landed on disk, not what was about to be
-    * written). */
-  private val publishStore =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   /** Correctness gate: publish the documents table into 8 shards, read
     * the published files back, manifest them. The oracle recomputes
     * the same manifest from the source table — equality proves the
-    * publish round-trip lost and changed nothing. */
+    * publish round-trip lost and changed nothing. The published corpus
+    * is a store (publishing is the offline half; the gate reads the
+    * manifest OF THE WRITTEN FILES, so the hash match proves what
+    * landed on disk, not what was about to be written). */
   def publishManifestQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = publishStore.getOrElseUpdate(Tables.corpusKey(sfDir),
-      publishCorpus(
-        Tables.load(spark, sfDir, "documents")
-          .select(col("doc_id"), col("text")),
-        graft.sources.OrcIo.scratchDir("publish") + "/corpus",
-        nShards = 8))
-    manifest(spark.read.parquet(dir))
+    val dir = graft.StoreCatalog.pathStore("publish@v1", sfDir) { d =>
+      publishCorpus(Tables.load(spark, sfDir, "documents")
+        .select(col("doc_id"), col("text")), s"$d/corpus", nShards = 8)
+    }
+    manifest(spark.read.parquet(s"$dir/corpus"))
   }
 
   /** v2 of the documents corpus, derived deterministically from v1
@@ -178,19 +172,15 @@ object Versioning {
           concat(lit("new doc "), col("doc_id").cast("string")).as("text")))
   }
 
-  /** Cached curated-v1 store per corpus (the standing output of the
-    * previous refresh — the incremental query's starting point). */
-  private val curateStore =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   /**
    * Incremental corpus refresh: update a curated corpus to version 2
    * while recomputing ONLY the churn — the pattern that makes a
    * 100 TB refresh affordable (churn is typically a few percent).
    * [[snapshotDiff]] reduces both versions to digests (one digest-only
-   * shuffle); removed/changed rows are anti-joined out of the cached
-   * curated store; the per-doc transform ([[TextAnalysis.qualityOver]])
-   * runs only over changed+added documents. The gate proves the
+   * shuffle); removed/changed rows are anti-joined out of the standing
+   * curated-v1 store (the previous refresh's output); the per-doc
+   * transform ([[TextAnalysis.qualityOver]]) runs only over
+   * changed+added documents. The gate proves the
    * incremental result EQUALS a full recompute of v2 — the oracle
    * curates v2 from scratch, so any stale, lost, or double row breaks
    * the hash.
@@ -200,13 +190,11 @@ object Versioning {
     val v1 = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
     val v2 = deriveV2(v1)
-    val cachedDir = curateStore.getOrElseUpdate(Tables.corpusKey(sfDir), {
-      val dir = graft.sources.OrcIo.scratchDir("curate_v1") + "/store"
+    val store = graft.StoreCatalog.pathStore("curate_v1@v1", sfDir) { d =>
       graft.operators.TextAnalysis.qualityOver(v1)
-        .write.mode("overwrite").parquet(dir)
-      dir
-    })
-    val cached = spark.read.parquet(cachedDir)
+        .write.mode("overwrite").parquet(s"$d/store")
+    }
+    val curated = spark.read.parquet(s"$store/store")
     val diff = snapshotDiff(v1, v2).select(col("doc_id"), col("status"))
     val dead = diff.filter(col("status").isin("removed", "changed"))
       .select(col("doc_id"))
@@ -214,15 +202,10 @@ object Versioning {
       .select(col("doc_id"))
     val recomputed = graft.operators.TextAnalysis.qualityOver(
       v2.join(fresh, Seq("doc_id")))
-    cached.join(dead, Seq("doc_id"), "left_anti")
+    curated.join(dead, Seq("doc_id"), "left_anti")
       .unionByName(recomputed)
       .orderBy(col("doc_id"))
   }
-
-  /** Standing keeper-store cache for the takedown gate (the curated
-    * artifact the previous pipeline run left behind). */
-  private val keeperStore =
-    scala.collection.concurrent.TrieMap[String, String]()
 
   /**
    * Takedown / right-to-erasure propagation: remove every document
@@ -263,7 +246,9 @@ object Versioning {
     * enumeration); originals at id ≡ 0 (mod 15) are erased while
     * their mirror (id + 1000000 ≡ 1 mod 3) survives, forcing real
     * keeper promotions. Oracle = the full election over the
-    * synthesized corpus minus the takedown set. */
+    * synthesized corpus minus the takedown set. The keepers are a
+    * store: the curated artifact the previous pipeline run left
+    * behind. */
   def takedownQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val base = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("source"), col("text"))
@@ -271,12 +256,11 @@ object Versioning {
       base.filter(col("doc_id") % 5 === 0)
         .select((col("doc_id") + 1000000L).as("doc_id"),
           lit("src99").as("source"), col("text")))
-    val dir = keeperStore.getOrElseUpdate(Tables.corpusKey(sfDir), {
-      val d = graft.sources.OrcIo.scratchDir("keepers") + "/store"
-      Dedup.priorityKeepers(docs).write.mode("overwrite").parquet(d)
-      d
-    })
-    takedownPropagate(docs, spark.read.parquet(dir),
+    val dir = graft.StoreCatalog.pathStore("keepers@v1", sfDir) { d =>
+      Dedup.priorityKeepers(docs)
+        .write.mode("overwrite").parquet(s"$d/store")
+    }
+    takedownPropagate(docs, spark.read.parquet(s"$dir/store"),
       col("doc_id") % 3 === 0)
       .orderBy(col("doc_id"))
   }

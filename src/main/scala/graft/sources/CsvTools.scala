@@ -19,17 +19,13 @@ import org.apache.spark.sql.types._
  */
 object CsvTools {
 
-  private val store =
-    scala.collection.concurrent.TrieMap[String, String]()
-
-  /** Write the customer-derived fixture once per sf dir: a column
-    * deliberately full of embedded delimiters and quotes (the writer
-    * must quote and double-quote per RFC 4180), plus one extra file
-    * of two hand-malformed rows (a non-numeric key and an
+  /** Write the customer-derived fixture once per corpus, as a store:
+    * a column deliberately full of embedded delimiters and quotes (the
+    * writer must quote and double-quote per RFC 4180), plus one extra
+    * file of two hand-malformed rows (a non-numeric key and an
     * arity-mismatched row) the reader must quarantine, not crash on. */
   def buildCsvStore(spark: SparkSession, sfDir: String): String =
-    store.getOrElseUpdate(Tables.corpusKey(sfDir), {
-      val dir = OrcIo.scratchDir("csv_store")
+    graft.StoreCatalog.pathStore("csv_store@v1", sfDir) { dir =>
       val out = s"$dir/customer_csv"
       Tables.load(spark, sfDir, "customer")
         .select(col("c_custkey"),
@@ -46,8 +42,7 @@ object CsvTools {
           "not_a_number,oops,1.50\n" +
           "1,too,many,columns,here\n").getBytes("UTF-8"))
       finally bad.close()
-      out
-    })
+    } + "/customer_csv"
 
   /**
    * Correctness-gate query: CSV round trip + quarantine in one

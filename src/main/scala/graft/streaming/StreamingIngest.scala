@@ -3,7 +3,9 @@ package graft.streaming
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamReader, GroupState,
+  GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /**
  * Streaming ingest (SURVEY.md §2.10 / W8).
@@ -337,32 +339,30 @@ object StreamingIngest {
     spark.read.parquet(out)
   }
 
-  /** Staged replay source cache: the static events table copied once
-    * per corpus as a handful of parquet files for file-stream replays
-    * (checkpoint/output dirs stay fresh per replay — only the
-    * immutable input staging is shared). The schema is captured at
-    * staging time so replays skip the footer re-read. */
-  private val eventStage = scala.collection.concurrent.TrieMap[
-    String, (String, org.apache.spark.sql.types.StructType)]()
-
-  /** (path, schema) of the staged events table. */
-  private def stagedEvents(spark: SparkSession, sfDir: String)
-      : (String, org.apache.spark.sql.types.StructType) =
-    eventStage.getOrElseUpdate(Tables.corpusKey(sfDir), {
-      val stage = graft.sources.OrcIo.scratchDir("stream_src")
-      val src = graft.Tables.load(spark, sfDir, "events")
-      src.coalesce(4).write.mode("overwrite").parquet(s"$stage/in")
-      (s"$stage/in", src.schema)
-    })
-
-  /** Fresh cloned session + file stream over the staged events. */
-  private def eventStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val (inPath, schema) = stagedEvents(spark, sfDir)
+  /** The one stream source: a cloned session (so its 4 shuffle
+    * partitions never leak into the caller's) reading files of
+    * `schema`. Callers pick the format and `maxFilesPerTrigger`. */
+  private def streamReader(spark: SparkSession, schema: StructType)
+      : DataStreamReader = {
     val streamSession = spark.newSession()
     streamSession.conf.set("spark.sql.shuffle.partitions", "4")
-    streamSession.readStream
-      .schema(schema)
-      .parquet(inPath)
+    streamSession.readStream.schema(schema)
+  }
+
+  /** File stream over the staged events: the static events table
+    * copied once per corpus as a handful of parquet files, a store
+    * (checkpoint/output dirs stay fresh per replay — only the
+    * immutable input staging is shared). Its schema is a store too,
+    * so a replay never re-reads a footer. */
+  private def eventStream(spark: SparkSession, sfDir: String): DataFrame = {
+    def events = Tables.load(spark, sfDir, "events")
+    val stage = graft.StoreCatalog.pathStore("stream_events@v1", sfDir) {
+      d => events.coalesce(4).write.mode("overwrite").parquet(s"$d/in")
+    }
+    streamReader(spark,
+      graft.StoreCatalog.modelStore("stream_events_schema@v1", sfDir)(
+        events.schema))
+      .parquet(s"$stage/in")
   }
 
   private def runToParquet(df: DataFrame, tag: String): String = {
@@ -888,11 +888,7 @@ object StreamingIngest {
       .headOption.getOrElse(throw new IllegalArgumentException(
         s"no delta_* directory under $tableDir to derive the event " +
           "schema from"))
-    val schema = spark.read.orc(s"$tableDir/${first.name}").schema
-    val streamSession = spark.newSession()
-    streamSession.conf.set("spark.sql.shuffle.partitions", "4")
-    streamSession.readStream
-      .schema(schema)
+    streamReader(spark, spark.read.orc(s"$tableDir/${first.name}").schema)
       .orc(s"$tableDir/delta_*")
   }
 
@@ -1157,10 +1153,7 @@ object StreamingIngest {
     graft.Tables.load(spark, sfDir, "documents")
       .filter(isNew).select(col("doc_id"), col("text"))
       .repartition(4).write.mode("overwrite").parquet(s"$stage/in")
-    val schema = spark.read.parquet(s"$stage/in").schema
-    val streamSession = spark.newSession()
-    streamSession.conf.set("spark.sql.shuffle.partitions", "4")
-    val src = streamSession.readStream.schema(schema)
+    val src = streamReader(spark, spark.read.parquet(s"$stage/in").schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$stage/in")
     val bandedStream = Dedup.bandedSig(
@@ -1213,9 +1206,6 @@ object StreamingIngest {
   }
   // ------------------------------------------ streaming index append
 
-  private val indexStreamStore =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   /**
    * Streaming inverted-index append (r18 growth): the
    * minhash→stream_neardup doctrine applied to postings, completing
@@ -1248,21 +1238,17 @@ object StreamingIngest {
   private[graft] def indexStreamDir(spark: SparkSession,
       sfDir: String): String = {
     import graft.operators.Retrieval
-    indexStreamStore.getOrElseUpdate(Tables.corpusKey(sfDir), {
-      val d = graft.sources.OrcIo.scratchDir("index_stream")
+    graft.StoreCatalog.pathStore("index_stream@v1", sfDir) { d =>
       val docs = Tables.load(spark, sfDir, "documents")
       val isNew = pmod(col("doc_id"), lit(4L)) === 3L
       Retrieval.writeIndexSegment(docs.filter(!isNew), d, "overwrite")
       val stage = s"$d/in"
       docs.filter(isNew).select(col("doc_id"), col("text"))
         .repartition(4).write.mode("overwrite").parquet(stage)
-      val schema = spark.read.parquet(stage).schema
-      val streamSession = spark.newSession()
-      streamSession.conf.set("spark.sql.shuffle.partitions", "4")
-      val src = streamSession.readStream.schema(schema)
+      val q = streamReader(spark, spark.read.parquet(stage).schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)
-      val q = src.writeStream
+        .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           Retrieval.writeIndexSegment(batch, d, "append")
           ()
@@ -1271,7 +1257,6 @@ object StreamingIngest {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      d
-    })
+    }
   }
 }

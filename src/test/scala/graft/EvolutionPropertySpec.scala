@@ -153,6 +153,36 @@ class EvolutionPropertySpec extends SparkSpec {
       native.agg(min(col("_col2")), sum(col("_col3"))).head())
   }
 
+  test("positional evolution on a generated (_colN) file: every cell " +
+      "matches the writer's input") {
+    // twin of the test above: the over1k_bloom layout (_col0.._col10,
+    // nulls in _col7) written here, checked against what was written
+    val f = OrcFixtures.colN(graft.sources.OrcIo.scratchDir("prop_colN"))
+    val named = StructType(Seq(
+      StructField("t", ByteType), StructField("si", ShortType),
+      StructField("i", IntegerType), StructField("b", LongType),
+      StructField("f", FloatType), StructField("d", DoubleType),
+      StructField("bo", BooleanType), StructField("s", StringType),
+      StructField("ts", TimestampType),
+      StructField("dec", DecimalType(4, 2)),
+      StructField("bin", BinaryType)))
+    val pos = graft.sources.OrcIo.readPositional(spark, f, named)
+      .orderBy(col("b")).collect()
+    val in = OrcFixtures.colNRows
+    assert(pos.length == in.size)
+    pos.zip(in).foreach { case (r, x) =>
+      assert(r.getByte(0) == x.t && r.getShort(1) == x.si &&
+        r.getInt(2) == x.i && r.getLong(3) == x.b &&
+        r.getFloat(4) == x.f && r.getDouble(5) == x.d &&
+        r.getBoolean(6) == x.bo && r.getString(7) == x.s &&
+        r.getTimestamp(8).getTime == x.tsMillis &&
+        r.getDecimal(9).compareTo(x.dec) == 0 &&
+        r.getAs[Array[Byte]](10).sameElements(x.bin), s"row $r != $x")
+    }
+    assert(pos.count(_.isNullAt(7)) == in.count(_.s == null))
+    assert(in.count(_.s == null) > 0)
+  }
+
   test("CHAR(n)/VARCHAR(n) maxLength semantics round-trip through ORC") {
     import graft.operators.Evolution
     val dir = graft.sources.OrcIo.scratchDir("prop_char")

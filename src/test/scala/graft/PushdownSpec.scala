@@ -245,6 +245,18 @@ class PushdownSpec extends SparkSpec {
     assert(q.count() == 1L) // the single userid=2 row
   }
 
+  test("orc_split_elim twin, generated fixture: stripe stats eliminate " +
+      "4 of 5 groups") {
+    val f = OrcFixtures.splitElim(OrcIo.scratchDir("pushdown_split_elim"))
+    val q = spark.read.orc(f).filter(col("userid") <= 2L)
+    val skipped = withPushdown(on = true) { scanRows(q) }
+    assert(skipped == 5000L, s"expected one 5000-row group, got $skipped")
+    val q2 = spark.read.orc(f).filter(col("userid") <= 2L)
+    val full = withPushdown(on = false) { scanRows(q2) }
+    assert(full == 25000L)
+    assert(q.count() == 1L) // the single userid=2 row
+  }
+
   test("z-order clustering: non-leading-dim filter skips row groups a linear sort cannot") {
     val d = OrcIo.scratchDir("pushdown_zorder")
     // two INDEPENDENT pseudo-random dims in [0, 1024) — distinct hash
@@ -285,5 +297,29 @@ class PushdownSpec extends SparkSpec {
     assert(off == 2098L)
     assert(on == 0L,
       s"bloom should prove 12345 absent from every row group, read $on")
+  }
+
+  test("over1k_bloom twin, generated fixture: blooms skip an absent " +
+      "in-range key") {
+    val f = OrcFixtures.colN(OrcIo.scratchDir("pushdown_colN"))
+    val key = OrcFixtures.colNAbsentKey
+    val rows = OrcFixtures.colNRows
+    assert(!rows.exists(_.i == key))
+    assert(rows.grouped(1000).forall(g =>
+      g.map(_.i).min < key && key < g.map(_.i).max),
+      "the key must sit inside every row group's min/max")
+    val q = spark.read.orc(f).filter(col("_col2") === key)
+    val on = withPushdown(on = true) { scanRows(q) }
+    val q2 = spark.read.orc(f).filter(col("_col2") === key)
+    val off = withPushdown(on = false) { scanRows(q2) }
+    assert(off == rows.size.toLong)
+    assert(on == 0L,
+      s"bloom should prove $key absent from every row group, read $on")
+    // positive control: a present key still returns its rows
+    val present = rows.head.i
+    withPushdown(on = true) {
+      assert(spark.read.orc(f).filter(col("_col2") === present).count() ==
+        rows.count(_.i == present).toLong)
+    }
   }
 }

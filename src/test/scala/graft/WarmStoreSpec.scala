@@ -1,6 +1,8 @@
 package graft
 
-import graft.operators.{Multimodal, Retrieval, Similarity, TextAnalysis}
+import graft.operators.{Linkage, Multimodal, Retrieval, Similarity,
+  TextAnalysis, Tokenize}
+import graft.sources.CsvTools
 
 /**
  * Cross-JVM warm start for standing stores (r18, VERDICT r17 #5):
@@ -14,8 +16,10 @@ import graft.operators.{Multimodal, Retrieval, Similarity, TextAnalysis}
  * (the returned path is the SAME durable directory, whose marker
  * mtime is unchanged).
  *
- * The tail test drops durability and shows the default (driver-run)
- * behavior is untouched: no catalog root → scratch-dir builds.
+ * The tail tests drop durability and show the default (Verify/Bench)
+ * behavior is untouched: no catalog root → scratch-dir builds; and
+ * that concurrent misses on one store run its build once, with or
+ * without a root.
  */
 class WarmStoreSpec extends SparkSpec {
 
@@ -69,7 +73,6 @@ class WarmStoreSpec extends SparkSpec {
     withRoot { root =>
       val cold = rows(Similarity.pqAppendQuery(spark, sfDir))
       StoreCatalog.dropInMemory()
-      Similarity.dropJvmStores()
       val warm = rows(Similarity.pqAppendQuery(spark, sfDir))
       assert(warm == cold)
       // the durable dir holds both halves of the store
@@ -84,10 +87,65 @@ class WarmStoreSpec extends SparkSpec {
     withRoot { root =>
       val cold = rows(Multimodal.mediaNearDupQuery(spark, sfDir))
       StoreCatalog.dropInMemory()
-      Multimodal.dropJvmStores()
       val warm = rows(Multimodal.mediaNearDupQuery(spark, sfDir))
       assert(warm == cold)
     }
+  }
+
+  test("csv, entity-label and merge-table stores land under the root " +
+      "and serve a second session without a rebuild") {
+    val stores: Seq[(String, () => AnyRef)] = Seq(
+      "csv_store@v1" -> (() => CsvTools.buildCsvStore(spark, sfDir)),
+      "entity_labels@v1" -> (() => Linkage.buildEntityLabels(spark, sfDir)),
+      "bpe_merges_24@v1" -> (() => Tokenize.buildMerges(spark, sfDir)))
+    stores.foreach { case (kind, build) =>
+      withRoot { root =>
+        val cold = build()
+        val dirs = new java.io.File(root).listFiles()
+          .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty))
+          .filter(_.getName == kind)
+        assert(dirs.length == 1, s"$kind: no store under $root")
+        val marker = new java.io.File(dirs.head, "_GRAFT_DONE")
+        assert(marker.exists(), s"$kind: no completion marker")
+        val builtAt = marker.lastModified()
+        StoreCatalog.dropInMemory()
+        assert(build() == cold, s"$kind: second session diverged")
+        assert(marker.lastModified() == builtAt, s"$kind: store was rebuilt")
+      }
+    }
+  }
+
+  /** 4 threads miss one fresh store at once; returns (builds, paths). */
+  private def raceOneStore(): (Int, Set[String]) = {
+    StoreCatalog.dropInMemory()
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    val paths = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val threads = (1 to 4).map(_ => new Thread(() => {
+      go.await()
+      paths.add(StoreCatalog.pathStore("build_once_probe@v1", sfDir) { _ =>
+        builds.incrementAndGet()
+        Thread.sleep(300)
+      })
+      ()
+    }))
+    threads.foreach(_.start())
+    go.countDown()
+    threads.foreach(_.join())
+    assert(paths.size == 4, "a racing caller failed")
+    (builds.get, paths.toArray(Array.empty[String]).toSet)
+  }
+
+  test("concurrent misses on one store build it exactly once") {
+    withRoot { root =>
+      val (builds, paths) = raceOneStore()
+      assert(builds == 1, s"durable store built $builds times")
+      assert(paths.size == 1 && paths.head.startsWith(root))
+    }
+    val (builds, paths) = raceOneStore()
+    assert(builds == 1, s"scratch store built $builds times")
+    assert(paths.size == 1)
+    StoreCatalog.dropInMemory()
   }
 
   test("no catalog root: builds stay JVM-local scratch (driver default)") {
