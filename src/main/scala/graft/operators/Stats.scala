@@ -16,10 +16,12 @@ import org.apache.spark.unsafe.types.UTF8String
  * (`Reader.getStatistics`, `ColumnStatisticsImpl.java:92-1164`).
  *
  * Scale: a stats-only aggregate over 100 TB touches only footers
- * (O(#files) metadata IOs, distributed via [[OrcMeta.columnStats]])
+ * (O(#files) metadata IOs through [[OrcMeta]]'s tail fan-out and tail
+ * cache: on the driver for a small dataset, as one job for a large one)
  * instead of the data itself — the same reason the reference keeps
  * three stat granularities. The merge across files is local, over the
- * #files×#columns footer rows collected once.
+ * #files×#columns footer rows collected once; so are the footer sums
+ * of [[statsOnlyCount]] and [[rawDataSize]].
  */
 object Stats {
 
@@ -172,11 +174,10 @@ object Stats {
       .orderBy(col("col_name"))
   }
 
-  /** COUNT(*) from footers alone (`Reader.getNumberOfRows`). */
-  def statsOnlyCount(spark: SparkSession, orcPath: String): Long = {
-    import spark.implicits._
-    OrcMeta.fileMeta(spark, orcPath).agg(sum($"rows")).as[Long].head()
-  }
+  /** COUNT(*) from footers alone (`Reader.getNumberOfRows`), summed
+    * on the driver: one footer pass, no aggregate job. */
+  def statsOnlyCount(spark: SparkSession, orcPath: String): Long =
+    OrcMeta.fileMetas(spark, orcPath).map(_.rows).sum
 
   /**
    * Scan-side per-column statistics profile of a parquet table — the
@@ -207,10 +208,8 @@ object Stats {
    * `WriterImpl.java:2686-2734`): the CBO sizeInBytes analogue, from
    * footers only.
    */
-  def rawDataSize(spark: SparkSession, orcPath: String): Long = {
-    import spark.implicits._
-    OrcMeta.fileMeta(spark, orcPath).agg(sum($"rawDataSize")).as[Long].head()
-  }
+  def rawDataSize(spark: SparkSession, orcPath: String): Long =
+    OrcMeta.fileMetas(spark, orcPath).map(_.rawDataSize).sum
 
   /**
    * Exact second-moment statistics per group: mean / stddev /

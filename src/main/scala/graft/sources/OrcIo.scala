@@ -203,6 +203,7 @@ object OrcIo {
     }.sum
     userMeta.foreach { case (k, v) => writer.addUserMetadata(k, v) }
     writer.close()
+    OrcMeta.evictTails(outFile, conf)
     rows
   }
 

@@ -1,9 +1,18 @@
 package graft.sources
 
+import com.google.common.cache.{Cache, CacheBuilder, Weigher}
+import com.google.common.util.concurrent.{ThreadFactoryBuilder,
+  UncheckedExecutionException}
+import java.util.concurrent.{Callable, ExecutionException, Executors}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.orc.{ColumnStatistics, OrcFile, Reader, TypeDescription}
+import org.apache.orc.impl.OrcTail
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
+import scala.reflect.ClassTag
+import scala.reflect.runtime.universe.TypeTag
 
 /**
  * File-metadata inspection — the `orc-tools meta` / `orc-metadata` /
@@ -25,10 +34,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * module that lists or probes ORC files, goes through it and
  * [[withReader]].
  *
- * Scale: footer reads are O(#files) metadata-only IOs, distributed
- * across the cluster (one task per 16 files, [[perFile]]) rather than
- * looping on the driver, so a 100 TB / 100k-file dataset inspects in
- * parallel.
+ * Scale: footer reads are O(#files) metadata-only IOs ([[perFile]]).
+ * A dataset of at most `spark.sql.sources.parallelPartitionDiscovery
+ * .threshold` files (default 32) is read on a shared driver pool and
+ * answers as a local DataFrame, with no Spark job; a larger one is read
+ * by one job of one task per 16 files, which keeps a large answer
+ * (row-group index, stripe encodings) off the driver. The cut is
+ * borrowed from Spark's partition discovery and is not measured for
+ * tail reads. Either way each parsed tail is kept in a bounded cache
+ * keyed by (qualified path, length, modification time), so a repeated
+ * footer call costs the listing.
  */
 object OrcMeta {
 
@@ -51,61 +66,145 @@ object OrcMeta {
     * this object's scaladoc). Lists on the driver with the session's
     * Hadoop configuration. */
   private[graft] def dataFiles(spark: SparkSession, path: String)
-      : Seq[String] = {
+      : Seq[String] = listing(spark, path).map(_._1)
+
+  /** [[dataFiles]] with each file's tail key, taken from the listing's
+    * own statuses. */
+  private def listing(spark: SparkSession, path: String)
+      : Seq[(String, TailKey)] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def under(dir: Path): Seq[Path] = fs.listStatus(dir).toSeq
+    def under(dir: Path): Seq[FileStatus] = fs.listStatus(dir).toSeq
       .filterNot { s =>
         val n = s.getPath.getName
         n.startsWith("_") || n.startsWith(".") ||
           n.endsWith(OrcIo.FlushLengthSuffix)
       }
-      .flatMap(s => if (s.isDirectory) under(s.getPath) else Seq(s.getPath))
-    if (fs.getFileStatus(p).isDirectory) under(p).map(_.toString).sorted
-    else Seq(path)
+      .flatMap(s => if (s.isDirectory) under(s.getPath) else Seq(s))
+    val st = fs.getFileStatus(p)
+    if (st.isDirectory)
+      under(p).map(s => s.getPath.toString -> TailKey(fs, s)).sortBy(_._1)
+    else Seq(path -> TailKey(fs, st))
+  }
+
+  /** A parsed tail's identity: a rewrite changes the length or the
+    * modification time. A writer that replaces a file in place within
+    * one mtime tick evicts it instead ([[evictTails]]). */
+  private[graft] case class TailKey(path: String, length: Long,
+      mtime: Long)
+  private[graft] object TailKey {
+    def apply(fs: FileSystem, s: FileStatus): TailKey = TailKey(
+      fs.makeQualified(s.getPath).toString, s.getLen, s.getModificationTime)
+  }
+
+  /** Tails (PostScript, Footer and Metadata section) by [[TailKey]],
+    * bounded by their buffered bytes (64 MB, some 4,000 tails of the
+    * reader's 16 KB first read); a miss loads once however many
+    * callers wait on it. */
+  private[graft] val tails: Cache[TailKey, OrcTail] = CacheBuilder
+    .newBuilder().maximumWeight(64L << 20)
+    .weigher(new Weigher[TailKey, OrcTail] {
+      def weigh(k: TailKey, t: OrcTail): Int = t.getTailBuffer.getLength
+    })
+    .recordStats().build[TailKey, OrcTail]()
+
+  /** Drop every cached tail of `path`, for a writer that replaces it. */
+  private[graft] def evictTails(path: String, conf: Configuration): Unit = {
+    val p = new Path(path)
+    val q = p.getFileSystem(conf).makeQualified(p).toString
+    tails.asMap.keySet.removeIf(_.path == q)
+  }
+
+  private def open[A](file: String, opts: OrcFile.ReaderOptions)
+      (f: Reader => A): A = {
+    val reader = OrcFile.createReader(new Path(file), opts)
+    try f(reader) finally reader.close()
+  }
+
+  /** Open one file on its cached tail, loading the tail on a miss. */
+  private def cached[A](key: TailKey, conf: Configuration)
+      (f: Reader => A): A = {
+    val tail = try tails.get(key, () => {
+      val opts = OrcFile.readerOptions(conf)
+      open(key.path, opts)(_ => ())
+      // the reader records the tail it read in its options; keep the
+      // tail alone, not the closed reader it points back to
+      val t = opts.getOrcTail
+      new OrcTail(t.getFileTail, t.getTailBuffer, t.getFileModificationTime)
+    }) catch {
+      case e @ (_: ExecutionException | _: UncheckedExecutionException) =>
+        throw e.getCause
+    }
+    open(key.path, OrcFile.readerOptions(conf).orcTail(tail))(f)
   }
 
   /** Open one file's tail, run `f`, close. `conf` defaults to a fresh
     * Hadoop configuration, the one tasks use; driver-side callers may
     * pass the session's. `maxLength` reads only that prefix of the file
-    * (the side-file recovery of [[OrcIo.readSalvage]]). */
+    * (the side-file recovery of [[OrcIo.readSalvage]]). It reads the
+    * tail itself: the tail cache serves [[perFile]] alone. */
   private[graft] def withReader[A](file: String,
       conf: Configuration = new Configuration(),
-      maxLength: Long = Long.MaxValue)(f: Reader => A): A = {
-    val reader = OrcFile.createReader(new Path(file),
-      OrcFile.readerOptions(conf).maxLength(maxLength))
-    try f(reader) finally reader.close()
+      maxLength: Long = Long.MaxValue)(f: Reader => A): A =
+    open(file, OrcFile.readerOptions(conf).maxLength(maxLength))(f)
+
+  private lazy val tailPool = Executors.newFixedThreadPool(8,
+    new ThreadFactoryBuilder().setDaemon(true)
+      .setNameFormat("graft-orc-tail-%d").build())
+
+  /** The tail fan-out behind every surface: `f`'s rows per data file,
+    * in file order. Up to the partition-discovery threshold (the cut in
+    * this object's scaladoc) the files are read on the driver's
+    * 8-thread tail pool and the rows come back as a local Seq (Left);
+    * above it one task per 16 files reads them (Right). */
+  private def perFile[A: ClassTag](spark: SparkSession, path: String)
+      (f: (String, Reader) => Seq[A]): Either[Seq[A], RDD[A]] = {
+    val files = listing(spark, path)
+    if (files.size <= spark.conf
+        .get(SQLConf.PARALLEL_PARTITION_DISCOVERY_THRESHOLD.key).toInt) {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val reads = files.map { case (file, key) =>
+        tailPool.submit(new Callable[Seq[A]] {
+          def call(): Seq[A] = cached(key, conf)(f(file, _))
+        })
+      }
+      Left(reads.flatMap { r =>
+        try r.get() catch { case e: ExecutionException => throw e.getCause }
+      })
+    } else Right(spark.sparkContext
+      .parallelize(files, math.max(1, files.size / 16))
+      .mapPartitions { part =>
+        // one Configuration per task: building one per file cost more
+        // than the cached tail read it serves
+        val conf = new Configuration()
+        part.flatMap { case (file, key) => cached(key, conf)(f(file, _)) }
+      })
   }
 
-  /** The tail fan-out behind every surface: one task per 16 data
-    * files, each opening its files' tails and emitting `f`'s rows. */
-  private def perFile[A: scala.reflect.ClassTag](spark: SparkSession,
-      path: String)(f: (String, Reader) => Seq[A])
-      : org.apache.spark.rdd.RDD[A] = {
-    val files = dataFiles(spark, path)
-    spark.sparkContext.parallelize(files, math.max(1, files.size / 16))
-      .flatMap(file => withReader(file)(f(file, _)))
+  /** [[perFile]]'s rows as a DataFrame: local on the driver path, so
+    * collecting it runs no job. */
+  private def frame[A <: Product: TypeTag](spark: SparkSession,
+      rows: Either[Seq[A], RDD[A]]): DataFrame = {
+    import spark.implicits._
+    rows.fold(_.toDF(), _.toDF())
   }
 
   /** One row per (file, stripe): the scan-parallelism layout
     * (`StripeInformation`, SURVEY.md §1.1). */
   def stripes(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    perFile(spark, path) { (file, r) =>
+    frame(spark, perFile(spark, path) { (file, r) =>
       import scala.jdk.CollectionConverters._
       r.getStripes.asScala.zipWithIndex.map { case (s, i) =>
         StripeInfo(file, i, s.getOffset, s.getIndexLength,
           s.getDataLength, s.getFooterLength, s.getNumberOfRows)
       }.toSeq
-    }.toDF()
+    })
   }
 
   /** One row per (file, column): footer-level statistics
     * (`ColumnStatisticsImpl`, SURVEY.md W5). */
-  def columnStats(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    footerStats(spark, path).map(_._1).toDF()
-  }
+  def columnStats(spark: SparkSession, path: String): DataFrame =
+    frame(spark, perFile(spark, path)(footerStats(_, _).map(_._1)))
 
   /** [[columnStats]] collected, each row with its
     * column's ORC type category — what a merge across files by type
@@ -113,21 +212,20 @@ object OrcMeta {
     * footer pass, no shuffle. */
   private[graft] def typedColumnStats(spark: SparkSession, path: String)
       : Seq[(ColStats, TypeDescription.Category)] =
-    footerStats(spark, path).collect().toSeq
+    perFile(spark, path)(footerStats).fold(identity, _.collect().toSeq)
 
-  private def footerStats(spark: SparkSession, path: String)
-      : org.apache.spark.rdd.RDD[(ColStats, TypeDescription.Category)] =
-    perFile(spark, path) { (file, r) =>
-      val schema = r.getSchema
-      val names = flatColumnNames(schema)
-      val trusted = writerStatsTrusted(r.getWriterVersion)
-      r.getStatistics.zipWithIndex.map { case (cs, id) =>
-        val (min, max, sum) = renderStats(cs)
-        ColStats(file, id, names.getOrElse(id, s"_col$id"),
-          cs.getNumberOfValues, cs.hasNull, min, max, sum, trusted) ->
-          schema.findSubtype(id).getCategory
-      }.toSeq
-    }
+  private def footerStats(file: String, r: Reader)
+      : Seq[(ColStats, TypeDescription.Category)] = {
+    val schema = r.getSchema
+    val names = flatColumnNames(schema)
+    val trusted = writerStatsTrusted(r.getWriterVersion)
+    r.getStatistics.zipWithIndex.map { case (cs, id) =>
+      val (min, max, sum) = renderStats(cs)
+      ColStats(file, id, names.getOrElse(id, s"_col$id"),
+        cs.getNumberOfValues, cs.hasNull, min, max, sum, trusted) ->
+        schema.findSubtype(id).getCategory
+    }.toSeq
+  }
 
   case class StripeColStats(file: String, stripe: Int, columnId: Int,
       column: String, count: Long, hasNull: Boolean, min: String,
@@ -138,8 +236,7 @@ object OrcMeta {
     * granularity of the reference's three-level stats
     * (SURVEY.md §1.3), used for stripe elimination. */
   def stripeStats(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    perFile(spark, path) { (file, r) =>
+    frame(spark, perFile(spark, path) { (file, r) =>
       val names = flatColumnNames(r.getSchema)
       import scala.jdk.CollectionConverters._
       r.getStripeStatistics.asScala.zipWithIndex.flatMap { case (ss, si) =>
@@ -149,7 +246,7 @@ object OrcMeta {
             cs.getNumberOfValues, cs.hasNull, min, max, sum)
         }
       }.toSeq
-    }.toDF()
+    })
   }
 
   case class RowGroupStats(file: String, stripe: Int, columnId: Int,
@@ -164,8 +261,7 @@ object OrcMeta {
    */
   def rowGroupIndex(spark: SparkSession, path: String,
       columns: Seq[String] = Nil): DataFrame = {
-    import spark.implicits._
-    perFile(spark, path) { (file, r) =>
+    frame(spark, perFile(spark, path) { (file, r) =>
       val schema = r.getSchema
       val names = flatColumnNames(schema)
       val wanted: Set[Int] =
@@ -195,7 +291,7 @@ object OrcMeta {
             }
         }.toSeq
       } finally rows.close()
-    }.toDF()
+    })
   }
 
   case class StripeEncoding(file: String, stripe: Int, columnId: Int,
@@ -210,8 +306,7 @@ object OrcMeta {
    * 10k rows, `WriterImpl.java:1227-1236`), which OrcIoSpec pins.
    */
   def stripeEncodings(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    perFile(spark, path) { (file, r) =>
+    frame(spark, perFile(spark, path) { (file, r) =>
       val names = flatColumnNames(r.getSchema)
       val rows = r.rows().asInstanceOf[org.apache.orc.impl.RecordReaderImpl]
       try {
@@ -224,19 +319,24 @@ object OrcMeta {
             }
         }.toSeq
       } finally rows.close()
-    }.toDF()
+    })
   }
 
   /** One row per file: the `orc-metadata` summary. */
-  def fileMeta(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    perFile(spark, path) { (file, r) =>
-      Seq(FileMeta(file, r.getNumberOfRows, r.getRawDataSize,
-        r.getContentLength, r.getStripes.size(),
-        r.getCompressionKind.toString, r.getCompressionSize,
-        r.getWriterVersion.toString, r.getSchema.toString))
-    }.toDF()
-  }
+  def fileMeta(spark: SparkSession, path: String): DataFrame =
+    frame(spark, perFile(spark, path)(fileMetaOf))
+
+  /** [[fileMeta]] collected — what the footer sums of
+    * [[graft.operators.Stats]] add up on the driver. */
+  private[graft] def fileMetas(spark: SparkSession, path: String)
+      : Seq[FileMeta] =
+    perFile(spark, path)(fileMetaOf).fold(identity, _.collect().toSeq)
+
+  private def fileMetaOf(file: String, r: Reader): Seq[FileMeta] =
+    Seq(FileMeta(file, r.getNumberOfRows, r.getRawDataSize,
+      r.getContentLength, r.getStripes.size(),
+      r.getCompressionKind.toString, r.getCompressionSize,
+      r.getWriterVersion.toString, r.getSchema.toString))
 
   case class UserMetadata(file: String, key: String, value: String)
 
@@ -246,8 +346,7 @@ object OrcMeta {
     * form the engine writes (e.g. the ACID stats key,
     * `OrcAcidUtils.java:27-33`). */
   def userMetadata(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    perFile(spark, path) { (file, r) =>
+    frame(spark, perFile(spark, path) { (file, r) =>
       import scala.jdk.CollectionConverters._
       r.getMetadataKeys.asScala.map { k =>
         val buf = r.getMetadataValue(k)
@@ -255,7 +354,7 @@ object OrcMeta {
         buf.get(bytes)
         UserMetadata(file, k, new String(bytes, "UTF-8"))
       }.toSeq
-    }.toDF()
+    })
   }
 
   /**
@@ -277,6 +376,7 @@ object OrcMeta {
         java.nio.ByteBuffer.wrap(v.getBytes("UTF-8")))
     }
     w.close()
+    evictTails(path, conf)
   }
 
   /** Correctness-gate query for the user-metadata surface: write a
@@ -381,15 +481,14 @@ object OrcMeta {
    * reported separately, `None` when the selection contains LIST/MAP
    * (data-dependent, the tool's "cannot estimate" case).
    *
-   * Scale: footer-only I/O, one task per file batch — sizing a 100k-file
+   * Scale: footer-only I/O through [[perFile]] — sizing a 100k-file
    * dataset's executors is a metadata sweep, not a data read.
    */
   def memoryEstimate(spark: SparkSession, path: String,
       columns: Seq[String] = Nil, batchSize: Int = 1000,
       stripeIx: Int = -1): DataFrame = {
-    import spark.implicits._
     val colsLabel = if (columns.isEmpty) "*" else columns.mkString(",")
-    perFile(spark, path) { (file, r) =>
+    frame(spark, perFile(spark, path) { (file, r) =>
       import scala.jdk.CollectionConverters._
       val schema = r.getSchema
       // selection: named top-level subtrees + parents, root always
@@ -453,7 +552,7 @@ object OrcMeta {
         maxDataLength, decompressor, readerMemory, batchMem,
         readerMemory + batchMem.getOrElse(0L), batchMem.isEmpty,
         compression.toString))
-    }.toDF()
+    })
   }
 
   /** Driver-gate query for the `orc-memory` surface: write a fixed table

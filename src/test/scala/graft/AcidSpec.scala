@@ -294,6 +294,25 @@ class AcidSpec extends SparkSpec {
     assert(back == Map(1L -> 20.0))
   }
 
+  test("a same-length sidecar rewrite reads back its new stats") {
+    val dir = graft.sources.OrcIo.scratchDir("acid_stats_rewrite")
+    def carrier(stats: Acid.AcidStats): Unit =
+      graft.sources.OrcMeta.writeMetadataFile(s"$dir/_acid_stats.orc",
+        Map(Acid.AcidStatsKey -> stats.serialize))
+    val f = new java.io.File(s"$dir/_acid_stats.orc")
+    carrier(Acid.AcidStats(100, 10, 1))
+    val (len, mtime) = (f.length(), f.lastModified())
+    assert(Acid.readAcidStats(spark, dir)
+      .contains(Acid.AcidStats(100, 10, 1)))
+    // same length and, as when both writes land in one mtime tick, the
+    // same mtime: only the writer's eviction tells the two files apart
+    carrier(Acid.AcidStats(200, 20, 2))
+    assert(f.setLastModified(mtime))
+    assert(f.length() == len && f.lastModified() == mtime)
+    assert(Acid.readAcidStats(spark, dir)
+      .contains(Acid.AcidStats(200, 20, 2)))
+  }
+
   test("hive.acid.stats survive delta write and compaction") {
     val dir = graft.sources.OrcIo.scratchDir("acid_stats")
     val df = eventsDf(Seq(

@@ -23,6 +23,25 @@ class CompatSpec extends SparkSpec {
     assert(readable("orc-file-11-format.orc") == 7500L)
   }
 
+  test("format 0.11 and 0.12 twins read fully, and their tails cache") {
+    import graft.sources.{OrcIo, OrcMeta}
+    import org.apache.orc.OrcFile.Version
+    val twins = OrcIo.scratchDir("compat_versions")
+    Seq(Version.V_0_11, Version.V_0_12).foreach { v =>
+      val f = OrcFixtures.colN(twins, v)
+      assert(spark.read.orc(f).count() == OrcFixtures.colNRows.size.toLong)
+      def footer() = Seq(OrcMeta.fileMeta(spark, f),
+        OrcMeta.stripeStats(spark, f)).map(_.collect().map(_.toString).toSeq)
+      val loads = OrcMeta.tails.stats.loadCount
+      val miss = footer()
+      assert(OrcMeta.tails.stats.loadCount == loads + 1, v)
+      assert(footer() == miss, v)
+      assert(OrcMeta.tails.stats.loadCount == loads + 1, v)
+      assert(OrcMeta.fileMetas(spark, f).map(_.rows) ==
+        Seq(OrcFixtures.colNRows.size.toLong), v)
+    }
+  }
+
   test("codec matrix files decode (zlib, snappy, lzo, lz4)") {
     assert(readable("TestOrcFile.testSnappy.orc") == 10000L)
     assert(readable("TestVectorOrcFile.testLzo.orc") == 10000L)

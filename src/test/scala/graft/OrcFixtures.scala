@@ -15,19 +15,31 @@ import org.apache.orc.{OrcFile, TypeDescription}
  */
 object OrcFixtures {
 
-  /** Write `n` rows of `schema` to one ORC file; `fill(cols, r, i)`
-    * sets batch row `r` of `cols` to input row `i`. */
+  /** Write `n` rows of `schema` to one ORC file of format `version`,
+    * replacing any file at `path`; `fill(cols, r, i)` sets batch row
+    * `r` of `cols` to input row `i`. With `footerAfter` ≥ 0 the writer
+    * also writes an intermediate footer once that many rows are in,
+    * and `onFooter` receives the file length it leaves readable. */
   private def writeOrc(path: String, schema: String, n: Int,
-      stride: Int, bloomColumns: String = "")(
+      stride: Int, bloomColumns: String = "",
+      version: OrcFile.Version = OrcFile.Version.CURRENT,
+      footerAfter: Int = -1, onFooter: Long => Unit = _ => ())(
       fill: (Array[ColumnVector], Int, Int) => Unit): String = {
     val opts = OrcFile
       .writerOptions(new org.apache.hadoop.conf.Configuration())
       .setSchema(TypeDescription.fromString(schema))
       .rowIndexStride(stride)
       .bloomFilterColumns(bloomColumns)
+      .version(version)
+      .overwrite(true)
     val w = OrcFile.createWriter(new Path(path), opts)
     val batch = opts.getSchema.createRowBatch(1024)
     (0 until n).foreach { i =>
+      if (i == footerAfter) {
+        if (batch.size > 0) w.addRowBatch(batch)
+        batch.reset()
+        onFooter(w.writeIntermediateFooter())
+      }
       fill(batch.cols, batch.size, i)
       batch.size += 1
       if (batch.size == batch.getMaxSize) {
@@ -37,6 +49,21 @@ object OrcFixtures {
     if (batch.size > 0) w.addRowBatch(batch)
     w.close()
     path
+  }
+
+  /** `n` rows of `struct<k:bigint>` holding 0 … n−1, replacing any file
+    * at `path`. With `flushAfter` ≥ 0 an intermediate footer follows
+    * that many rows, and the result is the length it leaves readable
+    * (an open file's last flush): read up to it, the file holds
+    * `flushAfter` rows. Otherwise the result is −1. */
+  def longs(path: String, n: Int, flushAfter: Int = -1): Long = {
+    var flushed = -1L
+    writeOrc(path, "struct<k:bigint>", n, stride = 10000,
+        footerAfter = flushAfter, onFooter = len => flushed = len) {
+        (cols, r, i) =>
+          cols(0).asInstanceOf[LongColumnVector].vector(r) = i
+    }
+    flushed
   }
 
   /** Twin of `orc_split_elim.orc`: 25,000 rows, index stride 5000.
@@ -74,12 +101,16 @@ object OrcFixtures {
 
   /** Twin of `over1k_bloom.orc`: 11 columns named `_col0` … `_col10`
     * (a writer that kept no column names), index stride 1000, a bloom
-    * filter on `_col2`, and nulls in `_col7`. */
-  def colN(dir: String): String =
-    writeOrc(s"$dir/colN.orc", "struct<_col0:tinyint,_col1:smallint," +
+    * filter on `_col2`, and nulls in `_col7`. `version` picks the file
+    * format (0.12 by default; 0.11 twins the format-0.11 demo files). */
+  def colN(dir: String,
+      version: OrcFile.Version = OrcFile.Version.CURRENT): String =
+    writeOrc(s"$dir/colN-${version.getName}.orc",
+        "struct<_col0:tinyint,_col1:smallint," +
         "_col2:int,_col3:bigint,_col4:float,_col5:double,_col6:boolean," +
         "_col7:string,_col8:timestamp,_col9:decimal(4,2),_col10:binary>",
-        colNRows.size, stride = 1000, bloomColumns = "_col2") {
+        colNRows.size, stride = 1000, bloomColumns = "_col2",
+        version = version) {
       (cols, r, i) =>
         val x = colNRows(i)
         def long(c: Int, v: Long): Unit =

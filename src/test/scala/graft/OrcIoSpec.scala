@@ -352,4 +352,179 @@ class OrcIoSpec extends SparkSpec {
     assert(stats.getAs[String]("max") == "4")
     assert(stats.getAs[Long]("count") == 5L)
   }
+
+  private def tailLoads: Long = OrcMeta.tails.stats.loadCount
+
+  private def stripeRows(f: String): Long =
+    OrcMeta.stripeStats(spark, f).as[OrcMeta.StripeColStats].collect()
+      .filter(_.columnId == 1).map(_.count).sum
+
+  test("a file rewritten at the same path misses the tail cache") {
+    val f = s"${OrcIo.scratchDir("tail_rewrite")}/t.orc"
+    def rows() = OrcMeta.fileMeta(spark, f).as[OrcMeta.FileMeta].head().rows
+    OrcFixtures.longs(f, 3000)
+    assert(rows() == 3000L && stripeRows(f) == 3000L)
+    OrcFixtures.longs(f, 5000)
+    assert(rows() == 5000L && stripeRows(f) == 5000L)
+  }
+
+  test("a same-length rewrite with a moved mtime misses the tail cache") {
+    val dir = OrcIo.scratchDir("tail_touch")
+    val (p, q) = (new org.apache.hadoop.fs.Path(s"$dir/m.orc"),
+      new org.apache.hadoop.fs.Path(s"$dir/q.orc"))
+    OrcMeta.writeMetadataFile(p.toString, Map("k" -> "aaaa"))
+    OrcMeta.writeMetadataFile(q.toString, Map("k" -> "bbbb"))
+    def value() = OrcMeta.userMetadata(spark, p.toString)
+      .as[OrcMeta.UserMetadata].collect().map(_.value).toSeq
+    assert(value() == Seq("aaaa"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = p.getFileSystem(conf)
+    val before = fs.getFileStatus(p)
+    // replace the bytes outside the engine's writers, which would evict
+    org.apache.hadoop.fs.FileUtil.copy(fs, q, fs, p, false, true, conf)
+    fs.setTimes(p, before.getModificationTime + 2000L, -1L)
+    assert(fs.getFileStatus(p).getLen == before.getLen)
+    val loads = tailLoads
+    assert(value() == Seq("bbbb"))
+    assert(tailLoads == loads + 1)
+  }
+
+  test("concurrent stripeStats calls on one uncached file load its tail " +
+      "once") {
+    val f = s"${OrcIo.scratchDir("tail_race")}/c.orc"
+    OrcFixtures.longs(f, 25000)
+    val loads = tailLoads
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    try {
+      val calls = (1 to 8).map(_ => pool.submit(
+        new java.util.concurrent.Callable[Seq[String]] {
+          def call(): Seq[String] = {
+            start.await()
+            OrcMeta.stripeStats(spark, f).collect().map(_.toString).toSeq
+          }
+        }))
+      start.countDown()
+      val answers = calls.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+      assert(answers.distinct.size == 1 && answers.head.nonEmpty)
+    } finally pool.shutdown()
+    assert(tailLoads == loads + 1)
+    assert(stripeRows(f) == 25000L)
+  }
+
+  test("a maxLength prefix open neither serves nor fills a full-length " +
+      "tail") {
+    val f = s"${OrcIo.scratchDir("tail_prefix")}/two.orc"
+    val flushed = OrcFixtures.longs(f, 3000, flushAfter = 1000)
+    def prefixRows() =
+      OrcMeta.withReader(f, maxLength = flushed)(_.getNumberOfRows)
+    def footerRows() =
+      OrcMeta.fileMeta(spark, f).as[OrcMeta.FileMeta].head().rows
+    val loads = tailLoads
+    assert(prefixRows() == 1000L)
+    assert(tailLoads == loads)      // the prefix open cached nothing
+    assert(footerRows() == 3000L)   // so the footer call loads the full tail
+    assert(tailLoads == loads + 1)
+    assert(prefixRows() == 1000L)   // and the prefix open does not use it
+  }
+
+  test("driver path and job path give the same rows on every footer " +
+      "surface") {
+    val t = s"${OrcIo.scratchDir("tail_paths")}/t"
+    Tables.load(spark, sfDir, "nation").write.partitionBy("n_regionkey")
+      .orc(t)
+    OrcMeta.writeMetadataFile(s"$t/_acid_stats.orc", Map("k" -> "v"))
+    val names = new java.io.File(t).list().toSet
+    assert(Seq("_SUCCESS", "_acid_stats.orc").forall(names.contains))
+    assert(new java.io.File(s"$t/n_regionkey=0").list()
+      .exists(n => n.startsWith(".") && n.endsWith(".crc")))
+    assert(OrcMeta.dataFiles(spark, t).size == 5)
+    def surfaces(): Seq[(String, Seq[String])] = {
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toString).toSeq.sorted
+      Seq(
+        "stripes" -> rows(OrcMeta.stripes(spark, t)),
+        "columnStats" -> rows(OrcMeta.columnStats(spark, t)),
+        "stripeStats" -> rows(OrcMeta.stripeStats(spark, t)),
+        "rowGroupIndex" -> rows(OrcMeta.rowGroupIndex(spark, t)),
+        "stripeEncodings" -> rows(OrcMeta.stripeEncodings(spark, t)),
+        "fileMeta" -> rows(OrcMeta.fileMeta(spark, t)),
+        "userMetadata" -> rows(OrcMeta.userMetadata(spark, t)),
+        "memoryEstimate" -> rows(OrcMeta.memoryEstimate(spark, t)),
+        "typedColumnStats" ->
+          OrcMeta.typedColumnStats(spark, t).map(_.toString).sorted,
+        "statsOnlyColumnStats" ->
+          rows(graft.operators.Stats.statsOnlyColumnStats(spark, t)),
+        "statsOnlyCount" ->
+          Seq(graft.operators.Stats.statsOnlyCount(spark, t).toString),
+        "rawDataSize" ->
+          Seq(graft.operators.Stats.rawDataSize(spark, t).toString))
+    }
+    val threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val onDriver = surfaces()
+    val inJob =
+      try { spark.conf.set(threshold, "0"); surfaces() }
+      finally spark.conf.unset(threshold)
+    onDriver.zip(inJob).foreach { case ((surface, d), (_, j)) =>
+      assert(d.nonEmpty, surface)
+      assert(d == j, surface)
+    }
+  }
+
+  test("footer calls on a small dataset start no Spark job") {
+    import graft.operators.{Acid, Stats}
+    val dir = OrcIo.scratchDir("tail_nojob")
+    val (t, delta) = (s"$dir/t", s"$dir/delta_1_1")
+    OrcIo.write(Tables.load(spark, sfDir, "nation").repartition(3), t)
+    Acid.writeDelta(Seq((Acid.OpInsert, 1L, 0, 1L, 1L))
+      .toDF("operation", "originalTransaction", "bucket", "rowId",
+        "currentTransaction").withColumn("row", struct(col("rowId"))),
+      delta)
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    // jobs run under `group`, counted once a later marker job is seen:
+    // the listener bus delivers events in order
+    def jobsOf(group: String)(body: => Any): Int = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!groups.contains(s"$group-marker") &&
+        System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains(s"$group-marker"))
+      groups.toArray.count(_ == group)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val footer = jobsOf("footer-driver") {
+        OrcMeta.fileMeta(spark, t).collect()
+        OrcMeta.columnStats(spark, t).collect()
+        OrcMeta.stripeStats(spark, t).collect()
+        OrcMeta.rowGroupIndex(spark, t, Seq("n_nationkey")).collect()
+        assert(Stats.statsOnlyCount(spark, t) == 25L)
+        Stats.statsOnlyColumnStats(spark, t).collect()
+        Stats.rawDataSize(spark, t)
+        assert(Acid.readAcidStats(spark, delta)
+          .contains(Acid.AcidStats(1, 0, 0)))
+      }
+      assert(footer == 0)
+      val threshold =
+        "spark.sql.sources.parallelPartitionDiscovery.threshold"
+      val job = jobsOf("footer-job") {
+        try {
+          spark.conf.set(threshold, "0")
+          assert(Stats.statsOnlyCount(spark, t) == 25L)
+        } finally spark.conf.unset(threshold)
+      }
+      assert(job == 1)
+    } finally sc.removeSparkListener(listener)
+  }
 }
