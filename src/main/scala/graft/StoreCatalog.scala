@@ -50,12 +50,7 @@ object StoreCatalog {
     new java.io.File(dir, "_GRAFT_DONE")
 
   private def freshDir(dir: java.io.File): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(); ()
-    }
-    if (dir.exists()) rm(dir)
+    graft.sources.OrcIo.deleteTree(dir.toString)
     dir.mkdirs(); ()
   }
 

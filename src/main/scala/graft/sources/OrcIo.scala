@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.functions.VectorOps.{foldRound => fr}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
 
 /**
  * Typed columnar write/read surface (SURVEY.md §2.5 W1-W7, §2.1 S1-S5).
@@ -89,12 +90,44 @@ object OrcIo {
       .option("orc.force.positional.evolution", "true")
       .schema(readerSchema).orc(path)
 
-  /** Deterministic scratch dir for round-trip queries (content is
-    * rewritten each run; path is per-process). */
+  /** The directories [[scratchDir]] made in this JVM and has not yet
+    * deleted. */
+  private[graft] val scratchDirs =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  // one shutdown hook deletes them all: `deleteOnExit` would delete
+  // only the empty ones
+  sys.addShutdownHook(deleteScratch(scratchDirs.asScala.toSeq))
+
+  /** Delete directory `dir` and everything beneath it, following no
+    * links; nothing when it does not exist. */
+  private[graft] def deleteTree(dir: String): Unit = {
+    val root = java.nio.file.Paths.get(dir)
+    if (java.nio.file.Files.exists(root)) {
+      val walk = java.nio.file.Files.walk(root)
+      try walk.sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.deleteIfExists(p))
+      finally walk.close()
+    }
+  }
+
+  /** [[deleteTree]] each of `dirs` and forget it. Only directories
+    * [[scratchDir]] made are touched, so durable stores
+    * (`GRAFT_STORE_DIR`) never are. A directory that cannot be deleted
+    * (a file appearing while it is walked) is left and the rest go on. */
+  private[graft] def deleteScratch(dirs: Seq[String]): Unit =
+    dirs.filter(scratchDirs.remove).foreach { d =>
+      try deleteTree(d) catch {
+        case _: java.io.IOException | _: java.io.UncheckedIOException =>
+      }
+    }
+
+  /** A fresh scratch directory for one query's files (path is
+    * per-process), deleted with its contents when the JVM exits. */
   def scratchDir(tag: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_$tag")
-    d.toFile.deleteOnExit()
-    d.toString
+    val d = java.nio.file.Files.createTempDirectory(s"graft_$tag").toString
+    scratchDirs.add(d)
+    d
   }
 
   /**

@@ -68,9 +68,9 @@ object OrcMeta {
   private[graft] def dataFiles(spark: SparkSession, path: String)
       : Seq[String] = listing(spark, path).map(_._1)
 
-  /** [[dataFiles]] with each file's tail key, taken from the listing's
-    * own statuses. */
-  private def listing(spark: SparkSession, path: String)
+  /** [[dataFiles]] with each file's tail key (whose `length` is the
+    * file's byte size), taken from the listing's own statuses. */
+  private[graft] def listing(spark: SparkSession, path: String)
       : Seq[(String, TailKey)] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -6,6 +6,7 @@ import org.apache.orc.{OrcFile, TypeDescription}
 import org.apache.orc.TypeDescription.Category
 import org.apache.hadoop.hive.ql.exec.vector._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.RebaseDateTime
 import org.apache.spark.sql.types._
 
 /**
@@ -76,7 +77,10 @@ object UnionOrc {
       case (lv: LongColumnVector, Category.INT) => lv.vector(r).toInt
       case (lv: LongColumnVector, Category.LONG) => lv.vector(r)
       case (lv: LongColumnVector, Category.DATE) =>
-        java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(lv.vector(r)))
+        // the file holds hybrid-calendar days, as Spark's ORC reader
+        // assumes: rebase them the same way it does
+        java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(
+          RebaseDateTime.rebaseJulianToGregorianDays(lv.vector(r).toInt)))
       case (dv: DoubleColumnVector, Category.FLOAT) => dv.vector(r).toFloat
       case (dv: DoubleColumnVector, Category.DOUBLE) => dv.vector(r)
       case (bv: BytesColumnVector, Category.BINARY) =>
@@ -114,32 +118,42 @@ object UnionOrc {
     }
   }
 
-  /** Schema of an ORC file (unions encoded as tagged structs). A
-    * non-struct root type — legal in ORC, unreadable by stock Spark —
+  /** Spark schema of an ORC schema (unions encoded as tagged structs).
+    * A non-struct root type — legal in ORC, unreadable by stock Spark —
     * becomes a single column named `value`. */
-  def schemaOf(path: String, maxLength: Long = Long.MaxValue): StructType =
-    OrcMeta.withReader(path, maxLength = maxLength) { reader =>
-      toSparkType(reader.getSchema) match {
-        case st: StructType if reader.getSchema.getCategory ==
-          Category.STRUCT => st
-        case other => StructType(Seq(StructField("value", other)))
-      }
+  private def rootSchema(t: TypeDescription): StructType =
+    toSparkType(t) match {
+      case st: StructType if t.getCategory == Category.STRUCT => st
+      case other => StructType(Seq(StructField("value", other)))
     }
+
+  /** Schema of an ORC file ([[rootSchema]]). */
+  def schemaOf(path: String, maxLength: Long = Long.MaxValue): StructType =
+    OrcMeta.withReader(path, maxLength = maxLength)(r =>
+      rootSchema(r.getSchema))
 
   /**
    * Full-fidelity row iterator over one file, usable on driver or
    * executor. Timestamps keep nanosecond precision here; converting
    * into a Spark DataFrame truncates them to microseconds
    * (`TimestampType`'s resolution) — golden-content tests compare at
-   * this layer for that reason.
+   * this layer for that reason. Other values convert as Spark's own
+   * ORC reader converts them, so a DataFrame built from these rows
+   * equals `spark.read.orc` on any file that reader accepts.
    */
-  def localRows(p: String, maxLength: Long = Long.MaxValue): Iterator[Row] = {
+  def localRows(p: String, maxLength: Long = Long.MaxValue): Iterator[Row] =
+    fileRows(p, new Configuration(), maxLength)._2
+
+  /** [[schemaOf]] and [[localRows]] of one file, from one open; driver
+    * callers pass the session's Hadoop `conf`. */
+  private[graft] def fileRows(p: String, conf: Configuration,
+      maxLength: Long = Long.MaxValue): (StructType, Iterator[Row]) = {
     val reader = OrcFile.createReader(new Path(p),
-      OrcFile.readerOptions(new Configuration()).maxLength(maxLength))
+      OrcFile.readerOptions(conf).maxLength(maxLength))
     val fileSchema = reader.getSchema
     val rows = reader.rows()
     val batch = fileSchema.createRowBatch()
-    new Iterator[Row] {
+    rootSchema(fileSchema) -> new Iterator[Row] {
       private var i = 0
       private var exhausted = false
       private def advance(): Unit =

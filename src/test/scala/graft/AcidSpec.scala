@@ -234,7 +234,7 @@ class AcidSpec extends SparkSpec {
     // one minor-compacted range delta_2_4 holding txns 2, 3, 4
     eventsDf(Seq(
       event(Acid.OpUpdate, 1, 1L, 2L, 11.0),
-      event(Acid.OpUpdate, 1, 2L, 3L, 31.0),
+      event(Acid.OpUpdate, 2, 2L, 3L, 31.0),
       event(Acid.OpUpdate, 1, 1L, 4L, 12.0)))
       .write.orc(s"$dir/t/delta_2_4")
     // restore to txn 3: the (1, 3] slice of the range is part of the
@@ -629,5 +629,207 @@ class AcidSpec extends SparkSpec {
     Acid.majorCompact(spark, s"$dir/t")
     assert(dirsOf(s"$dir/t") == Set("base_2", "_tmp_base_9",
       ".purged_old_delta_3", ".purge_tmp_delta_4"))
+  }
+
+  /** `read` on both of readTable's paths: the driver path (the default
+    * `spark.sql.autoBroadcastJoinThreshold`) and the window path (`-1`).
+    * Their rows must be equal. The driver path's plan must hold no
+    * Window, and the window path's must hold one when `windowed` (a
+    * table with visible deltas). Returns the rows, sorted by the first
+    * column. */
+  private def bothPaths(windowed: Boolean = true)(
+      read: => org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.Row] = {
+    def run() = {
+      val df = read
+      (df.collect().toSeq.sortBy(r => (r.getLong(0), r.toString)),
+        df.queryExecution.executedPlan.toString)
+    }
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val (driver, driverPlan) = run()
+    val (window, windowPlan) =
+      try { spark.conf.set(key, "-1"); run() } finally spark.conf.unset(key)
+    assert(driver == window)
+    assert(!driverPlan.contains("Window"), driverPlan)
+    assert(windowPlan.contains("Window") == windowed, windowPlan)
+    driver
+  }
+
+  private def pairs(rows: Seq[org.apache.spark.sql.Row]) =
+    rows.map(r => r.getLong(0) -> r.getDouble(1))
+
+  test("readTable's driver path and window path give equal rows") {
+    val dir = graft.sources.OrcIo.scratchDir("acid_paths")
+    def table(name: String, base: Seq[(Long, Double)], baseTxn: Long = 1L)(
+        deltas: (String, Seq[(Int, Long, Int, Long, Long, Double)])*)
+        : String = {
+      val t = s"$dir/$name"
+      base.toDF("id", "v").write.orc(s"$t/base_$baseTxn")
+      deltas.foreach { case (d, evs) => eventsDf(evs).write.orc(s"$t/$d") }
+      t
+    }
+    def read(t: String, asOf: Option[Long] = None, windowed: Boolean = true) =
+      pairs(bothPaths(windowed)(Acid.readTable(spark, t, asOf = asOf)))
+    val (ins, upd, del) = (Acid.OpInsert, Acid.OpUpdate, Acid.OpDelete)
+    // a straddling delta_A_B: its events ≤ the base txn are shadowed
+    val straddle = table("straddle", Seq(1L -> 10.0, 2L -> 30.0), 3L)(
+      "delta_2_4" -> Seq((upd, 3L, 1, 1L, 3L, 99.0), (upd, 3L, 2, 2L, 3L, 77.0),
+        (upd, 3L, 1, 1L, 4L, 44.0)))
+    assert(read(straddle) == Seq(1L -> 44.0, 2L -> 30.0))
+    // snapshots 1–3, before and after minor compaction
+    val asOf = table("asof", Seq(1L -> 10.0, 2L -> 30.0))(
+      "delta_2" -> Seq(event(upd, 1, 1L, 2L, 11.0)),
+      "delta_3" -> Seq(event(del, 2, 2L, 3L, 0.0), event(ins, 3, 3L, 3L, 50.0)))
+    val snapshots = Map(1L -> Seq(1L -> 10.0, 2L -> 30.0),
+      2L -> Seq(1L -> 11.0, 2L -> 30.0), 3L -> Seq(1L -> 11.0, 3L -> 50.0))
+    snapshots.foreach { case (t, want) =>
+      assert(read(asOf, Some(t), windowed = t > 1L) == want, t)
+    }
+    Acid.minorCompact(spark, asOf)
+    Seq(2L, 3L).foreach(t => assert(read(asOf, Some(t)) == snapshots(t), t))
+    // a minor-compacted insert→delete chain folds to the lone delete
+    val chain = table("chain", Seq(1L -> 10.0, 2L -> 30.0))(
+      "delta_2" -> Seq(event(ins, 1, 5L, 2L, 70.0), event(upd, 1, 1L, 2L, 12.0)),
+      "delta_3" -> Seq(event(del, 1, 5L, 3L, 0.0)))
+    Acid.minorCompact(spark, chain)
+    assert(read(chain) == Seq(1L -> 12.0, 2L -> 30.0))
+    // an insert under a new originalTransaction is a new row, even on
+    // a rowId the base holds
+    val fresh = table("fresh", Seq(1L -> 10.0, 2L -> 30.0))(
+      "delta_2" -> Seq((ins, 2L, 1, 1L, 2L, 15.0)))
+    assert(read(fresh) == Seq(1L -> 10.0, 1L -> 15.0, 2L -> 30.0))
+    // an event whose bucket is not rowId % 4 does not key a base row
+    val bucket = table("bucket", Seq(1L -> 10.0, 2L -> 30.0))(
+      "delta_2" -> Seq((upd, 1L, 3, 1L, 2L, 16.0)))
+    assert(read(bucket) == Seq(1L -> 10.0, 1L -> 16.0, 2L -> 30.0))
+    // two events on one key at one txn: the higher operation wins, in
+    // either order
+    val ties = table("ties", Seq(1L -> 10.0, 2L -> 30.0, 3L -> 40.0))(
+      "delta_2" -> Seq(event(upd, 1, 1L, 2L, 11.0), event(del, 1, 1L, 2L, 0.0),
+        event(del, 2, 2L, 2L, 0.0), event(upd, 2, 2L, 2L, 21.0),
+        event(ins, 3, 3L, 2L, 41.0), event(upd, 3, 3L, 2L, 42.0)))
+    assert(read(ties) == Seq(3L -> 42.0))
+    // no visible delta: the base as it is
+    val folded = table("folded", Seq(1L -> 10.0), 3L)(
+      "delta_2" -> Seq(event(upd, 1, 1L, 2L, 99.0)))
+    assert(read(folded, windowed = false) == Seq(1L -> 10.0))
+  }
+
+  test("readTable resolves on the driver only up to driverMergeLimit: " +
+      "the measured cap, lowered to the broadcast threshold") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    def limitAt(v: String) =
+      try { spark.conf.set(key, v); Acid.driverMergeLimit(spark) }
+      finally spark.conf.unset(key)
+    assert(Acid.driverMergeLimit(spark) == Acid.DriverMergeMaxBytes)
+    assert(limitAt("1g") == Acid.DriverMergeMaxBytes)
+    assert(limitAt("1000") == 1000L && limitAt("-1") == -1L)
+    // a delta set just over the cap takes the window path by default
+    val dir = graft.sources.OrcIo.scratchDir("acid_cut")
+    (1L to 100L).map(i => (i, 1.0)).toDF("id", "v")
+      .write.orc(s"$dir/t/base_1")
+    spark.range(1, 40001).select(lit(Acid.OpUpdate).as("operation"),
+      lit(1L).as("originalTransaction"), (col("id") % 4).cast("int")
+        .as("bucket"), col("id").as("rowId"),
+      lit(2L).as("currentTransaction"),
+      struct(col("id"), rand(11).as("v")).as("row"))
+      .write.orc(s"$dir/t/delta_2")
+    val bytes = graft.sources.OrcMeta.listing(spark, s"$dir/t/delta_2")
+      .map(_._2.length).sum
+    assert(bytes > Acid.DriverMergeMaxBytes, bytes)
+    val df = Acid.readTable(spark, s"$dir/t")
+      .agg(count(lit(1)), sum(col("id")))
+    assert(df.queryExecution.executedPlan.toString.contains("Window"))
+    assert(df.collect()(0) ==
+      org.apache.spark.sql.Row(40000L, 40000L * 40001L / 2))
+  }
+
+  test("readTable keeps base rows with a null or repeated rowId on the " +
+      "driver path, where the window keeps one per key") {
+    val dir = graft.sources.OrcIo.scratchDir("acid_basekeys")
+    Seq((None, 5.0), (Some(2L), 20.0), (Some(2L), 21.0), (Some(1L), 10.0))
+      .toDF("id", "v").write.orc(s"$dir/t/base_1")
+    eventsDf(Seq(event(Acid.OpUpdate, 1, 1L, 2L, 11.0)))
+      .write.orc(s"$dir/t/delta_2")
+    def rows() = Acid.readTable(spark, s"$dir/t").collect()
+      .map(r => Option(r.get(0)).map(_.asInstanceOf[Long]) -> r.getDouble(1))
+      .sortBy(_.toString).toSeq
+    assert(rows() == Seq(None -> 5.0, Some(1L) -> 11.0, Some(2L) -> 20.0,
+      Some(2L) -> 21.0))
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val window = try { spark.conf.set(key, "-1"); rows() }
+      finally spark.conf.unset(key)
+    assert(window.size == 3, window)
+    assert(window.contains(None -> 5.0) && window.contains(Some(1L) -> 11.0))
+    assert(window.count(_._1.contains(2L)) == 1, window)
+  }
+
+  test("every payload type reads the same on both readTable paths") {
+    val dir = graft.sources.OrcIo.scratchDir("acid_payload")
+    val cols = Seq("id", "i", "b", "d", "dec", "s", "bin", "dt", "ts", "arr",
+      "m", "st")
+    def rows(sql: String) = spark.sql(sql).toDF(cols: _*)
+    // ids 1–4: plain values
+    rows("""select id, cast(id as int), id * 1000000007, id / 3.0d,
+      cast(id * 1.25 as decimal(38,10)), concat('s', id),
+      cast(concat('b', id) as binary), date_add(date'2000-01-01', cast(id as int)),
+      timestamp'2001-02-03 04:05:06.123456' + make_interval(0, 0, 0, cast(id as int)),
+      array(cast(id as int), null), map('k', cast(id as int)),
+      named_struct('a', cast(id as int), 'n', named_struct('c', concat('n', id)))
+      from range(1, 5)""").write.orc(s"$dir/t/base_1")
+    // updates of 1–3 and an insert of 5 carry the edge values; 3 is
+    // all nulls; 4 is deleted
+    val edge = rows("""select * from values
+      (1L, 2147483647, 9223372036854775807L, -1.5e300d,
+       cast('1234567890123456789012345678.0123456789' as decimal(38,10)),
+       'ünïcødé', X'00FF7F', date'1500-01-01',
+       timestamp'1850-03-04 05:06:07.123456', array(1, 2, 3),
+       map('a', 1, 'b', 2), named_struct('a', 7, 'n', named_struct('c', 'x'))),
+      (2L, -2147483648, -9223372036854775808L, cast('NaN' as double),
+       cast('-0.0000000001' as decimal(38,10)), '', X'', date'2100-01-01',
+       timestamp'2040-03-04 05:06:07.654321', array(), map(),
+       named_struct('a', null, 'n', named_struct('c', null))),
+      (3L, null, null, null, null, null, null, null, null, null, null, null),
+      (5L, 0, 0L, 0.0d, cast('0' as decimal(38,10)), 's5', X'05',
+       date'1500-01-01', timestamp'2040-12-31 23:59:59.999999',
+       array(null), map('z', null), named_struct('a', 5, 'n', null))""")
+    def asEvents(df: org.apache.spark.sql.DataFrame, op: Int, txn: Long) =
+      df.select(lit(op).as("operation"), lit(1L).as("originalTransaction"),
+        (col("id") % 4).cast("int").as("bucket"), col("id").as("rowId"),
+        lit(txn).as("currentTransaction"), struct(cols.map(col): _*).as("row"))
+    asEvents(edge.filter(col("id") =!= 5L), Acid.OpUpdate, 2L)
+      .unionByName(asEvents(edge.filter(col("id") === 5L), Acid.OpInsert, 2L))
+      .write.orc(s"$dir/t/delta_2")
+    asEvents(spark.read.orc(s"$dir/t/base_1").filter(col("id") === 4L),
+      Acid.OpDelete, 3L).write.orc(s"$dir/t/delta_3")
+    val got = bothPaths()(Acid.readTable(spark, s"$dir/t"))
+    assert(got.map(_.getLong(0)) == Seq(1L, 2L, 3L, 5L))
+    assert(got.map(r => Option(r.getDate(7)).map(_.toString)) ==
+      Seq(Some("1500-01-01"), Some("2100-01-01"), None, Some("1500-01-01")))
+    assert(got.map(r => Option(r.getTimestamp(8))) == Seq(
+      "1850-03-04 05:06:07.123456", "2040-03-04 05:06:07.654321", null,
+      "2040-12-31 23:59:59.999999").map(t =>
+        Option(t).map(java.sql.Timestamp.valueOf)))
+    assert(got.head.getDecimal(4) ==
+      new java.math.BigDecimal("1234567890123456789012345678.0123456789"))
+    assert(got(2).toSeq.tail.forall(_ == null), got(2))
+  }
+
+  test("readTable on a small table starts no Spark job, and a count " +
+      "over it neither windows nor hash-shuffles") {
+    val dir = graft.sources.OrcIo.scratchDir("acid_nojob")
+    (1L to 100L).map(i => (i, i * 1.0)).toDF("id", "v")
+      .write.orc(s"$dir/t/base_1")
+    eventsDf((1L to 10L).map(i => event(Acid.OpUpdate, (i % 4).toInt, i, 2L, -1.0)))
+      .write.orc(s"$dir/t/delta_2")
+    eventsDf((5L to 20L).map(i => event(Acid.OpDelete, (i % 4).toInt, i, 3L, 0.0)))
+      .write.orc(s"$dir/t/delta_3")
+    var df: org.apache.spark.sql.DataFrame = null
+    assert(jobsIn("mor-driver") { df = Acid.readTable(spark, s"$dir/t") } == 0)
+    val counted = df.agg(count(lit(1)), sum(col("v")))
+    val plan = counted.queryExecution.executedPlan.toString
+    assert(!plan.contains("Window") && !plan.contains("hashpartitioning"), plan)
+    val r = counted.collect()(0)
+    // 1–4 updated to -1, 5–20 deleted, 21–100 untouched
+    assert(r.getLong(0) == 84L && r.getDouble(1) == -4.0 + (21 to 100).sum)
   }
 }

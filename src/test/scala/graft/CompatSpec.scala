@@ -77,6 +77,23 @@ class CompatSpec extends SparkSpec {
     assert(mx >= "2038", mx)
   }
 
+  test("pre-1900 / post-2038 date twins read back their written values") {
+    import graft.sources.OrcIo
+    val twins = OrcIo.scratchDir("compat_dates")
+    Seq(1900, 2038).foreach { era =>
+      val want = OrcFixtures.dateRows(era)
+      val df = spark.read.orc(OrcFixtures.datesFile(twins, era))
+      assert(df.count() == want.size.toLong, era)
+      val got = df.collect().map(r =>
+        r.getDate(1).toLocalDate -> r.getTimestamp(0)).toSeq
+      assert(got == want, era)
+      val mm = df.agg(min(col("date")), max(col("date"))).head()
+      assert(mm.getDate(0).toLocalDate == want.head._1 &&
+        mm.getDate(1).toLocalDate == want.last._1, mm)
+    }
+    assert(OrcFixtures.dateRows(2038).last._1.getYear > 2038)
+  }
+
   test("union-typed file reads as struct encoding (tag + fields)") {
     // Spark's own ORC reader rejects uniontype schemas; the engine's
     // UnionOrc reader (SURVEY.md §7.4) scans them with the tagged-
@@ -95,6 +112,31 @@ class CompatSpec extends SparkSpec {
       ((c("union.tag") === 0 && c("union.field1").isNotNull) ||
        (c("union.tag") === 1 && c("union.field0").isNotNull))).count()
     assert(bad == 0L, s"$bad rows break the one-field-per-tag invariant")
+  }
+
+  test("union-typed twin reads as struct encoding with its written " +
+      "values") {
+    import org.apache.spark.sql.Row
+    val f = OrcFixtures.unionFile(graft.sources.OrcIo.scratchDir("compat_union"))
+    val df = graft.sources.UnionOrc.read(spark, Seq(f))
+    val st = df.schema("union").dataType
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    assert(st.fieldNames.toSeq == Seq("tag", "field0", "field1"),
+      st.treeString)
+    val want = OrcFixtures.unionRows.map { x =>
+      // the DataFrame keeps microseconds
+      val ts = new java.sql.Timestamp(x.ts.getTime)
+      ts.setNanos(x.ts.getNanos / 1000 * 1000)
+      Row(ts, x.tag match {
+        case -1 => null
+        case 0 => Row(0.toByte, x.value, null)
+        case _ => Row(1.toByte, null, x.value)
+      })
+    }
+    assert(df.collect().toSeq == want)
+    // the full-fidelity layer keeps the nanoseconds
+    assert(graft.sources.UnionOrc.localRows(f).map(_.getTimestamp(0)).toSeq ==
+      OrcFixtures.unionRows.map(_.ts))
   }
 
   test("edge files: empty reads as 0 rows; future version is refused") {
@@ -122,6 +164,22 @@ class CompatSpec extends SparkSpec {
       .getYear).toSet
     // reference writes timestamps spanning 1995-2037 in this file
     assert(years.contains(2037) && years.exists(_ <= 1996), years)
+  }
+
+  test("timestamp twin: non-struct root + writer-tz values read back") {
+    import graft.sources.{OrcIo, UnionOrc}
+    val f = OrcFixtures.timestampFile(OrcIo.scratchDir("compat_ts"),
+      "America/Los_Angeles")
+    // stock Spark cannot analyze a bare `timestamp` root; the values
+    // read back as the wall-clock times the writer was given
+    val want = OrcFixtures.timestampWallClocks.map(java.sql.Timestamp.valueOf)
+    assert(UnionOrc.localRows(f).map(_.getTimestamp(0)).toSeq == want :+ null)
+    val df = UnionOrc.read(spark, Seq(f))
+    assert(df.schema.fieldNames.toSeq == Seq("value"))
+    assert(df.collect().map(_.getTimestamp(0)).toSeq == want.map { t =>
+      val us = new java.sql.Timestamp(t.getTime)
+      us.setNanos(t.getNanos / 1000 * 1000); us
+    } :+ null)
   }
 
   test("seek/projection files read with column pruning") {

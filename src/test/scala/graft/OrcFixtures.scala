@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.hadoop.hive.common.`type`.HiveDecimal
 import org.apache.hadoop.hive.ql.exec.vector.{BytesColumnVector,
   ColumnVector, DecimalColumnVector, DoubleColumnVector, LongColumnVector,
-  TimestampColumnVector}
+  TimestampColumnVector, UnionColumnVector}
 import org.apache.orc.{OrcFile, TypeDescription}
 
 /**
@@ -127,5 +127,93 @@ object OrcFixtures {
         cols(9).asInstanceOf[DecimalColumnVector]
           .set(r, HiveDecimal.create(x.dec))
         cols(10).asInstanceOf[BytesColumnVector].setVal(r, x.bin)
+    }
+
+  /** One input row of [[unionFile]]: a timestamp and a union that holds
+    * an int (tag 0) or a string (tag 1), or is null. */
+  case class UnionRow(ts: java.sql.Timestamp, tag: Int, value: Any)
+
+  val unionRows: IndexedSeq[UnionRow] = (0 until 3000).map { k =>
+    val ts = new java.sql.Timestamp(1000000000000L + k * 86400000L)
+    ts.setNanos(k * 1001 % 1000000000)
+    k % 5 match {
+      case 0 => UnionRow(ts, -1, null)
+      case 1 | 3 => UnionRow(ts, 0, k * 7 - 3000)
+      case 2 => UnionRow(ts, 1, if (k % 3 == 0) null else s"u$k")
+      case _ => UnionRow(ts, 1, "é" * (k % 4))
+    }
+  }
+
+  /** Twin of `TestOrcFile.testUnionAndTimestamp.orc`: a timestamp column
+    * and a `uniontype<int,string>` column. Rows with tag −1 hold a null
+    * union; a union may also hold a null under a valid tag. */
+  def unionFile(dir: String): String =
+    writeOrc(s"$dir/union.orc",
+        "struct<time:timestamp,union:uniontype<int,string>>",
+        unionRows.size, stride = 1000) { (cols, r, i) =>
+      val x = unionRows(i)
+      cols(0).asInstanceOf[TimestampColumnVector].set(r, x.ts)
+      val u = cols(1).asInstanceOf[UnionColumnVector]
+      if (x.tag < 0) { u.noNulls = false; u.isNull(r) = true }
+      else {
+        u.isNull(r) = false
+        u.tags(r) = x.tag
+        val f = u.fields(x.tag)
+        if (x.value == null) { f.noNulls = false; f.isNull(r) = true }
+        else {
+          f.isNull(r) = false
+          x.value match {
+            case n: Int => f.asInstanceOf[LongColumnVector].vector(r) = n
+            case v: String => f.asInstanceOf[BytesColumnVector]
+              .setVal(r, v.getBytes("UTF-8"))
+          }
+        }
+      }
+    }
+
+  /** Wall-clock times of [[timestampFile]], 1995 to 2037, with
+    * nanoseconds. */
+  val timestampWallClocks: IndexedSeq[String] = IndexedSeq(
+    "1995-01-01 00:00:00.000000001", "1996-02-29 12:34:56.123456789",
+    "1999-12-31 23:59:59.999999999", "2000-03-12 15:00:00.09",
+    "2003-06-15 01:02:03.4", "2008-10-01 08:00:00",
+    "2014-03-09 01:30:00.5", "2019-11-03 01:30:00.000001",
+    "2024-07-04 18:00:00.25", "2029-01-01 00:00:00.000000999",
+    "2033-05-18 03:33:20", "2037-12-31 23:59:59.123")
+
+  /** Twin of `TestOrcFile.testTimestamp.orc`: a file whose root type is
+    * a bare `timestamp`, written in the writer time zone `zone` (the
+    * JVM default while it writes; a DST zone exercises the reader's
+    * writer-to-reader zone shift). The rows are
+    * [[timestampWallClocks]] then one null. */
+  def timestampFile(dir: String, zone: String): String = {
+    val prior = java.util.TimeZone.getDefault
+    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone(zone))
+    try writeOrc(s"$dir/timestamp.orc", "timestamp",
+        timestampWallClocks.size + 1, stride = 1000) { (cols, r, i) =>
+      val c = cols(0).asInstanceOf[TimestampColumnVector]
+      if (i == timestampWallClocks.size) { c.noNulls = false; c.isNull(r) = true }
+      else c.set(r, java.sql.Timestamp.valueOf(timestampWallClocks(i)))
+    } finally java.util.TimeZone.setDefault(prior)
+  }
+
+  /** The dates of [[datesFile]] `era` (1900 or 2038): one every 11
+    * days from the era's first day, with a timestamp at the same day
+    * and a varying time. */
+  def dateRows(era: Int): IndexedSeq[(java.time.LocalDate, java.sql.Timestamp)] =
+    (0 until 5000).map { k =>
+      val d = java.time.LocalDate.of(era, 1, 1).plusDays(k * 11L)
+      d -> java.sql.Timestamp.valueOf(
+        d.atTime(k % 24, k % 60, k % 60, k * 1000 % 1000000000))
+    }
+
+  /** Twin of `TestOrcFile.testDate1900.orc` and `testDate2038.orc`:
+    * `struct<time:timestamp,date:date>` over [[dateRows]]. */
+  def datesFile(dir: String, era: Int): String =
+    writeOrc(s"$dir/dates-$era.orc", "struct<time:timestamp,date:date>",
+        dateRows(era).size, stride = 1000) { (cols, r, i) =>
+      val (d, ts) = dateRows(era)(i)
+      cols(0).asInstanceOf[TimestampColumnVector].set(r, ts)
+      cols(1).asInstanceOf[LongColumnVector].vector(r) = d.toEpochDay
     }
 }

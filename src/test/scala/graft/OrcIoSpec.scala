@@ -480,51 +480,48 @@ class OrcIoSpec extends SparkSpec {
       .toDF("operation", "originalTransaction", "bucket", "rowId",
         "currentTransaction").withColumn("row", struct(col("rowId"))),
       delta)
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
+    val footer = jobsIn("footer-driver") {
+      OrcMeta.fileMeta(spark, t).collect()
+      OrcMeta.columnStats(spark, t).collect()
+      OrcMeta.stripeStats(spark, t).collect()
+      OrcMeta.rowGroupIndex(spark, t, Seq("n_nationkey")).collect()
+      assert(Stats.statsOnlyCount(spark, t) == 25L)
+      Stats.statsOnlyColumnStats(spark, t).collect()
+      Stats.rawDataSize(spark, t)
+      assert(Acid.readAcidStats(spark, delta)
+        .contains(Acid.AcidStats(1, 0, 0)))
     }
-    // jobs run under `group`, counted once a later marker job is seen:
-    // the listener bus delivers events in order
-    def jobsOf(group: String)(body: => Any): Int = {
-      sc.setJobGroup(group, group)
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-marker", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!groups.contains(s"$group-marker") &&
-        System.nanoTime() < deadline) Thread.sleep(10)
-      assert(groups.contains(s"$group-marker"))
-      groups.toArray.count(_ == group)
-    }
-    sc.addSparkListener(listener)
-    try {
-      val footer = jobsOf("footer-driver") {
-        OrcMeta.fileMeta(spark, t).collect()
-        OrcMeta.columnStats(spark, t).collect()
-        OrcMeta.stripeStats(spark, t).collect()
-        OrcMeta.rowGroupIndex(spark, t, Seq("n_nationkey")).collect()
+    assert(footer == 0)
+    val threshold =
+      "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val job = jobsIn("footer-job") {
+      try {
+        spark.conf.set(threshold, "0")
         assert(Stats.statsOnlyCount(spark, t) == 25L)
-        Stats.statsOnlyColumnStats(spark, t).collect()
-        Stats.rawDataSize(spark, t)
-        assert(Acid.readAcidStats(spark, delta)
-          .contains(Acid.AcidStats(1, 0, 0)))
-      }
-      assert(footer == 0)
-      val threshold =
-        "spark.sql.sources.parallelPartitionDiscovery.threshold"
-      val job = jobsOf("footer-job") {
-        try {
-          spark.conf.set(threshold, "0")
-          assert(Stats.statsOnlyCount(spark, t) == 25L)
-        } finally spark.conf.unset(threshold)
-      }
-      assert(job == 1)
-    } finally sc.removeSparkListener(listener)
+      } finally spark.conf.unset(threshold)
+    }
+    assert(job == 1)
+  }
+
+  test("scratch directories are deleted with their contents, and no " +
+      "other directory is") {
+    import java.nio.file.{Files, Paths}
+    val dir = OrcIo.scratchDir("cleanup")
+    OrcIo.write(Tables.load(spark, sfDir, "nation").repartition(2),
+      s"$dir/t/part=1")
+    Files.createDirectories(Paths.get(s"$dir/a/b/c"))
+    Files.write(Paths.get(s"$dir/a/b/c/leaf.txt"), Array[Byte](1, 2))
+    // a directory scratchDir did not make, as a GRAFT_STORE_DIR store
+    val store = Files.createTempDirectory("graft_store_root")
+    Files.write(store.resolve("_GRAFT_DONE"), Array[Byte]())
+    try {
+      assert(OrcIo.scratchDirs.contains(dir))
+      OrcIo.deleteScratch(Seq(dir, store.toString))
+      assert(!Files.exists(Paths.get(dir)))
+      assert(!OrcIo.scratchDirs.contains(dir))
+      assert(Files.exists(store.resolve("_GRAFT_DONE")))
+    } finally {
+      Files.delete(store.resolve("_GRAFT_DONE")); Files.delete(store)
+    }
   }
 }

@@ -19,4 +19,32 @@ object SparkSpec {
 trait SparkSpec extends AnyFunSuite {
   def spark: SparkSession = SparkSpec.spark
   def sfDir: String = SparkSpec.sfDir
+
+  /** The number of Spark jobs `body` starts on this thread, counted by
+    * job group: `body` runs under `group`, and a marker job after it
+    * shows when the listener has seen them all (the listener bus
+    * delivers events in order). */
+  def jobsIn(group: String)(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!groups.contains(s"$group-marker") &&
+        System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains(s"$group-marker"))
+      groups.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
 }
