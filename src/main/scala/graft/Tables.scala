@@ -89,6 +89,7 @@ object GraftSession {
       .master(master)
       .appName("graft")
       .withExtensions(graft.functions.VectorKernels.register)
+      .withExtensions(graft.functions.KeyParams.register)
       // 32 matches local core count; on a real cluster this would be
       // ~2-3x total executor cores, set per deployment.
       .config("spark.sql.shuffle.partitions",

@@ -18,8 +18,12 @@ import scala.jdk.CollectionConverters._
  *
  * Scale: `write` produces one file per task — on a 1000-executor job the
  * natural parallel layout; `read` split-plans by stripe ranges
- * (SURVEY.md S5) via Spark's FilePartition machinery, so a 100 TB
- * directory fans out without driver-side work.
+ * (SURVEY.md S5) via Spark's FilePartition machinery. Planning is not
+ * free of driver work: the driver lists the directory (in parallel
+ * above `spark.sql.sources.parallelPartitionDiscovery.threshold`
+ * paths) and cuts each file into splits by size. It reads no footer,
+ * so every file gets a task even when its statistics refute the
+ * filter; ORC skips stripes and row groups inside the task.
  */
 object OrcIo {
 

@@ -65,6 +65,36 @@ class CompatSpec extends SparkSpec {
     assert(se.filter(col("userid") === 2L).count() > 0)
   }
 
+  test("bloom-filter and split-elimination twins scan with filters") {
+    val twins = graft.sources.OrcIo.scratchDir("compat_filters")
+    val rows = OrcFixtures.colNRows
+    val bloom = spark.read.orc(OrcFixtures.colN(twins))
+    assert(bloom.count() == rows.size.toLong)
+    val present = rows(1).i
+    assert(bloom.filter(col("_col2") === present).count() ==
+      rows.count(_.i == present).toLong)
+    assert(bloom.filter(col("_col2") === OrcFixtures.colNAbsentKey)
+      .count() == 0L)
+    val se = spark.read.orc(OrcFixtures.splitElim(twins))
+    assert(se.count() == 25000L)
+    // a pushed filter over the stats-skippable column still answers
+    assert(se.filter(col("userid") === 2L).count() == 1L)
+  }
+
+  test("decimal twin: values and aggregates") {
+    val want = OrcFixtures.decimalValues
+    val df = spark.read.orc(
+      OrcFixtures.decimalFile(graft.sources.OrcIo.scratchDir("compat_decimal")))
+    val got = df.collect().map(_.getDecimal(0)).toSeq
+    assert(got.size == 6000)
+    got.zip(want).foreach { case (g, w) =>
+      assert(if (w == null) g == null else g.compareTo(w) == 0, s"$g != $w")
+    }
+    val s = df.agg(sum(col("_col0"))).head().getDecimal(0)
+    assert(s.compareTo(want.filter(_ != null)
+      .reduce((a, b) => a.add(b))) == 0, s)
+  }
+
   test("pre-1900 / post-2038 dates survive the timestamp path") {
     val d1900 = spark.read.orc(s"$dir/TestOrcFile.testDate1900.orc")
     val d2038 = spark.read.orc(s"$dir/TestOrcFile.testDate2038.orc")

@@ -216,4 +216,23 @@ object OrcFixtures {
       cols(0).asInstanceOf[TimestampColumnVector].set(r, ts)
       cols(1).asInstanceOf[LongColumnVector].vector(r) = d.toEpochDay
     }
+
+  /** The `_col0` values of [[decimalFile]]: 6,000 decimals of scale 5,
+    * negative and positive, every 7th one null. */
+  val decimalValues: IndexedSeq[java.math.BigDecimal] = (0 until 6000).map { k =>
+    if (k % 7 == 3) null
+    else java.math.BigDecimal.valueOf(k * 7919L % 2000003L - 1000000L, 5)
+  }
+
+  /** Twin of `decimal.orc`: one `_col0 decimal(10,5)` column (a writer
+    * that kept no column names) over [[decimalValues]]. */
+  def decimalFile(dir: String): String =
+    writeOrc(s"$dir/decimal.orc", "struct<_col0:decimal(10,5)>",
+        decimalValues.size, stride = 1000) { (cols, r, i) =>
+      val c = cols(0).asInstanceOf[DecimalColumnVector]
+      decimalValues(i) match {
+        case null => c.noNulls = false; c.isNull(r) = true
+        case v => c.isNull(r) = false; c.set(r, HiveDecimal.create(v))
+      }
+    }
 }
