@@ -2,10 +2,25 @@ package graft.operators
 
 import graft.Tables
 import graft.sources.{OrcIo, OrcMeta, UnionOrc}
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID,
+  TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.catalog.HiveTableRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation,
+  LogicalPlan}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  LogicalRelation}
+import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.execution.datasources.v2.orc.OrcTable
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.internal.HiveSerDe
+import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
 
@@ -20,16 +35,21 @@ import scala.jdk.CollectionConverters._
  * Spark-first: the latest event per key wins (the rule is stated once,
  * on [[readTable]]). A table read resolves a small delta set on the
  * driver and passes the base rows through a broadcast key filter, so
- * the base is never shuffled. Larger delta sets, and event frames
- * ([[resolve]], [[minorCompact]], [[changesBetween]]), go through the
+ * the base is never shuffled. A small commit ([[writeDelta]]) and a
+ * small minor compaction ([[minorCompact]]) write their one file on the
+ * driver with Spark's own ORC writer, and the compaction resolves its
+ * events with the same driver resolve as the read. Larger delta sets,
+ * and event frames ([[resolve]], [[changesBetween]]), go through the
  * one window dedup, [[latestPerKey]]: one shuffle on the row key, then
  * a filter. Compaction (the reference's major compaction) rewrites a
  * resolved read.
  *
- * Scale: the driver path holds at most [[driverMergeLimit]] bytes of
- * delta files on the driver. The window partitions by (origTxn,
- * bucket, rowId) — exactly the reference's bucket layout, so skew is
- * bounded by bucket count;
+ * Scale: one cut, [[driverMergeLimit]], bounds what the driver holds
+ * for each of its three users: the delta files a read resolves, the
+ * delta files a minor compaction merges, and the estimated size of a
+ * local frame a commit writes. Above it everything runs as Spark jobs.
+ * The window partitions by (origTxn, bucket, rowId) — exactly the
+ * reference's bucket layout, so skew is bounded by bucket count;
  * delta sets are typically ≪ base so AQE's skew handling plus the
  * bucket key keeps partitions even at 100 TB.
  */
@@ -193,11 +213,25 @@ object Acid {
       .fold(AcidStats(0L, 0L, 0L))(_ + _)
   }
 
+  /** The tallies of a driver-held event set, from its operation codes. */
+  private def countOps(ops: Iterator[Int]): AcidStats =
+    ops.foldLeft(AcidStats(0L, 0L, 0L)) { (s, o) => o match {
+      case OpInsert => s.copy(inserts = s.inserts + 1)
+      case OpUpdate => s.copy(updates = s.updates + 1)
+      case OpDelete => s.copy(deletes = s.deletes + 1)
+      case _ => s
+    }}
+
   private val AcidStatsFile = "_acid_stats.orc"
 
-  private def writeStatsSidecar(outPath: String, stats: AcidStats): Unit =
-    graft.sources.OrcMeta.writeMetadataFile(s"$outPath/$AcidStatsFile",
-      Map(AcidStatsKey -> stats.serialize))
+  /** Write `stats` as the sidecar of `outPath`, on the FileSystem the
+    * session's Hadoop configuration (settings made on the session
+    * included) gives the data files. */
+  private def writeStatsSidecar(spark: SparkSession, outPath: String,
+      stats: AcidStats): Unit =
+    OrcMeta.writeMetadataFile(s"$outPath/$AcidStatsFile",
+      Map(AcidStatsKey -> stats.serialize),
+      spark.sessionState.newHadoopConf())
 
   /** Read back the `hive.acid.stats` entry of a dataset directory from
     * its carrier file; None when the directory has none. */
@@ -228,40 +262,109 @@ object Acid {
     * recording the event tallies under `hive.acid.stats` like the
     * reference's writer (a compacted base carries only inserts). */
   def compact(events: DataFrame, outPath: String): Unit = {
-    val resolved = resolve(events)
-    OrcIo.write(resolved, outPath)
-    // count the written output: counting the resolve plan would
-    // column-prune the event scan (see [[tally]])
-    writeStatsSidecar(outPath, AcidStats(
-      resolved.sparkSession.read.orc(outPath).count(), 0L, 0L))
+    val spark = events.sparkSession
+    OrcIo.write(resolve(events), outPath)
+    // count the written output from its footers: counting the resolve
+    // plan would column-prune the event scan (see [[tally]])
+    writeStatsSidecar(spark, outPath,
+      AcidStats(Stats.statsOnlyCount(spark, outPath), 0L, 0L))
   }
 
   /** Write a delta directory of raw events plus its ACID stats.
     *
-    * The tally here runs as ONE codegen aggregate over the PRE-WRITE
-    * frame: every current caller passes events derived from parquet
-    * tables or an RDD, so the vectorized path is safe (the
-    * [[tally]] row-reader constraint applies only to frames that
-    * SCAN acid-schema ORC files). That invariant is ENFORCED, not just
-    * documented: a frame whose plan reads any ORC source — the natural
-    * input of a future delta rewrite — routes to the full-row
-    * [[tally]] instead. The guard is deliberately coarse (any ORC scan,
-    * acid-schema or not): a false positive only costs the
-    * slower-but-safe tally. */
+    * A commit whose optimized plan is a non-streaming local relation of
+    * at most [[driverMergeLimit]] estimated bytes (a transaction's event
+    * batch built on the driver) is written on the driver as one file
+    * ([[writeOnDriver]]) and tallied from the same rows: no Spark job.
+    *
+    * Any other frame is written by a Spark job, and the tally runs as
+    * ONE codegen aggregate over the PRE-WRITE frame: every current
+    * caller passes events derived from parquet tables or an RDD, so the
+    * vectorized path is safe (the [[tally]] row-reader constraint
+    * applies only to frames that SCAN acid-schema ORC files). That
+    * invariant is ENFORCED, not just documented: a frame whose plan
+    * reads any ORC source ([[readsOrc]]) — the natural input of a
+    * future delta rewrite — routes to the full-row [[tally]] instead.
+    * The guard is deliberately coarse (any ORC scan, acid-schema or
+    * not): a false positive only costs the slower-but-safe tally. */
   def writeDelta(events: DataFrame, outPath: String): Unit = {
-    OrcIo.write(events, outPath)
-    val readsOrc = events.queryExecution.analyzed.toString
-      .toLowerCase(java.util.Locale.ROOT).contains("orc")
-    if (readsOrc) { writeStatsSidecar(outPath, tally(events)); return }
-    val r = events.agg(
-      coalesce(sum(when(col("operation") === OpInsert, 1L)
-        .otherwise(0L)), lit(0L)),
-      coalesce(sum(when(col("operation") === OpUpdate, 1L)
-        .otherwise(0L)), lit(0L)),
-      coalesce(sum(when(col("operation") === OpDelete, 1L)
-        .otherwise(0L)), lit(0L))).collect()(0)
-    writeStatsSidecar(outPath,
-      AcidStats(r.getLong(0), r.getLong(1), r.getLong(2)))
+    val spark = events.sparkSession
+    val stats = events.queryExecution.optimizedPlan match {
+      case local: LocalRelation if !local.isStreaming &&
+          local.stats.sizeInBytes <= driverMergeLimit(spark) =>
+        writeOnDriver(spark, local.schema, local.data.iterator, outPath)
+        val op = local.schema.fieldIndex("operation")
+        val opType = local.schema(op).dataType
+        countOps(local.data.iterator.filterNot(_.isNullAt(op))
+          .map(_.get(op, opType).asInstanceOf[Number].intValue))
+      case _ =>
+        OrcIo.write(events, outPath)
+        if (readsOrc(events.queryExecution.analyzed)) tally(events)
+        else {
+          val r = events.agg(
+            coalesce(sum(when(col("operation") === OpInsert, 1L)
+              .otherwise(0L)), lit(0L)),
+            coalesce(sum(when(col("operation") === OpUpdate, 1L)
+              .otherwise(0L)), lit(0L)),
+            coalesce(sum(when(col("operation") === OpDelete, 1L)
+              .otherwise(0L)), lit(0L))).collect()(0)
+          AcidStats(r.getLong(0), r.getLong(1), r.getLong(2))
+        }
+    }
+    writeStatsSidecar(spark, outPath, stats)
+  }
+
+  /** Whether `plan`, or a subquery in it, reads an ORC source: a file
+    * relation over an ORC file format (Spark's `OrcFileFormat` or
+    * Hive's, both registered as "orc"), an ORC v2 table, or a Hive
+    * table with the ORC serde. */
+  private[graft] def readsOrc(plan: LogicalPlan): Boolean = {
+    val orcSerde = HiveSerDe.sourceToSerDe("orc").flatMap(_.serde)
+    plan.collectWithSubqueries {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation => h.fileFormat match {
+          case f: DataSourceRegister => f.shortName.equalsIgnoreCase("orc")
+          case _ => false
+        }
+        case _ => false
+      }
+      case r: DataSourceV2Relation => r.table.isInstanceOf[OrcTable]
+      case h: HiveTableRelation =>
+        orcSerde.nonEmpty && h.tableMeta.storage.serde == orcSerde
+    }.contains(true)
+  }
+
+  /** Write `rows` of `schema` as the one data file of directory
+    * `outPath`, on the driver, with no Spark job. The file is the one a
+    * one-task [[OrcIo.write]] leaves: Spark's own ORC output writer
+    * (`OrcFileFormat.prepareWrite`, so its Spark-version metadata and
+    * date rebasing too) writes it, with the session's Hadoop
+    * configuration and a default [[OrcIo.write]]'s options. Like that
+    * overwrite it deletes the directory first. The file is staged under
+    * a hidden `_temporary-` name and renamed into place, and `_SUCCESS`
+    * follows; a failed write leaves only the hidden file. */
+  private def writeOnDriver(spark: SparkSession, schema: StructType,
+      rows: Iterator[InternalRow], outPath: String): Unit = {
+    val options = OrcIo.writeOptions()
+    val job = Job.getInstance(
+      spark.sessionState.newHadoopConfWithOptions(options))
+    val factory =
+      new OrcFileFormat().prepareWrite(spark, job, options, schema)
+    val task = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0),
+        0))
+    val dir = new Path(outPath)
+    val fs = dir.getFileSystem(job.getConfiguration)
+    if (fs.exists(dir))
+      require(fs.delete(dir, true), s"cannot overwrite $dir")
+    val name = s"part-00000-${java.util.UUID.randomUUID}-c000" +
+      factory.getFileExtension(task)
+    val staged = new Path(dir, s"_temporary-$name")
+    val w = factory.newInstance(staged.toString, schema, task)
+    try rows.foreach(w.write) finally w.close()
+    require(fs.rename(staged, new Path(dir, name)),
+      s"rename $staged into $dir failed")
+    fs.create(new Path(dir, "_SUCCESS"), true).close()
   }
 
   /** Orders rows lifted to ACID event form — the ONE fixture shape
@@ -335,6 +438,14 @@ object Acid {
    * (origTxn, bucket, rowId) survives, including deletes, which must
    * continue to mask base rows. Output directory is named
    * `delta_<minTxn>_<maxTxn>` like the reference's compactor.
+   *
+   * When the chosen deltas' files total at most [[driverMergeLimit]]
+   * bytes, their events are resolved on the driver by [[readTable]]'s
+   * driver resolve and the winners written as one file in
+   * (originalTransaction, bucket, rowId) order ([[writeOnDriver]]),
+   * tallied from the winners: no Spark job. Above the cut the events go
+   * through [[latestPerKey]] and a Spark write. Either way events equal
+   * on txn and operation tie as [[readTable]] says.
    * Returns the merged directory path.
    */
   def minorCompact(spark: SparkSession, tableDir: String,
@@ -346,16 +457,31 @@ object Acid {
     require(subset.forall(_.distinct.size == deltas.size),
       s"not all of ${subset.get.mkString(", ")} are deltas of $tableDir")
     val dirs = deltas.map(_.name)
-    val events = dirs.map(d => spark.read.orc(s"$tableDir/$d"))
-      .reduce(_.unionByName(_))
-    val out =
-      s"$tableDir/delta_${deltas.map(_.low).min}_${deltas.map(_.high).max}"
-    OrcIo.write(latestPerKey(events).repartition(sizedFileCount(l, dirs)), out)
-    // tally from the written output: one cheap scan instead of
-    // re-running the window, and the counts describe exactly the files
-    // the stats ride with
-    writeStatsSidecar(out, tally(spark.read.orc(out)))
-    dirs.foreach(l.delete)
+    val merged = s"delta_${deltas.map(_.low).min}_${deltas.map(_.high).max}"
+    val out = s"$tableDir/$merged"
+    val files = dirs.flatMap(d => OrcMeta.listing(spark, s"$tableDir/$d"))
+    if (files.nonEmpty &&
+        files.map(_._2.length).sum <= driverMergeLimit(spark)) {
+      val (schema, latest) = latestOnDriver(
+        spark.sparkContext.hadoopConfiguration, files.map(_._1), _ => true)
+      val winners = latest.toSeq.sortBy(_._1)(KeyOrder).map(_._2)
+      val toRow = CatalystTypeConverters.createToCatalystConverter(schema.get)
+      writeOnDriver(spark, schema.get,
+        winners.iterator.map(w => toRow(w.event).asInstanceOf[InternalRow]),
+        out)
+      writeStatsSidecar(spark, out, countOps(winners.iterator.map(_.op)))
+    } else {
+      val events = dirs.map(d => spark.read.orc(s"$tableDir/$d"))
+        .reduce(_.unionByName(_))
+      OrcIo.write(latestPerKey(events).repartition(sizedFileCount(l, dirs)),
+        out)
+      // tally from the written output: one cheap scan instead of
+      // re-running the window, and the counts describe exactly the files
+      // the stats ride with
+      writeStatsSidecar(spark, out, tally(spark.read.orc(out)))
+    }
+    // a lone `delta_A_B` compacts into its own name
+    dirs.filter(_ != merged).foreach(l.delete)
     out
   }
 
@@ -459,39 +585,63 @@ object Acid {
   }
 
   /** The most delta-file bytes [[readTable]] resolves on the driver:
-    * below where the driver path stops winning. A sweep (local[4] on
-    * 4 vCPUs; a 150k-row base, two deltas of half updates and half
-    * deletes; median of 7 reads plus a count and sum; two runs) timed
+    * below where the driver path stops winning ([[minorCompact]] and
+    * [[writeDelta]] share the cut, see [[driverMergeLimit]]). A sweep
+    * (local[4] on 4 vCPUs; a 150k-row base, two deltas of half updates
+    * and half deletes; median of 7 reads plus a count and sum; two
+    * runs) timed
     * driver against window at 337–374 / 854–954 ms for 64 KB of delta
     * files, 405–425 / 747–794 ms for 0.22 MB, 456–510 / 577–626 ms for
     * 0.43 MB, 570–646 / 556–690 ms for 0.65 MB and 659–694 /
     * 628–690 ms for 0.86 MB. The cap is the 0.22 MB point. */
   private[graft] val DriverMergeMaxBytes = 220L * 1000
 
-  /** [[readTable]]'s driver-path cut: [[DriverMergeMaxBytes]], lowered
-    * to `spark.sql.autoBroadcastJoinThreshold` (Spark's bound on what
-    * it collects to the driver), so `-1` turns the path off. */
+  /** The one driver-path cut, [[DriverMergeMaxBytes]] lowered to
+    * `spark.sql.autoBroadcastJoinThreshold` (Spark's bound on what it
+    * collects to the driver), so `-1` turns every driver path off. It
+    * bounds the delta files [[readTable]] resolves and [[minorCompact]]
+    * merges on the driver, and the estimated size of the local frame
+    * [[writeDelta]] writes there. */
   private[graft] def driverMergeLimit(spark: SparkSession): Long =
     math.min(DriverMergeMaxBytes,
       spark.sessionState.conf.autoBroadcastJoinThreshold)
 
-  /** [[readTable]]'s driver path: resolve the events of the delta
-    * `files` that are `visible` by txn, then filter out the base rows
-    * whose key a winner `shadows` (given its originalTransaction,
-    * bucket and rowId) and append the winners that are not deletes. */
-  private def mergeOnDriver(spark: SparkSession, baseRows: DataFrame,
-      files: Seq[String], visible: Long => Boolean,
-      shadows: (Long, Long, Long) => Boolean, rowIdCol: String)
-      : DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    // key -> (currentTransaction, operation, payload) of its winner
+  /** A key's winning event in [[latestOnDriver]]: its
+    * currentTransaction, its operation and the event row. */
+  private final case class Winner(txn: Long, op: Int, event: Row)
+
+  /** Row keys (originalTransaction, bucket, rowId) in ascending order,
+    * nulls first: the order [[latestPerKey]]'s window sorts them in. */
+  private val KeyOrder: Ordering[(Any, Any, Any)] = {
+    def opt(v: Any): Option[Long] = Option(v).map(_.asInstanceOf[Long])
+    Ordering.by { case (o, b, id) => (opt(o), opt(b), opt(id)) }
+  }
+
+  /** The driver resolve shared by [[readTable]] and [[minorCompact]]:
+    * the events of `files` (read in order with orc-core on `conf`)
+    * whose currentTransaction is `visible`, reduced to the latest per
+    * key (originalTransaction, bucket, rowId) by [[readTable]]'s rule,
+    * deletes included. Keys hold the fields' values as longs (null
+    * when null). The files must share one event schema up to the order
+    * of its top-level fields, as `unionByName` asks; the first file's
+    * schema comes back beside the winners, whose rows follow it. */
+  private def latestOnDriver(conf: Configuration, files: Seq[String],
+      visible: Long => Boolean)
+      : (Option[StructType], collection.Map[(Any, Any, Any), Winner]) = {
     val latest =
-      scala.collection.mutable.HashMap[(Any, Any, Any), (Long, Int, Row)]()
-    val payload = files.map { f =>
+      scala.collection.mutable.HashMap[(Any, Any, Any), Winner]()
+    var first: Option[StructType] = None
+    files.foreach { f =>
       val (schema, events) = UnionOrc.fileRows(f, conf)
-      val Seq(op, orig, bucket, rowId, txn, row) = Seq("operation",
-        "originalTransaction", "bucket", "rowId", "currentTransaction",
-        "row").map(schema.fieldIndex)
+      val want = first.getOrElse(schema)
+      first = Some(want)
+      require(schema.fields.sortBy(_.name)
+          .sameElements(want.fields.sortBy(_.name)),
+        s"event schema of $f differs from the first file's: $schema, $want")
+      val order = want.fieldNames.toSeq.map(schema.fieldIndex)
+      val Seq(op, orig, bucket, rowId, txn) = Seq("operation",
+        "originalTransaction", "bucket", "rowId", "currentTransaction")
+        .map(schema.fieldIndex)
       def num(e: Row, i: Int): Any =
         if (e.isNullAt(i)) null else e.getAs[Number](i).longValue
       events.foreach { e =>
@@ -499,13 +649,27 @@ object Acid {
         if (visible(t)) {
           val k = (num(e, orig), num(e, bucket), num(e, rowId))
           val o = e.getAs[Number](op).intValue
-          if (latest.get(k).forall { case (wt, wo, _) =>
-              t > wt || (t == wt && o >= wo) })
-            latest(k) = (t, o, e.getStruct(row))
+          if (latest.get(k).forall(w =>
+              t > w.txn || (t == w.txn && o >= w.op)))
+            latest(k) = Winner(t, o,
+              if (schema == want) e else Row.fromSeq(order.map(e.get)))
         }
       }
-      schema(row).dataType.asInstanceOf[StructType]
-    }.headOption
+    }
+    (first, latest)
+  }
+
+  /** [[readTable]]'s driver path: resolve the events of the delta
+    * `files` that are `visible` by txn ([[latestOnDriver]]), then
+    * filter out the base rows whose key a winner `shadows` (given its
+    * originalTransaction, bucket and rowId) and append the winners
+    * that are not deletes. */
+  private def mergeOnDriver(spark: SparkSession, baseRows: DataFrame,
+      files: Seq[String], visible: Long => Boolean,
+      shadows: (Long, Long, Long) => Boolean, rowIdCol: String)
+      : DataFrame = {
+    val (schema, latest) = latestOnDriver(
+      spark.sparkContext.hadoopConfiguration, files, visible)
     val shadowed = latest.keys.collect {
       case (o: Long, b: Long, id: Long) if shadows(o, b, id) => id
     }.toArray.sorted
@@ -516,10 +680,12 @@ object Acid {
       baseRows.filter(unshadowed(col(rowIdCol).cast("long")))
     }
     val rows = latest.values.collect {
-      case (_, o, r) if o != OpDelete => r
+      case w if w.op != OpDelete =>
+        w.event.getStruct(schema.get.fieldIndex("row"))
     }.toSeq
     if (rows.isEmpty) kept
-    else kept.unionByName(spark.createDataFrame(rows.asJava, payload.get))
+    else kept.unionByName(spark.createDataFrame(rows.asJava,
+      schema.get("row").dataType.asInstanceOf[StructType]))
   }
 
   /**
@@ -557,9 +723,10 @@ object Acid {
       state: DataFrame, early: Seq[String] = Nil): String = {
     val tmp = s"${l.dir}/_tmp_base_$txn"
     OrcIo.write(state.repartition(sizedFileCount(l, l.names)), tmp)
-    // count the WRITTEN base, not `state`: counting the resolve plan
-    // would column-prune the delta scans (see [[tally]])
-    writeStatsSidecar(tmp, AcidStats(spark.read.orc(tmp).count(), 0L, 0L))
+    // count the WRITTEN base from its footers, not `state`: counting the
+    // resolve plan would column-prune the delta scans (see [[tally]])
+    writeStatsSidecar(spark, tmp,
+      AcidStats(Stats.statsOnlyCount(spark, tmp), 0L, 0L))
     val newBase = s"base_$txn"
     (early :+ newBase).filter(l.names.contains).foreach(l.delete)
     val dst = new Path(s"${l.dir}/$newBase")

@@ -47,20 +47,30 @@ object OrcIo {
       dictionaryThreshold: Double = 0.8,
       mode: String = "overwrite",
       partitionBy: Seq[String] = Nil): Unit = {
-    var w = df.write.mode(mode)
-      .option("compression", compression)
-      .option("orc.stripe.size", stripeSize.toString)
-      .option("orc.row.index.stride", indexStride.toString)
-      .option("orc.dictionary.key.threshold", dictionaryThreshold.toString)
-    if (bloomColumns.nonEmpty)
-      w = w.option("orc.bloom.filter.columns", bloomColumns.mkString(","))
-        .option("orc.bloom.filter.fpp", bloomFpp.toString)
+    val w = df.write.mode(mode).options(writeOptions(compression, stripeSize,
+      indexStride, bloomColumns, bloomFpp, dictionaryThreshold))
     // hive-style directory partitioning: the coarsest pruning layer a
     // 100 TB layout leans on (partition elimination before any footer
     // or stripe stat is read)
-    if (partitionBy.nonEmpty) w = w.partitionBy(partitionBy: _*)
-    w.orc(path)
+    if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*).orc(path)
+    else w.orc(path)
   }
+
+  /** The data-source options [[write]] passes for its writer options;
+    * with no arguments, the ones of a default [[write]]. */
+  private[graft] def writeOptions(compression: String = DefaultCompression,
+      stripeSize: Long = DefaultStripeSize,
+      indexStride: Int = DefaultIndexStride,
+      bloomColumns: Seq[String] = Nil,
+      bloomFpp: Double = DefaultBloomFpp,
+      dictionaryThreshold: Double = 0.8): Map[String, String] =
+    Map("compression" -> compression,
+      "orc.stripe.size" -> stripeSize.toString,
+      "orc.row.index.stride" -> indexStride.toString,
+      "orc.dictionary.key.threshold" -> dictionaryThreshold.toString) ++
+      (if (bloomColumns.isEmpty) Nil
+       else Seq("orc.bloom.filter.columns" -> bloomColumns.mkString(","),
+         "orc.bloom.filter.fpp" -> bloomFpp.toString))
 
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.orc(path)

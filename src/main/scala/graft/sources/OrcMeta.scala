@@ -363,10 +363,12 @@ object OrcMeta {
    * application metadata (the reference attaches it to each data file
    * at write time; Spark's datasource has no hook for that, so the
    * engine uses one tiny sidecar per directory, written via the same
-   * ORC writer API and readable by any ORC metadata tool).
+   * ORC writer API and readable by any ORC metadata tool). `conf` is the
+   * caller's Hadoop configuration, the one its data files were written
+   * with, so the sidecar lands on the same FileSystem.
    */
-  def writeMetadataFile(path: String, metadata: Map[String, String]): Unit = {
-    val conf = new Configuration()
+  def writeMetadataFile(path: String, metadata: Map[String, String],
+      conf: Configuration): Unit = {
     val opts = OrcFile.writerOptions(conf)
       .setSchema(org.apache.orc.TypeDescription.fromString("struct<>"))
       .overwrite(true)
@@ -389,7 +391,7 @@ object OrcMeta {
     writeMetadataFile(s"$dir/_meta.orc", Map(
       "graft.writer" -> "graft-engine",
       "graft.format.version" -> "2",
-      "hive.acid.stats" -> "100,10,1"))
+      "hive.acid.stats" -> "100,10,1"), spark.sessionState.newHadoopConf())
     userMetadata(spark, s"$dir/_meta.orc")
       .select(col("key"), col("value"))
       .orderBy(col("key"))

@@ -298,7 +298,8 @@ class AcidSpec extends SparkSpec {
     val dir = graft.sources.OrcIo.scratchDir("acid_stats_rewrite")
     def carrier(stats: Acid.AcidStats): Unit =
       graft.sources.OrcMeta.writeMetadataFile(s"$dir/_acid_stats.orc",
-        Map(Acid.AcidStatsKey -> stats.serialize))
+        Map(Acid.AcidStatsKey -> stats.serialize),
+        spark.sparkContext.hadoopConfiguration)
     val f = new java.io.File(s"$dir/_acid_stats.orc")
     carrier(Acid.AcidStats(100, 10, 1))
     val (len, mtime) = (f.length(), f.lastModified())
@@ -631,6 +632,12 @@ class AcidSpec extends SparkSpec {
       ".purged_old_delta_3", ".purge_tmp_delta_4"))
   }
 
+  /** `body` with the driver paths turned off. */
+  private def windowPath[A](body: => A): A = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    try { spark.conf.set(key, "-1"); body } finally spark.conf.unset(key)
+  }
+
   /** `read` on both of readTable's paths: the driver path (the default
     * `spark.sql.autoBroadcastJoinThreshold`) and the window path (`-1`).
     * Their rows must be equal. The driver path's plan must hold no
@@ -644,10 +651,8 @@ class AcidSpec extends SparkSpec {
       (df.collect().toSeq.sortBy(r => (r.getLong(0), r.toString)),
         df.queryExecution.executedPlan.toString)
     }
-    val key = "spark.sql.autoBroadcastJoinThreshold"
     val (driver, driverPlan) = run()
-    val (window, windowPlan) =
-      try { spark.conf.set(key, "-1"); run() } finally spark.conf.unset(key)
+    val (window, windowPlan) = windowPath(run())
     assert(driver == window)
     assert(!driverPlan.contains("Window"), driverPlan)
     assert(windowPlan.contains("Window") == windowed, windowPlan)
@@ -763,8 +768,10 @@ class AcidSpec extends SparkSpec {
     assert(window.count(_._1.contains(2L)) == 1, window)
   }
 
-  test("every payload type reads the same on both readTable paths") {
-    val dir = graft.sources.OrcIo.scratchDir("acid_payload")
+  /** Build at `t` a table of every payload type: base_1 of ids 1–4,
+    * delta_2 updating 1–3 to edge values (3 to all nulls) and inserting
+    * 5, delta_3 deleting 4. */
+  private def payloadTable(t: String): Unit = {
     val cols = Seq("id", "i", "b", "d", "dec", "s", "bin", "dt", "ts", "arr",
       "m", "st")
     def rows(sql: String) = spark.sql(sql).toDF(cols: _*)
@@ -775,7 +782,7 @@ class AcidSpec extends SparkSpec {
       timestamp'2001-02-03 04:05:06.123456' + make_interval(0, 0, 0, cast(id as int)),
       array(cast(id as int), null), map('k', cast(id as int)),
       named_struct('a', cast(id as int), 'n', named_struct('c', concat('n', id)))
-      from range(1, 5)""").write.orc(s"$dir/t/base_1")
+      from range(1, 5)""").write.orc(s"$t/base_1")
     // updates of 1–3 and an insert of 5 carry the edge values; 3 is
     // all nulls; 4 is deleted
     val edge = rows("""select * from values
@@ -798,9 +805,14 @@ class AcidSpec extends SparkSpec {
         lit(txn).as("currentTransaction"), struct(cols.map(col): _*).as("row"))
     asEvents(edge.filter(col("id") =!= 5L), Acid.OpUpdate, 2L)
       .unionByName(asEvents(edge.filter(col("id") === 5L), Acid.OpInsert, 2L))
-      .write.orc(s"$dir/t/delta_2")
-    asEvents(spark.read.orc(s"$dir/t/base_1").filter(col("id") === 4L),
-      Acid.OpDelete, 3L).write.orc(s"$dir/t/delta_3")
+      .write.orc(s"$t/delta_2")
+    asEvents(spark.read.orc(s"$t/base_1").filter(col("id") === 4L),
+      Acid.OpDelete, 3L).write.orc(s"$t/delta_3")
+  }
+
+  test("every payload type reads the same on both readTable paths") {
+    val dir = graft.sources.OrcIo.scratchDir("acid_payload")
+    payloadTable(s"$dir/t")
     val got = bothPaths()(Acid.readTable(spark, s"$dir/t"))
     assert(got.map(_.getLong(0)) == Seq(1L, 2L, 3L, 5L))
     assert(got.map(r => Option(r.getDate(7)).map(_.toString)) ==
@@ -831,5 +843,252 @@ class AcidSpec extends SparkSpec {
     val r = counted.collect()(0)
     // 1–4 updated to -1, 5–20 deleted, 21–100 untouched
     assert(r.getLong(0) == 84L && r.getDouble(1) == -4.0 + (21 to 100).sum)
+  }
+
+  /** The names in directory `d` a listing shows, without checksums. */
+  private def namesIn(d: String): Set[String] =
+    new java.io.File(d).list().filterNot(_.startsWith(".")).toSet
+
+  /** A value of a row UnionOrc read, as text: byte arrays, nested rows,
+    * sequences and maps by their contents. */
+  private def canon(v: Any): String = v match {
+    case null => "null"
+    case b: Array[Byte] => b.mkString("X[", ",", "]")
+    case r: org.apache.spark.sql.Row => r.toSeq.map(canon).mkString("(", ",", ")")
+    case m: scala.collection.Map[_, _] => m.toSeq
+      .map { case (k, x) => canon(k) + "->" + canon(x) }.sorted
+      .mkString("{", ",", "}")
+    case q: scala.collection.Seq[_] => q.map(canon).mkString("[", ",", "]")
+    case other => other.toString
+  }
+
+  /** The events of the data files under `dir`, in file order, as text. */
+  private def eventsIn(dir: String): Seq[String] =
+    graft.sources.OrcMeta.dataFiles(spark, dir)
+      .flatMap(f => graft.sources.UnionOrc.localRows(f).map(canon))
+
+  test("a small local writeDelta and minorCompact start no Spark job; " +
+      "each delta is one data file, _SUCCESS and its sidecar") {
+    val dir = graft.sources.OrcIo.scratchDir("acid_commit_nojob")
+    (1L to 100L).map(i => (i, i * 1.0)).toDF("id", "v")
+      .write.orc(s"$dir/t/base_1")
+    val updates = eventsDf((1L to 10L).map(i =>
+      event(Acid.OpUpdate, (i % 4).toInt, i, 2L, -1.0)))
+    assert(jobsIn("commit-driver") {
+      // the second write replaces the first, as an overwrite does
+      Acid.writeDelta(updates.limit(3), s"$dir/t/delta_2")
+      Acid.writeDelta(updates, s"$dir/t/delta_2")
+      Acid.writeDelta(eventsDf((5L to 20L).map(i =>
+        event(Acid.OpDelete, (i % 4).toInt, i, 3L, 0.0))), s"$dir/t/delta_3")
+    } == 0)
+    def oneFile(d: String): Unit = {
+      val names = namesIn(d)
+      assert(names.size == 3 && names("_SUCCESS") &&
+        names("_acid_stats.orc"), names)
+      assert(names.exists(n => n.startsWith("part-00000-") &&
+        n.endsWith("-c000.zlib.orc")), names)
+    }
+    oneFile(s"$dir/t/delta_2"); oneFile(s"$dir/t/delta_3")
+    assert(Acid.readAcidStats(spark, s"$dir/t/delta_2")
+      .contains(Acid.AcidStats(0, 10, 0)))
+    assert(Acid.readAcidStats(spark, s"$dir/t/delta_3")
+      .contains(Acid.AcidStats(0, 0, 16)))
+    val before = state(s"$dir/t")
+    var merged = ""
+    assert(jobsIn("minor-driver") {
+      merged = Acid.minorCompact(spark, s"$dir/t")
+    } == 0)
+    assert(dirsOf(s"$dir/t") == Set("base_1", "delta_2_3"))
+    oneFile(merged)
+    // 1–4 updated, 5–20 deleted: one event per key, in key order
+    assert(Acid.readAcidStats(spark, merged)
+      .contains(Acid.AcidStats(0, 4, 16)))
+    val keys = graft.sources.OrcMeta.dataFiles(spark, merged)
+      .flatMap(graft.sources.UnionOrc.localRows(_))
+      .map(r => (r.getLong(1), r.getInt(2), r.getLong(3)))
+    assert(keys == keys.sorted && keys.size == 20, keys)
+    assert(state(s"$dir/t") == before && before.size == 84)
+    // with the driver paths off, the same calls run Spark jobs
+    assert(jobsIn("commit-window")(windowPath(
+      Acid.writeDelta(updates, s"$dir/t/delta_4"))) > 0)
+  }
+
+  test("a driver-written delta is the file a one-task Spark write leaves") {
+    val dir = graft.sources.OrcIo.scratchDir("acid_same_file")
+    val events = Seq((1L, "1500-01-01", "1850-03-04 05:06:07.123456"),
+        (2L, "2100-01-01", "2040-03-04 05:06:07.654321"))
+      .toDF("k", "d", "ts")
+      .select(lit(Acid.OpUpdate).as("operation"),
+        lit(1L).as("originalTransaction"), (col("k") % 4).cast("int")
+          .as("bucket"), col("k").as("rowId"),
+        lit(2L).as("currentTransaction"), struct(col("k").as("id"),
+          to_date(col("d")).as("d"), to_timestamp(col("ts")).as("ts"))
+          .as("row"))
+    Acid.writeDelta(events, s"$dir/driver")
+    graft.sources.OrcIo.write(events.coalesce(1), s"$dir/spark")
+    val Seq(d, w) = Seq("driver", "spark").map(n =>
+      graft.sources.OrcMeta.dataFiles(spark, s"$dir/$n"))
+    assert(d.size == 1 && w.size == 1)
+    def bytes(f: String) = java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(new java.net.URI(f)))
+    assert(java.util.Arrays.equals(bytes(d.head), bytes(w.head)))
+    assert(graft.sources.OrcMeta.userMetadata(spark, d.head).collect()
+      .exists(_.getString(1) == "org.apache.spark.version"))
+    // dates rebase to the hybrid calendar on write and back on read
+    assert(spark.read.orc(s"$dir/driver").collect().map(_.getStruct(5))
+      .map(r => r.getDate(1).toString -> r.getTimestamp(2).toString).toSet ==
+      Set("1500-01-01" -> "1850-03-04 05:06:07.123456",
+        "2100-01-01" -> "2040-03-04 05:06:07.654321"))
+  }
+
+  test("minor compaction on the driver and through the window give the " +
+      "same events and hive.acid.stats") {
+    val dir = graft.sources.OrcIo.scratchDir("acid_minor_paths")
+    val (ins, upd, del) = (Acid.OpInsert, Acid.OpUpdate, Acid.OpDelete)
+    def base(t: String, txn: Long): Unit =
+      Seq((1L, 10.0), (2L, 30.0), (3L, 40.0), (4L, 50.0)).toDF("id", "v")
+        .write.orc(s"$t/base_$txn")
+    def deltas(t: String, ds: (String, Seq[(Int, Long, Int, Long, Long, Double)])*)
+        : Unit = ds.foreach { case (d, evs) =>
+      eventsDf(evs).write.orc(s"$t/$d")
+    }
+    // each case builds one table twice and compacts `subset` of it
+    val cases = Seq[(String, Option[Seq[String]], String => Unit)](
+      // equal-txn ties go to the higher operation, in either order,
+      // and deletes stay to mask the base
+      ("ties", None, t => { base(t, 1L); deltas(t,
+        "delta_2" -> Seq(event(upd, 1, 1L, 2L, 11.0), event(del, 1, 1L, 2L, 0.0),
+          event(del, 2, 2L, 2L, 0.0), event(upd, 2, 2L, 2L, 21.0),
+          event(ins, 3, 3L, 2L, 41.0), event(upd, 3, 3L, 2L, 42.0)),
+        "delta_3" -> Seq(event(del, 0, 4L, 3L, 0.0), event(ins, 1, 5L, 3L, 60.0),
+          event(upd, 3, 3L, 3L, 43.0))) }),
+      // a straddling delta_A_B compacts with a later delta; minor
+      // compaction keeps its events at or below the base txn
+      ("straddle", None, t => { base(t, 3L); deltas(t,
+        "delta_2_4" -> Seq((upd, 3L, 1, 1L, 3L, 99.0), (upd, 3L, 2, 2L, 3L, 77.0),
+          (upd, 3L, 1, 1L, 4L, 44.0)),
+        "delta_5" -> Seq((del, 3L, 2, 2L, 5L, 0.0), (upd, 3L, 1, 1L, 5L, 45.0))) }),
+      // a subset: delta_2 is left as it is
+      ("subset", Some(Seq("delta_3", "delta_4")), t => { base(t, 1L); deltas(t,
+        "delta_2" -> Seq(event(upd, 1, 1L, 2L, 11.0)),
+        "delta_3" -> Seq(event(upd, 1, 1L, 3L, 12.0), event(del, 2, 2L, 3L, 0.0)),
+        "delta_4" -> Seq(event(upd, 1, 1L, 4L, 13.0), event(ins, 1, 9L, 4L, 90.0))) }),
+      ("payload", None, payloadTable))
+    cases.foreach { case (name, subset, build) =>
+      val (d, w) = (s"$dir/$name-driver", s"$dir/$name-window")
+      build(d); build(w)
+      var outD = ""
+      assert(jobsIn(s"minor-$name") {
+        outD = Acid.minorCompact(spark, d, subset)
+      } == 0, name)
+      val outW = windowPath(Acid.minorCompact(spark, w, subset))
+      assert(outD.stripPrefix(d) == outW.stripPrefix(w), name)
+      assert(dirsOf(d) == dirsOf(w), name)
+      assert(eventsIn(outD).sorted == eventsIn(outW).sorted, name)
+      val stats = Acid.readAcidStats(spark, outD)
+      assert(stats.nonEmpty && stats == Acid.readAcidStats(spark, outW), name)
+      assert(bothPaths()(Acid.readTable(spark, d)).map(canon) ==
+        bothPaths()(Acid.readTable(spark, w)).map(canon), name)
+    }
+    assert(dirsOf(s"$dir/subset-driver") ==
+      Set("base_1", "delta_2", "delta_3_4"))
+    assert(Acid.readAcidStats(spark, s"$dir/ties-driver/delta_2_3")
+      .contains(Acid.AcidStats(1, 1, 3)))
+  }
+
+  test("fastCount and changesBetween agree on tables written through " +
+      "both commit paths and both minor-compaction paths") {
+    val dir = graft.sources.OrcIo.scratchDir("acid_ledger_paths")
+    val (ins, upd, del) = (Acid.OpInsert, Acid.OpUpdate, Acid.OpDelete)
+    def build(t: String): Unit = {
+      (1L to 20L).map(i => (i, i * 1.0)).toDF("id", "v")
+        .write.orc(s"$t/base_1")
+      Acid.writeDelta(eventsDf((1L to 6L).map(i =>
+          event(upd, (i % 4).toInt, i, 2L, -i.toDouble)) ++
+        (21L to 23L).map(i => event(ins, (i % 4).toInt, i, 2L, i * 1.0))),
+        s"$t/delta_2")
+      Acid.writeDelta(eventsDf((4L to 9L).map(i =>
+        event(del, (i % 4).toInt, i, 3L, 0.0))), s"$t/delta_3")
+      Acid.writeDelta(eventsDf(Seq(event(upd, 2, 2L, 4L, 2.5),
+        event(ins, 0, 24L, 4L, 24.0))), s"$t/delta_4")
+    }
+    val (d, w) = (s"$dir/driver", s"$dir/window")
+    build(d); windowPath(build(w))
+    assert(namesIn(s"$d/delta_2").count(_.endsWith(".orc")) == 2)
+    assert(namesIn(s"$w/delta_2").count(_.endsWith(".orc")) > 2)
+    def same(): Unit = {
+      val Seq(fd, fw) = Seq(d, w).map(t =>
+        Acid.fastCount(spark, t).collect().map(canon).toSeq)
+      assert(fd == fw)
+      val live = Acid.readTable(spark, d).rdd.count()
+      assert(fd.head.contains(s",$live)"), fd)
+      Seq(1L -> 4L, 2L -> 3L, 3L -> 4L).foreach { case (from, to) =>
+        val Seq(cd, cw) = Seq(d, w).map(t =>
+          Acid.changesBetween(spark, t, from, to).collect().map(canon)
+            .sorted.toSeq)
+        assert(cd == cw && cd.nonEmpty, (from, to))
+      }
+    }
+    same()
+    Acid.minorCompact(spark, d, Some(Seq("delta_3", "delta_4")))
+    windowPath(Acid.minorCompact(spark, w, Some(Seq("delta_3", "delta_4"))))
+    same()
+  }
+
+  test("readsOrc finds an ORC read in any leaf or subquery, and nothing " +
+      "else") {
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    import org.apache.spark.sql.catalyst.catalog.{CatalogStorageFormat,
+      CatalogTable, CatalogTableType, HiveTableRelation}
+    import org.apache.spark.sql.catalyst.types.DataTypeUtils
+    val dir = graft.sources.OrcIo.scratchDir("acid_reads_orc")
+    val flags = Seq((1L, true), (2L, false)).toDF("id", "force_flag")
+    flags.write.orc(s"$dir/o")
+    // a parquet dataset whose path and columns say "orc"
+    flags.write.parquet(s"$dir/score_orc")
+    def reads(df: org.apache.spark.sql.DataFrame) =
+      Acid.readsOrc(df.queryExecution.analyzed)
+    val orc = spark.read.orc(s"$dir/o")
+    val parquet = spark.read.parquet(s"$dir/score_orc")
+    assert(reads(orc))
+    assert(reads(parquet.join(orc, "id")))
+    orc.createOrReplaceTempView("acid_reads_orc_v")
+    assert(reads(parquet.filter("id in (select id from acid_reads_orc_v)")))
+    assert(!reads(parquet) && !reads(flags))
+    val v1 = "spark.sql.sources.useV1SourceList"
+    try {
+      spark.conf.set(v1, "")
+      val v2 = spark.read.orc(s"$dir/o")
+      assert(v2.queryExecution.analyzed.collectLeaves().exists(_.isInstanceOf[
+        org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation]))
+      assert(reads(v2) && !reads(spark.read.parquet(s"$dir/score_orc")))
+    } finally spark.conf.unset(v1)
+    def hive(format: String) = {
+      val serde = org.apache.spark.sql.internal.HiveSerDe
+        .sourceToSerDe(format).get
+      val schema = flags.schema
+      HiveTableRelation(CatalogTable(TableIdentifier("t", Some("default")),
+        CatalogTableType.EXTERNAL, CatalogStorageFormat.empty.copy(
+          inputFormat = serde.inputFormat, outputFormat = serde.outputFormat,
+          serde = serde.serde), schema, provider = Some("hive")),
+        DataTypeUtils.toAttributes(schema), Nil)
+    }
+    assert(Acid.readsOrc(hive("orc")) && !Acid.readsOrc(hive("parquet")))
+  }
+
+  test("commits write their data and sidecar through the session's " +
+      "Hadoop configuration") {
+    val dir = graft.sources.OrcIo.scratchDir("acid_session_fs")
+    val events = eventsDf(Seq(event(Acid.OpUpdate, 1, 1L, 2L, 11.0),
+      event(Acid.OpDelete, 2, 2L, 2L, 0.0)))
+    OrcFixtures.withSessionScheme(spark) {
+      Acid.writeDelta(events, s"graftfs://$dir/driver")
+      windowPath(Acid.writeDelta(events, s"graftfs://$dir/window"))
+    }
+    Seq("driver", "window").foreach { d =>
+      assert(namesIn(s"$dir/$d").exists(_.endsWith(".orc")), d)
+      assert(Acid.readAcidStats(spark, s"$dir/$d")
+        .contains(Acid.AcidStats(0, 1, 1)), d)
+    }
   }
 }

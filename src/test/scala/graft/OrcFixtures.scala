@@ -5,7 +5,7 @@ import org.apache.hadoop.hive.common.`type`.HiveDecimal
 import org.apache.hadoop.hive.ql.exec.vector.{BytesColumnVector,
   ColumnVector, DecimalColumnVector, DoubleColumnVector, LongColumnVector,
   TimestampColumnVector, UnionColumnVector}
-import org.apache.orc.{OrcFile, TypeDescription}
+import org.apache.orc.{CompressionKind, OrcFile, TypeDescription}
 
 /**
  * Host-independent twins of the reference example files: each fixture
@@ -17,12 +17,14 @@ object OrcFixtures {
 
   /** Write `n` rows of `schema` to one ORC file of format `version`,
     * replacing any file at `path`; `fill(cols, r, i)` sets batch row
-    * `r` of `cols` to input row `i`. With `footerAfter` ≥ 0 the writer
+    * `r` of `cols` to input row `i`. `codec` and `stripeSize`, when
+    * given, replace the writer's defaults. With `footerAfter` ≥ 0 the writer
     * also writes an intermediate footer once that many rows are in,
     * and `onFooter` receives the file length it leaves readable. */
   private def writeOrc(path: String, schema: String, n: Int,
       stride: Int, bloomColumns: String = "",
       version: OrcFile.Version = OrcFile.Version.CURRENT,
+      codec: Option[CompressionKind] = None, stripeSize: Option[Long] = None,
       footerAfter: Int = -1, onFooter: Long => Unit = _ => ())(
       fill: (Array[ColumnVector], Int, Int) => Unit): String = {
     val opts = OrcFile
@@ -32,6 +34,8 @@ object OrcFixtures {
       .bloomFilterColumns(bloomColumns)
       .version(version)
       .overwrite(true)
+    codec.foreach(opts.compress)
+    stripeSize.foreach(opts.stripeSize)
     val w = OrcFile.createWriter(new Path(path), opts)
     val batch = opts.getSchema.createRowBatch(1024)
     (0 until n).foreach { i =>
@@ -235,4 +239,57 @@ object OrcFixtures {
         case v => c.isNull(r) = false; c.set(r, HiveDecimal.create(v))
       }
     }
+
+  /** One input row of [[codecFile]]: a key and a string that is null in
+    * the last 2,000 rows (the nulls-at-end shape). */
+  def codecRow(k: Int): (Long, String) =
+    (k * 7919L - 40000000L, if (k >= 8000) null else s"v${k % 997}")
+
+  /** Twin of the codec matrix files (`TestOrcFile.testSnappy.orc`,
+    * `TestVectorOrcFile.testLzo.orc`, `testLz4.orc`,
+    * `nulls-at-end-snappy.orc`): 10,000 [[codecRow]]s of
+    * `struct<x:bigint,y:string>` compressed with `codec`. */
+  def codecFile(dir: String, codec: CompressionKind): String =
+    writeOrc(s"$dir/codec-$codec.orc", "struct<x:bigint,y:string>", 10000,
+        stride = 1000, codec = Some(codec)) { (cols, r, i) =>
+      val (x, y) = codecRow(i)
+      cols(0).asInstanceOf[LongColumnVector].vector(r) = x
+      val c = cols(1).asInstanceOf[BytesColumnVector]
+      if (y == null) { c.noNulls = false; c.isNull(r) = true }
+      else { c.isNull(r) = false; c.setVal(r, y.getBytes("UTF-8")) }
+    }
+
+  /** One input row of [[projectionFile]]. */
+  def projectionRow(k: Int): (Int, String) = (k * 31 % 21000, s"s${k * 17}")
+
+  /** Twin of `TestOrcFile.columnProjection.orc`: 21,000
+    * [[projectionRow]]s of `struct<int1:int,string1:string>` in several
+    * small stripes, so a projected scan seeks past the other column in
+    * each. */
+  def projectionFile(dir: String): String =
+    writeOrc(s"$dir/projection.orc", "struct<int1:int,string1:string>",
+        21000, stride = 1000, stripeSize = Some(16L * 1024)) { (cols, r, i) =>
+      val (a, b) = projectionRow(i)
+      cols(0).asInstanceOf[LongColumnVector].vector(r) = a
+      cols(1).asInstanceOf[BytesColumnVector].setVal(r, b.getBytes("UTF-8"))
+    }
+
+  /** Run `body` with the scheme `graftfs:` (the local file system under
+    * another name, [[SessionSchemeFs]]) set only on `spark`'s session
+    * conf, which every Hadoop configuration the session builds copies:
+    * the SparkContext's Hadoop configuration and a fresh one do not
+    * know it, and the FileSystem cache never holds it. */
+  def withSessionScheme[A](spark: org.apache.spark.sql.SparkSession)(
+      body: => A): A = {
+    val keys = Seq("fs.graftfs.impl" -> classOf[SessionSchemeFs].getName,
+      "fs.graftfs.impl.disable.cache" -> "true")
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally keys.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+}
+
+/** The local file system under the scheme `graftfs:`, for tests of which
+  * Hadoop configuration a writer uses. */
+class SessionSchemeFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftfs:///")
 }

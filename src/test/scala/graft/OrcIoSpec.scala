@@ -12,6 +12,8 @@ class OrcIoSpec extends SparkSpec {
   import OrcIoSpec.Nation
   import SparkSpec.spark.implicits._
 
+  private def conf = spark.sparkContext.hadoopConfiguration
+
   test("typed read (S7): ORC rows decode into a case class Dataset") {
     val dir = OrcIo.scratchDir("typed")
     OrcIo.write(Tables.load(spark, sfDir, "nation"), s"$dir/nation")
@@ -80,9 +82,9 @@ class OrcIoSpec extends SparkSpec {
     assert(merged == direct && merged.nonEmpty)
     // user metadata merged across inputs, last writer wins per key
     OrcMeta.writeMetadataFile(s"$dir/ma.orc",
-      Map("k.shared" -> "a", "k.a" -> "1"))
+      Map("k.shared" -> "a", "k.a" -> "1"), conf)
     OrcMeta.writeMetadataFile(s"$dir/mb.orc",
-      Map("k.shared" -> "b", "k.b" -> "2"))
+      Map("k.shared" -> "b", "k.b" -> "2"), conf)
     OrcIo.concat(spark, Seq(s"$dir/ma.orc", s"$dir/mb.orc"),
       s"$dir/meta_out.orc")
     val meta = OrcMeta.userMetadata(spark, s"$dir/meta_out.orc")
@@ -248,7 +250,7 @@ class OrcIoSpec extends SparkSpec {
       "scans") {
     val t = s"${OrcIo.scratchDir("listing")}/t"
     OrcIo.write(Tables.load(spark, sfDir, "nation").repartition(2), t)
-    OrcMeta.writeMetadataFile(s"$t/_acid_stats.orc", Map("k" -> "v"))
+    OrcMeta.writeMetadataFile(s"$t/_acid_stats.orc", Map("k" -> "v"), conf)
     val names = new java.io.File(t).list().toSet
     assert(Seq("_SUCCESS", "_acid_stats.orc").forall(names.contains))
     assert(names.exists(n => n.startsWith(".") && n.endsWith(".crc")))
@@ -275,7 +277,7 @@ class OrcIoSpec extends SparkSpec {
   test("user metadata: write sidecar, read keys back (appendUserMetadata)") {
     val dir = OrcIo.scratchDir("user_meta")
     OrcMeta.writeMetadataFile(s"$dir/_meta.orc",
-      Map("graft.owner" -> "pipeline-a", "graft.note" -> "v2"))
+      Map("graft.owner" -> "pipeline-a", "graft.note" -> "v2"), conf)
     val got = OrcMeta.userMetadata(spark, s"$dir/_meta.orc")
       .collect().map(r => r.getAs[String]("key") ->
         r.getAs[String]("value")).toMap
@@ -368,16 +370,35 @@ class OrcIoSpec extends SparkSpec {
     assert(rows() == 5000L && stripeRows(f) == 5000L)
   }
 
+  test("writeMetadataFile writes through the caller's configuration: a " +
+      "scheme set only on the session") {
+    val dir = OrcIo.scratchDir("meta_scheme")
+    OrcFixtures.withSessionScheme(spark) {
+      val session = spark.sessionState.newHadoopConf()
+      assert(session.get("fs.graftfs.impl") != null)
+      // neither the context's configuration nor a fresh one knows it
+      Seq(spark.sparkContext.hadoopConfiguration,
+          new org.apache.hadoop.conf.Configuration()).foreach { c =>
+        intercept[java.io.IOException](
+          new org.apache.hadoop.fs.Path(s"graftfs://$dir").getFileSystem(c))
+      }
+      OrcMeta.writeMetadataFile(s"graftfs://$dir/_meta.orc",
+        Map("k" -> "v"), session)
+    }
+    assert(OrcMeta.userMetadata(spark, s"$dir/_meta.orc")
+      .as[OrcMeta.UserMetadata].collect().map(_.value).toSeq == Seq("v"))
+  }
+
   test("a same-length rewrite with a moved mtime misses the tail cache") {
     val dir = OrcIo.scratchDir("tail_touch")
     val (p, q) = (new org.apache.hadoop.fs.Path(s"$dir/m.orc"),
       new org.apache.hadoop.fs.Path(s"$dir/q.orc"))
-    OrcMeta.writeMetadataFile(p.toString, Map("k" -> "aaaa"))
-    OrcMeta.writeMetadataFile(q.toString, Map("k" -> "bbbb"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    OrcMeta.writeMetadataFile(p.toString, Map("k" -> "aaaa"), conf)
+    OrcMeta.writeMetadataFile(q.toString, Map("k" -> "bbbb"), conf)
     def value() = OrcMeta.userMetadata(spark, p.toString)
       .as[OrcMeta.UserMetadata].collect().map(_.value).toSeq
     assert(value() == Seq("aaaa"))
-    val conf = spark.sparkContext.hadoopConfiguration
     val fs = p.getFileSystem(conf)
     val before = fs.getFileStatus(p)
     // replace the bytes outside the engine's writers, which would evict
@@ -433,7 +454,7 @@ class OrcIoSpec extends SparkSpec {
     val t = s"${OrcIo.scratchDir("tail_paths")}/t"
     Tables.load(spark, sfDir, "nation").write.partitionBy("n_regionkey")
       .orc(t)
-    OrcMeta.writeMetadataFile(s"$t/_acid_stats.orc", Map("k" -> "v"))
+    OrcMeta.writeMetadataFile(s"$t/_acid_stats.orc", Map("k" -> "v"), conf)
     val names = new java.io.File(t).list().toSet
     assert(Seq("_SUCCESS", "_acid_stats.orc").forall(names.contains))
     assert(new java.io.File(s"$t/n_regionkey=0").list()
