@@ -90,6 +90,7 @@ object GraftSession {
       .appName("graft")
       .withExtensions(graft.functions.VectorKernels.register)
       .withExtensions(graft.functions.KeyParams.register)
+      .withExtensions(graft.sources.DriverScan.register)
       // 32 matches local core count; on a real cluster this would be
       // ~2-3x total executor cores, set per deployment.
       .config("spark.sql.shuffle.partitions",

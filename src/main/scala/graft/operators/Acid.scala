@@ -128,7 +128,7 @@ object Acid {
 
   private[graft] def layout(spark: SparkSession, tableDir: String): Layout = {
     val root = new Path(tableDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val names = fs.listStatus(root).filter(_.isDirectory)
       .map(_.getPath.getName).toSeq
     Layout(tableDir, fs,
@@ -237,7 +237,7 @@ object Acid {
     * its carrier file; None when the directory has none. */
   def readAcidStats(spark: SparkSession, path: String): Option[AcidStats] = {
     val carrier = new Path(path, AcidStatsFile)
-    if (!carrier.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!carrier.getFileSystem(spark.sessionState.newHadoopConf())
         .exists(carrier)) None
     else graft.sources.OrcMeta.userMetadata(spark, carrier.toString)
       .filter(col("key") === AcidStatsKey).select(col("value")).collect()
@@ -463,7 +463,7 @@ object Acid {
     if (files.nonEmpty &&
         files.map(_._2.length).sum <= driverMergeLimit(spark)) {
       val (schema, latest) = latestOnDriver(
-        spark.sparkContext.hadoopConfiguration, files.map(_._1), _ => true)
+        spark.sessionState.newHadoopConf(), files.map(_._1), _ => true)
       val winners = latest.toSeq.sortBy(_._1)(KeyOrder).map(_._2)
       val toRow = CatalystTypeConverters.createToCatalystConverter(schema.get)
       writeOnDriver(spark, schema.get,
@@ -669,7 +669,7 @@ object Acid {
       shadows: (Long, Long, Long) => Boolean, rowIdCol: String)
       : DataFrame = {
     val (schema, latest) = latestOnDriver(
-      spark.sparkContext.hadoopConfiguration, files, visible)
+      spark.sessionState.newHadoopConf(), files, visible)
     val shadowed = latest.keys.collect {
       case (o: Long, b: Long, id: Long) if shadows(o, b, id) => id
     }.toArray.sorted
@@ -1182,7 +1182,7 @@ object Acid {
       keys: Set[Long], rowIdCol: String): Unit = {
     import spark.implicits._
     val root = new Path(tableDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     // Crash self-heal (ADVICE r13): a crash inside swapIn's two-rename
     // window leaves the live base_/delta_ dir ABSENT, with the only
     // complete copy at dot-prefixed .purged_old_<d> — which readTable

@@ -254,7 +254,7 @@ object Multimodal {
     bos.toByteArray
   }
 
-  /** fanOut disposition — MEASURED (graft.tools.FanOutProbe,
+  /** fanOut disposition — MEASURED (a round-18 probe since deleted,
     * sf0.1, local[32], min of 2): encode 0.30 s without the ids-only
     * exchange vs 0.81 s with it, and the downstream energy decode
     * reads the resulting store in 0.24 s (1 scan partition) vs

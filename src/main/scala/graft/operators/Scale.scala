@@ -892,7 +892,7 @@ object Scale {
   def compactionExec(spark: SparkSession, planned: DataFrame,
       fileCol: String, binCol: String, outDir: String)
       : Seq[(Long, String, Long, Long)] = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = spark.sessionState.newHadoopConf()
     val groups = planned.select(col(binCol).cast("long"), col(fileCol))
       .collect()
       .groupBy(_.getLong(0))

@@ -34,7 +34,7 @@ object CsvTools {
           col("c_acctbal"))
         .write.option("header", "true").mode("overwrite").csv(out)
       val fs = new org.apache.hadoop.fs.Path(out)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getFileSystem(spark.sessionState.newHadoopConf())
       val bad = fs.create(
         new org.apache.hadoop.fs.Path(s"$out/part-bad.csv"))
       try bad.write(

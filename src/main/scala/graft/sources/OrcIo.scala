@@ -21,9 +21,14 @@ import scala.jdk.CollectionConverters._
  * (SURVEY.md S5) via Spark's FilePartition machinery. Planning is not
  * free of driver work: the driver lists the directory (in parallel
  * above `spark.sql.sources.parallelPartitionDiscovery.threshold`
- * paths) and cuts each file into splits by size. It reads no footer,
- * so every file gets a task even when its statistics refute the
- * filter; ORC skips stripes and row groups inside the task.
+ * paths) and cuts each file into splits by size. It reads no footer;
+ * ORC skips stripes and row groups inside the reader, whichever thread
+ * runs it. A collect-shaped read (projections and filters over the
+ * scan, `collect`, `take` or `limit`) whose files total at most
+ * [[DriverScan.limit]] bytes reads them on the driver, one pool thread
+ * per file, and starts no job ([[DriverScan]]). Every other read, and
+ * any aggregate, join or write over one, gives every split a task,
+ * even a split whose statistics refute the filter.
  */
 object OrcIo {
 
@@ -188,10 +193,10 @@ object OrcIo {
       targetFileBytes: Long = 256L * 1024 * 1024,
       compression: String = DefaultCompression): Unit = {
     val df = spark.read.orc(inPaths: _*)
+    val conf = spark.sessionState.newHadoopConf()
     val totalBytes = inPaths.map { p =>
       val hp = new org.apache.hadoop.fs.Path(p)
-      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.getContentSummary(hp).getLength
+      hp.getFileSystem(conf).getContentSummary(hp).getLength
     }.sum
     val nFiles = math.max(1, (totalBytes / targetFileBytes).toInt)
     write(df.repartition(nFiles), outPath, compression = compression)
@@ -209,7 +214,7 @@ object OrcIo {
   def concat(spark: SparkSession, inFiles: Seq[String], outFile: String)
       : Long = {
     import scala.jdk.CollectionConverters._
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = spark.sessionState.newHadoopConf()
     val opts = OrcMeta.withReader(inFiles.head, conf) { first =>
       org.apache.orc.OrcFile.writerOptions(conf)
         .setSchema(first.getSchema)
@@ -263,7 +268,7 @@ object OrcIo {
   private def flushLengths(spark: SparkSession, orcFile: String)
       : Seq[Long] = {
     val side = new org.apache.hadoop.fs.Path(orcFile + FlushLengthSuffix)
-    val fs = side.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = side.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(side)) Nil
     else {
       val in = fs.open(side)
@@ -285,7 +290,7 @@ object OrcIo {
     val side = new org.apache.hadoop.fs.Path(orcFile + FlushLengthSuffix)
     // rewrite prior entries + the new one (local filesystems lack
     // append(); the file is a handful of longs)
-    val out = side.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = side.getFileSystem(spark.sessionState.newHadoopConf())
       .create(side, true)
     try (prior :+ len).foreach(out.writeLong) finally out.close()
   }
@@ -306,9 +311,9 @@ object OrcIo {
    */
   def readSalvage(spark: SparkSession, path: String)
       : (DataFrame, Seq[String]) = {
+    val conf = spark.sessionState.newHadoopConf()
     def opens(f: String, maxLength: Long = Long.MaxValue): Boolean =
-      try OrcMeta.withReader(f, spark.sparkContext.hadoopConfiguration,
-        maxLength)(_ => true)
+      try OrcMeta.withReader(f, conf, maxLength)(_ => true)
       catch { case _: Exception => false }
     val (good, failed) = OrcMeta.dataFiles(spark, path).partition(opens(_))
     // side-file recovery: readable prefix via reader maxLength

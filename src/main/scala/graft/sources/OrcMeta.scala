@@ -11,6 +11,7 @@ import org.apache.orc.impl.OrcTail
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.util.SerializableConfiguration
 import scala.reflect.ClassTag
 import scala.reflect.runtime.universe.TypeTag
 
@@ -73,7 +74,7 @@ object OrcMeta {
   private[graft] def listing(spark: SparkSession, path: String)
       : Seq[(String, TailKey)] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     def under(dir: Path): Seq[FileStatus] = fs.listStatus(dir).toSeq
       .filterNot { s =>
         val n = s.getPath.getName
@@ -148,37 +149,50 @@ object OrcMeta {
       maxLength: Long = Long.MaxValue)(f: Reader => A): A =
     open(file, OrcFile.readerOptions(conf).maxLength(maxLength))(f)
 
-  private lazy val tailPool = Executors.newFixedThreadPool(8,
+  private lazy val driverPool = Executors.newFixedThreadPool(8,
     new ThreadFactoryBuilder().setDaemon(true)
-      .setNameFormat("graft-orc-tail-%d").build())
+      .setNameFormat("graft-orc-driver-%d").build())
+
+  /** Run each of `work` on the driver's 8-thread ORC pool (footer
+    * reads here, small scans in [[DriverScan]]); their results in
+    * order. The first failure is rethrown once every piece has ended,
+    * so nothing of a failed call is still running when it returns. */
+  private[graft] def onPool[A](work: Seq[() => A]): Seq[A] = {
+    val futures = work.map(w => driverPool.submit(new Callable[A] {
+      def call(): A = w()
+    }))
+    val done = futures.map { f =>
+      try Right(f.get()) catch { case e: ExecutionException => Left(e.getCause) }
+    }
+    done.collectFirst { case Left(e) => throw e }
+    done.map(_.toOption.get)
+  }
 
   /** The tail fan-out behind every surface: `f`'s rows per data file,
     * in file order. Up to the partition-discovery threshold (the cut in
-    * this object's scaladoc) the files are read on the driver's
-    * 8-thread tail pool and the rows come back as a local Seq (Left);
-    * above it one task per 16 files reads them (Right). */
+    * this object's scaladoc) the files are read on the driver pool
+    * ([[onPool]]) and the rows come back as a local Seq (Left); above
+    * it one task per 16 files reads them (Right). Both read with the
+    * session's Hadoop configuration. */
   private def perFile[A: ClassTag](spark: SparkSession, path: String)
       (f: (String, Reader) => Seq[A]): Either[Seq[A], RDD[A]] = {
     val files = listing(spark, path)
     if (files.size <= spark.conf
         .get(SQLConf.PARALLEL_PARTITION_DISCOVERY_THRESHOLD.key).toInt) {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val reads = files.map { case (file, key) =>
-        tailPool.submit(new Callable[Seq[A]] {
-          def call(): Seq[A] = cached(key, conf)(f(file, _))
-        })
-      }
-      Left(reads.flatMap { r =>
-        try r.get() catch { case e: ExecutionException => throw e.getCause }
-      })
-    } else Right(spark.sparkContext
-      .parallelize(files, math.max(1, files.size / 16))
-      .mapPartitions { part =>
-        // one Configuration per task: building one per file cost more
-        // than the cached tail read it serves
-        val conf = new Configuration()
-        part.flatMap { case (file, key) => cached(key, conf)(f(file, _)) }
-      })
+      val conf = spark.sessionState.newHadoopConf()
+      Left(onPool(files.map { case (file, key) =>
+        () => cached(key, conf)(f(file, _))
+      }).flatten)
+    } else {
+      // the session's configuration, shipped once to every task
+      val conf = spark.sparkContext.broadcast(
+        new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+      Right(spark.sparkContext
+        .parallelize(files, math.max(1, files.size / 16))
+        .mapPartitions(_.flatMap { case (file, key) =>
+          cached(key, conf.value.value)(f(file, _))
+        }))
+    }
   }
 
   /** [[perFile]]'s rows as a DataFrame: local on the driver path, so

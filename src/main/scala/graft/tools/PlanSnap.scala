@@ -3,8 +3,8 @@ import graft._
 
 /** Dump `.explain("formatted")` for a query list into a directory —
   * the before/after plan evidence an optimization round commits
-  * (plans/rNN/<query>_<tag>.txt). Unlike [[Explain]] (stdout,
-  * SimpleMode) this writes FormattedMode files the judge can diff. */
+  * (plans/rNN/<query>_<tag>.txt), as FormattedMode files that can
+  * be diffed. */
 object PlanSnap {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,

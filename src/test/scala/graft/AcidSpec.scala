@@ -1084,11 +1084,46 @@ class AcidSpec extends SparkSpec {
     OrcFixtures.withSessionScheme(spark) {
       Acid.writeDelta(events, s"graftfs://$dir/driver")
       windowPath(Acid.writeDelta(events, s"graftfs://$dir/window"))
+      Seq("driver", "window").foreach { d =>
+        assert(namesIn(s"$dir/$d").exists(_.endsWith(".orc")), d)
+        assert(Acid.readAcidStats(spark, s"graftfs://$dir/$d")
+          .contains(Acid.AcidStats(0, 1, 1)), d)
+      }
     }
-    Seq("driver", "window").foreach { d =>
-      assert(namesIn(s"$dir/$d").exists(_.endsWith(".orc")), d)
-      assert(Acid.readAcidStats(spark, s"$dir/$d")
-        .contains(Acid.AcidStats(0, 1, 1)), d)
+  }
+
+  test("a table on a session-only scheme reads, counts, diffs and " +
+      "compacts on both paths") {
+    val dir = graft.sources.OrcIo.scratchDir("acid_session_read")
+    val (ins, upd, del) = (Acid.OpInsert, Acid.OpUpdate, Acid.OpDelete)
+    OrcFixtures.withSessionScheme(spark) {
+      def build(t: String): Unit = {
+        (1L to 20L).map(i => (i, i * 1.0)).toDF("id", "v")
+          .write.orc(s"$t/base_1")
+        Acid.writeDelta(eventsDf(Seq(event(upd, 1, 1L, 2L, -1.0),
+          event(ins, 1, 21L, 2L, 21.0))), s"$t/delta_2")
+        Acid.writeDelta(eventsDf(Seq(event(del, 2, 2L, 3L, 0.0))),
+          s"$t/delta_3")
+        Acid.writeDelta(eventsDf(Seq(event(upd, 3, 3L, 4L, -3.0))),
+          s"$t/delta_4")
+      }
+      val (d, w) = (s"graftfs://$dir/driver", s"graftfs://$dir/window")
+      build(d); windowPath(build(w))
+      def rows(t: String) = Acid.readTable(spark, t).collect()
+        .map(canon).sorted.toSeq
+      val want = rows(d)
+      assert(want.size == 20 && windowPath(rows(d)) == want)
+      assert(Acid.fastCount(spark, d).collect().map(canon).toSeq ==
+        Acid.fastCount(spark, w).collect().map(canon).toSeq)
+      assert(Acid.changesBetween(spark, d, 1L, 4L).collect().length == 4)
+      Acid.minorCompact(spark, d, Some(Seq("delta_3", "delta_4")))
+      windowPath(Acid.minorCompact(spark, w, Some(Seq("delta_3", "delta_4"))))
+      assert(rows(d) == want && rows(w) == want)
+      Acid.majorCompact(spark, d)
+      assert(namesIn(s"$dir/driver")
+        .filter(n => n.startsWith("base_") || n.startsWith("delta_")) ==
+        Set("base_4"))
+      assert(rows(d) == want)
     }
   }
 }

@@ -197,6 +197,25 @@ class CompatSpec extends SparkSpec {
     assert(e.getMessage.contains("future ORC version"), e.getMessage)
   }
 
+  test("edge files, generated: empty reads as 0 rows, a struct<> footer " +
+      "parses, a future version is refused") {
+    import graft.sources.{OrcIo, OrcMeta}
+    // twin of the test above, on files written here
+    val twins = OrcIo.scratchDir("compat_edge")
+    val empty = OrcFixtures.emptyFile(s"$twins/empty.orc",
+      "struct<a:int,b:string>")
+    assert(spark.read.orc(empty).count() == 0L)
+    assert(spark.read.orc(empty).collect().isEmpty)
+    val zero = OrcFixtures.emptyFile(s"$twins/zero.orc", "struct<>")
+    assert(OrcMeta.fileMeta(spark, zero).head().getAs[Long]("rows") == 0L)
+    val future = OrcFixtures.futureVersionFile(s"$twins/version1999.orc")
+    val e = intercept[Exception](spark.read.orc(future).count())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(m => String.valueOf(m.getMessage)).toSeq
+    assert(messages.exists(_.contains("future ORC version")),
+      messages.mkString(" / "))
+  }
+
   test("timestamp file: non-struct root + writer-tz values read back") {
     // §7.4 highest correctness risk. This file's root type is a bare
     // `timestamp` (no struct) — stock Spark cannot even analyze it;

@@ -64,6 +64,21 @@ class CompileOnceSpec extends SparkSpec {
       Seq(40L, 7L, 9999L), Seq(7L, 40L))
   }
 
+  test("a lookup read on the driver, and one on the job path, compile " +
+      "nothing for a second key") {
+    keysAndCompiles(col("k") === 5L)
+    var got: (Seq[Long], Long) = null
+    assert(jobsIn("driver-key") { got = keysAndCompiles(col("k") === 2999L) }
+      == 0)
+    assert(got == ((Seq(2999L), 0L)))
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      keysAndCompiles(col("k") === 5L)
+      assert(jobsIn("job-key") { got = keysAndCompiles(col("k") === 2998L) }
+        > 0)
+      assert(got == ((Seq(2998L), 0L)))
+    }
+  }
+
   test("a filter over a source other than ORC shares a class too") {
     sharesClass[Long](k => col("k") === k, 11L, 4321L, Seq(4321L),
       spark.range(5000).toDF("k"))

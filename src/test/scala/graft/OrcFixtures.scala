@@ -70,6 +70,35 @@ object OrcFixtures {
     flushed
   }
 
+  /** A file of `schema` with no rows: the twin of
+    * `TestOrcFile.emptyFile.orc`, and of `zero.orc` for `struct<>`. */
+  def emptyFile(path: String, schema: String): String =
+    writeOrc(path, schema, 0, stride = 10000)((_, _, _) => ())
+
+  /** Twin of `version1999.orc`: a [[longs]] file whose PostScript says
+    * it was written by ORC 19.99. The PostScript (the last `psLen`
+    * bytes before the final length byte) holds the version as field 4,
+    * packed: tag 0x22, length 2, then 0 and 12 for format 0.12. Both
+    * 19 and 99 are one-byte varints, so the patch keeps every length. */
+  def futureVersionFile(path: String): String = {
+    longs(path, 100)
+    val p = java.nio.file.Paths.get(path)
+    val bytes = java.nio.file.Files.readAllBytes(p)
+    val psLen = bytes.last & 0xff
+    val ps = bytes.length - 1 - psLen
+    val at = (ps until bytes.length - 4).find(i =>
+      bytes(i) == 0x22 && bytes(i + 1) == 2 && bytes(i + 2) == 0 &&
+        bytes(i + 3) == 12)
+    require(at.isDefined, s"no 0.12 version field in $path's PostScript")
+    bytes(at.get + 2) = 19
+    bytes(at.get + 3) = 99
+    java.nio.file.Files.write(p, bytes)
+    // the writer's checksum sidecar no longer matches the patched bytes
+    java.nio.file.Files.deleteIfExists(
+      p.resolveSibling(s".${p.getFileName}.crc"))
+    path
+  }
+
   /** Twin of `orc_split_elim.orc`: 25,000 rows, index stride 5000.
     * `userid` is 100 everywhere except rows 0, 5000, 10000, 15000 and
     * 20000, which hold 2, 13, 29, 70 and 5 — so only the first row
@@ -289,7 +318,30 @@ object OrcFixtures {
 }
 
 /** The local file system under the scheme `graftfs:`, for tests of which
-  * Hadoop configuration a writer uses. */
+  * Hadoop configuration a reader or writer uses. It counts the input
+  * streams it opens and how many of them are still open. */
 class SessionSchemeFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("graftfs:///")
+
+  override def open(f: Path, bufferSize: Int)
+      : org.apache.hadoop.fs.FSDataInputStream = {
+    val in = super.open(f, bufferSize)
+    SessionSchemeFs.opened.incrementAndGet()
+    SessionSchemeFs.live.incrementAndGet()
+    new org.apache.hadoop.fs.FSDataInputStream(in) {
+      private val closed = new java.util.concurrent.atomic.AtomicBoolean()
+      override def close(): Unit = {
+        if (closed.compareAndSet(false, true))
+          SessionSchemeFs.live.decrementAndGet()
+        super.close()
+      }
+    }
+  }
+}
+
+object SessionSchemeFs {
+  /** Input streams opened through the scheme, ever. */
+  val opened = new java.util.concurrent.atomic.AtomicInteger()
+  /** Input streams opened through the scheme and not yet closed. */
+  val live = new java.util.concurrent.atomic.AtomicInteger()
 }

@@ -389,6 +389,29 @@ class OrcIoSpec extends SparkSpec {
       .as[OrcMeta.UserMetadata].collect().map(_.value).toSeq == Seq("v"))
   }
 
+  test("footer surfaces and statsOnly read through the session's Hadoop " +
+      "configuration, on both tail-read paths") {
+    val dir = OrcIo.scratchDir("meta_scheme_read")
+    OrcFixtures.withSessionScheme(spark) {
+      val t = s"graftfs://$dir/t"
+      OrcIo.write(spark.range(0, 3000, 1, 2).toDF("k"), t)
+      def surfaces(): Seq[Seq[String]] = Seq(OrcMeta.fileMeta(spark, t),
+        OrcMeta.stripes(spark, t), OrcMeta.columnStats(spark, t),
+        OrcMeta.stripeStats(spark, t), OrcMeta.rowGroupIndex(spark, t),
+        OrcMeta.stripeEncodings(spark, t), OrcMeta.memoryEstimate(spark, t),
+        graft.operators.Stats.statsOnlyColumnStats(spark, t))
+        .map(_.collect().map(_.toString).toSeq.sorted) :+
+        Seq(graft.operators.Stats.statsOnlyCount(spark, t).toString)
+      val driver = surfaces()
+      assert(driver.last == Seq("3000"))
+      // a threshold of 0 files sends every tail read to the job path
+      val job = withConf(
+        "spark.sql.sources.parallelPartitionDiscovery.threshold" -> "0")(
+        surfaces())
+      assert(job == driver)
+    }
+  }
+
   test("a same-length rewrite with a moved mtime misses the tail cache") {
     val dir = OrcIo.scratchDir("tail_touch")
     val (p, q) = (new org.apache.hadoop.fs.Path(s"$dir/m.orc"),

@@ -20,6 +20,16 @@ trait SparkSpec extends AnyFunSuite {
   def spark: SparkSession = SparkSpec.spark
   def sfDir: String = SparkSpec.sfDir
 
+  /** Run `body` with the session confs `kv` set, then restore them. */
+  def withConf[A](kv: (String, String)*)(body: => A): A = {
+    val prior = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** The number of Spark jobs `body` starts on this thread, counted by
     * job group: `body` runs under `group`, and a marker job after it
     * shows when the listener has seen them all (the listener bus
