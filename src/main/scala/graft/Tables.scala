@@ -91,6 +91,7 @@ object GraftSession {
       .withExtensions(graft.functions.VectorKernels.register)
       .withExtensions(graft.functions.KeyParams.register)
       .withExtensions(graft.sources.DriverScan.register)
+      .withExtensions(graft.sources.FooterCount.register)
       // 32 matches local core count; on a real cluster this would be
       // ~2-3x total executor cores, set per deployment.
       .config("spark.sql.shuffle.partitions",
@@ -101,8 +102,10 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.orc.filterPushdown", "true")
       .config("spark.sql.orc.enableVectorizedReader", "true")
-      // answer MIN/MAX/COUNT from ORC footer statistics without a scan
-      // (SURVEY.md §2.6 / M2 — Reader.getStatistics as query answers)
+      // answer MIN/MAX/COUNT from footer statistics without a scan, but
+      // only on DSv2 reads (SURVEY.md §2.6): neither key affects the v1
+      // reads OrcIo.read returns. There an unfiltered COUNT(*) comes
+      // from graft.sources.FooterCount; MIN/MAX still scan.
       .config("spark.sql.orc.aggregatePushdown", "true")
       .config("spark.sql.parquet.aggregatePushdown", "true")
       .config("spark.sql.parquet.filterPushdown", "true")

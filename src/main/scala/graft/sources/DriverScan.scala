@@ -12,7 +12,6 @@ import org.apache.spark.sql.execution.{CollectLimitExec, ColumnarRule,
   ColumnarToRowExec, FileSourceScanExec, FilterExec, InputAdapter,
   ProjectExec, SparkPlan, SQLExecution, UnaryExecNode,
   WholeStageCodegenExec}
-import org.apache.spark.sql.execution.datasources.FileFormat
 import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
 import org.apache.spark.sql.execution.metric.SQLMetrics
 import org.apache.spark.sql.vectorized.ColumnarBatch
@@ -31,10 +30,12 @@ import scala.collection.mutable.ArrayBuffer
  * child's, so anything that executes the plan as an RDD (aggregates,
  * joins, writes, caches) keeps the job path. Its `executeCollect` and
  * `executeTake` read the scan's listed files on [[OrcMeta]]'s driver
- * pool, through the relation's own reader with the scan's pushed
- * filters and the relation's Hadoop configuration, as
- * `FileSourceScanExec.inputRDD` builds it; then they apply the plan's
- * filters and projections on the driver.
+ * pool, through the per-file body of the relation's ORC reader
+ * (`GraftScanBridge.orcReader`) with the scan's pushed filters and the
+ * relation's Hadoop configuration, as `FileSourceScanExec.inputRDD`
+ * passes them, but with nothing broadcast and each file opened on its
+ * tail from [[OrcMeta.tails]]; then they apply the plan's filters and
+ * projections on the driver.
  *
  * The driver mode is taken only when the listed files total at most
  * [[limit]] bytes, `ignoreCorruptFiles` and `ignoreMissingFiles` are
@@ -146,12 +147,8 @@ object DriverScan extends Rule[SparkPlan] {
     // zero-length files get no split; the rest in the job path's order
     val files = listing.toPartitionArray.filter(_.length > 0)
       .sortBy(-_.length)
-    val read = rel.fileFormat.buildReaderWithPartitionValues(spark,
-      rel.dataSchema, rel.partitionSchema, scan.requiredSchema,
-      GraftScanBridge.pushedFilters(scan),
-      rel.options + (FileFormat.OPTION_RETURNING_BATCH ->
-        scan.supportsColumnar.toString),
-      spark.sessionState.newHadoopConfWithOptions(rel.options))
+    val hadoopConf = spark.sessionState.newHadoopConfWithOptions(rel.options)
+    val read = GraftScanBridge.orcReader(scan, hadoopConf)
     val conf = spark.sessionState.conf
     def full(n: Int) = max >= 0 && n >= max
     val perFile = OrcMeta.onPool(files.toSeq.map { file => () =>
@@ -163,7 +160,8 @@ object DriverScan extends Rule[SparkPlan] {
           if (k != null) kept += k
         }
         var decoded = 0L
-        val it = read(file)
+        val it = read(file,
+          OrcMeta.tail(OrcMeta.TailKey(file, hadoopConf), hadoopConf))
         while (!full(kept.size) && it.hasNext) (it.next(): Any) match {
           case b: ColumnarBatch =>
             decoded += b.numRows

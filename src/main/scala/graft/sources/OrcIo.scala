@@ -26,9 +26,11 @@ import scala.jdk.CollectionConverters._
  * runs it. A collect-shaped read (projections and filters over the
  * scan, `collect`, `take` or `limit`) whose files total at most
  * [[DriverScan.limit]] bytes reads them on the driver, one pool thread
- * per file, and starts no job ([[DriverScan]]). Every other read, and
- * any aggregate, join or write over one, gives every split a task,
- * even a split whose statistics refute the filter.
+ * per file, and starts no job ([[DriverScan]]). An unfiltered count
+ * (`count()`, `count(*)`) sums the files' footer row counts and reads
+ * no split ([[FooterCount]]). Every other read, and any other
+ * aggregate, join or write over one, gives every split a task, even a
+ * split whose statistics refute the filter.
  */
 object OrcIo {
 

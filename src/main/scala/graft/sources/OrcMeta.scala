@@ -10,6 +10,7 @@ import org.apache.orc.{ColumnStatistics, OrcFile, Reader, TypeDescription}
 import org.apache.orc.impl.OrcTail
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.util.SerializableConfiguration
 import scala.reflect.ClassTag
@@ -96,6 +97,12 @@ object OrcMeta {
   private[graft] object TailKey {
     def apply(fs: FileSystem, s: FileStatus): TailKey = TailKey(
       fs.makeQualified(s.getPath).toString, s.getLen, s.getModificationTime)
+    /** The key of the file a scan's split reads. */
+    def apply(file: PartitionedFile, conf: Configuration): TailKey = {
+      val p = file.toPath
+      TailKey(p.getFileSystem(conf).makeQualified(p).toString,
+        file.fileSize, file.modificationTime)
+    }
   }
 
   /** Tails (PostScript, Footer and Metadata section) by [[TailKey]],
@@ -122,10 +129,10 @@ object OrcMeta {
     try f(reader) finally reader.close()
   }
 
-  /** Open one file on its cached tail, loading the tail on a miss. */
-  private def cached[A](key: TailKey, conf: Configuration)
-      (f: Reader => A): A = {
-    val tail = try tails.get(key, () => {
+  /** The parsed tail of the file `key` names, from [[tails]], loaded
+    * with `conf` on a miss. */
+  private[sources] def tail(key: TailKey, conf: Configuration): OrcTail =
+    try tails.get(key, () => {
       val opts = OrcFile.readerOptions(conf)
       open(key.path, opts)(_ => ())
       // the reader records the tail it read in its options; keep the
@@ -136,14 +143,18 @@ object OrcMeta {
       case e @ (_: ExecutionException | _: UncheckedExecutionException) =>
         throw e.getCause
     }
-    open(key.path, OrcFile.readerOptions(conf).orcTail(tail))(f)
-  }
+
+  /** Open one file on its cached tail, loading the tail on a miss. */
+  private def cached[A](key: TailKey, conf: Configuration)
+      (f: Reader => A): A =
+    open(key.path, OrcFile.readerOptions(conf).orcTail(tail(key, conf)))(f)
 
   /** Open one file's tail, run `f`, close. `conf` defaults to a fresh
     * Hadoop configuration, the one tasks use; driver-side callers may
     * pass the session's. `maxLength` reads only that prefix of the file
     * (the side-file recovery of [[OrcIo.readSalvage]]). It reads the
-    * tail itself: the tail cache serves [[perFile]] alone. */
+    * tail itself: the tail cache serves [[perFile]] and the readers of
+    * [[DriverScan]] alone. */
   private[graft] def withReader[A](file: String,
       conf: Configuration = new Configuration(),
       maxLength: Long = Long.MaxValue)(f: Reader => A): A =
@@ -168,32 +179,36 @@ object OrcMeta {
     done.map(_.toOption.get)
   }
 
-  /** The tail fan-out behind every surface: `f`'s rows per data file,
-    * in file order. Up to the partition-discovery threshold (the cut in
-    * this object's scaladoc) the files are read on the driver pool
-    * ([[onPool]]) and the rows come back as a local Seq (Left); above
-    * it one task per 16 files reads them (Right). Both read with the
-    * session's Hadoop configuration. */
-  private def perFile[A: ClassTag](spark: SparkSession, path: String)
+  /** The tail fan-out behind every surface: `f`'s rows per file of
+    * `files` (a [[listing]]), in order, each file opened with `conf`.
+    * Up to the partition-discovery threshold (the cut in this object's
+    * scaladoc) the files are read on the driver pool ([[onPool]]) and
+    * the rows come back as a local Seq (Left); above it one task per 16
+    * files reads them (Right), `conf` shipped to them in one broadcast. */
+  private[sources] def perFile[A: ClassTag](spark: SparkSession,
+      files: Seq[(String, TailKey)], conf: Configuration)
       (f: (String, Reader) => Seq[A]): Either[Seq[A], RDD[A]] = {
-    val files = listing(spark, path)
     if (files.size <= spark.conf
         .get(SQLConf.PARALLEL_PARTITION_DISCOVERY_THRESHOLD.key).toInt) {
-      val conf = spark.sessionState.newHadoopConf()
       Left(onPool(files.map { case (file, key) =>
         () => cached(key, conf)(f(file, _))
       }).flatten)
     } else {
-      // the session's configuration, shipped once to every task
-      val conf = spark.sparkContext.broadcast(
-        new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+      val shipped = spark.sparkContext.broadcast(
+        new SerializableConfiguration(conf))
       Right(spark.sparkContext
         .parallelize(files, math.max(1, files.size / 16))
         .mapPartitions(_.flatMap { case (file, key) =>
-          cached(key, conf.value.value)(f(file, _))
+          cached(key, shipped.value.value)(f(file, _))
         }))
     }
   }
+
+  /** [[perFile]] over the data files of the dataset at `path`, read
+    * with the session's Hadoop configuration. */
+  private def perFile[A: ClassTag](spark: SparkSession, path: String)
+      (f: (String, Reader) => Seq[A]): Either[Seq[A], RDD[A]] =
+    perFile(spark, listing(spark, path), spark.sessionState.newHadoopConf())(f)
 
   /** [[perFile]]'s rows as a DataFrame: local on the driver path, so
     * collecting it runs no job. */

@@ -119,6 +119,42 @@ class DriverScanSpec extends SparkSpec {
       .filter(col("_col2") === OrcFixtures.colNAbsentKey)).isEmpty)
   }
 
+  test("the row reader (vectorized reader off) answers as the job path " +
+      "does") {
+    withConf("spark.sql.orc.enableVectorizedReader" -> "false") {
+      assert(bothPaths(read.filter(col("k") === 4321L)).length == 1)
+      assert(bothPaths(read.filter(col("k").between(1000L, 1200L))
+        .select(col("s"), col("k"))).length == 201)
+      assert(bothPaths(read.filter(col("s").isNull && col("k") < 100L))
+        .length == 20)
+      assert(bothPaths(read).length == 6000)
+      assert(bothPaths(read.limit(5)).length == 5)
+      val dir = OrcIo.scratchDir("driver_scan_rows_part")
+      OrcIo.write(spark.range(0, 900).select(col("id").as("k"),
+        (col("id") % 3).as("p")), s"$dir/t", partitionBy = Seq("p"))
+      assert(bothPaths(spark.read.orc(s"$dir/t")
+        .filter(col("p") === 1 && col("k") < 100L)).length == 33)
+    }
+  }
+
+  test("a driver-path lookup broadcasts nothing; the job path does") {
+    val sc = spark.sparkContext
+    /** Broadcasts made by `body`: the gap between two probe ids. */
+    def broadcasts(body: => Any): Long = {
+      val before = sc.broadcast(0)
+      body
+      val after = sc.broadcast(0)
+      Seq(before, after).foreach(_.destroy())
+      after.id - before.id - 1
+    }
+    read.filter(col("k") === 42L).collect()
+    assert(broadcasts(read.filter(col("k") === 42L).collect()) == 0L)
+    assert(broadcasts(read.filter(col("g") === 3L).take(4)) == 0L)
+    withConf(Threshold -> "-1") {
+      assert(broadcasts(read.filter(col("k") === 42L).collect()) > 0L)
+    }
+  }
+
   test("a hive-partitioned directory: the partition column in the filter " +
       "and the projection") {
     val dir = OrcIo.scratchDir("driver_scan_part")

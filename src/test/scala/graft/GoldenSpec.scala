@@ -42,6 +42,16 @@ class GoldenSpec extends SparkSpec {
     (a == b) || math.abs(a - b) <=
       relTol * math.max(math.abs(a), math.abs(b)) + 1e-12
 
+  /** A timestamp as the printer renders it: UTC wall clock, then the
+    * nanoseconds with trailing zeros trimmed, at least one digit. */
+  private def timestampText(ts: java.sql.Timestamp): String = {
+    val secs = java.time.format.DateTimeFormatter
+      .ofPattern("yyyy-MM-dd HH:mm:ss")
+      .withZone(java.time.ZoneOffset.UTC).format(ts.toInstant)
+    val nine = f"${ts.getNanos}%09d".reverse.dropWhile(_ == '0').reverse
+    s"$secs.${if (nine.isEmpty) "0" else nine}"
+  }
+
   /** First mismatch description, or None if value matches the golden. */
   private def diff(dt: DataType, v: Any, node: JsonNode,
       path: String): Option[String] = {
@@ -86,12 +96,7 @@ class GoldenSpec extends SparkSpec {
         val d = v.asInstanceOf[java.sql.Date].toLocalDate.toString
         if (n.asText == d) None else Some(s"$path: $d vs $n")
       case TimestampType =>
-        val ts = v.asInstanceOf[java.sql.Timestamp]
-        val secs = java.time.format.DateTimeFormatter
-          .ofPattern("yyyy-MM-dd HH:mm:ss")
-          .withZone(java.time.ZoneOffset.UTC).format(ts.toInstant)
-        val nine = f"${ts.getNanos}%09d".reverse.dropWhile(_ == '0').reverse
-        val rendered = s"$secs.${if (nine.isEmpty) "0" else nine}"
+        val rendered = timestampText(v.asInstanceOf[java.sql.Timestamp])
         if (n.asText == rendered) None
         else Some(s"$path: $rendered vs $n")
       case ArrayType(et, _) =>
@@ -131,10 +136,14 @@ class GoldenSpec extends SparkSpec {
     }
   }
 
-  private def checkGolden(name: String): Unit = {
-    val df = spark.read.orc(s"$examples/$name.orc")
+  private def checkGolden(name: String): Unit =
+    checkRows(name, spark.read.orc(s"$examples/$name.orc"), goldenRows(name))
+
+  /** Every row of `df`, read in full, against `golden`. Returns the
+    * number of rows read. */
+  private def checkRows(name: String, df: org.apache.spark.sql.DataFrame,
+      golden: Seq[JsonNode]): Long = {
     val rows = df.collect()
-    val golden = goldenRows(name)
     assert(rows.length == golden.length,
       s"$name: ${rows.length} rows read, golden has ${golden.length}")
     val schema = StructType(df.schema.fields)
@@ -142,6 +151,58 @@ class GoldenSpec extends SparkSpec {
       diff(schema, rows(i), golden(i), s"$name[$i]")
         .foreach(m => fail(s"golden mismatch: $m"))
     }
+    rows.length
+  }
+
+  /** A generated twin of the reference file `name`: `file`, written by
+    * an [[OrcFixtures]] builder, read in full against `input`, the
+    * writer's input rendered as the dump's JSON; and its `count()`,
+    * answered from footers with no Spark job, equals the rows read. */
+  private def checkTwin(name: String, file: String,
+      input: Seq[Seq[(String, Any)]]): Unit = {
+    val golden = input.map { fields =>
+      val o = mapper.createObjectNode()
+      fields.foreach {
+        case (k, null) => o.putNull(k)
+        case (k, v: Long) => o.put(k, v)
+        case (k, v: java.math.BigDecimal) => o.put(k, v)
+        case (k, v: java.sql.Timestamp) => o.put(k, timestampText(v))
+        case (k, v) => o.put(k, v.toString)
+      }
+      o
+    }
+    val df = spark.read.orc(file)
+    val read = checkRows(name, df, golden)
+    var counted = -1L
+    assert(jobsIn(s"twin-$name") { counted = df.count() } == 0)
+    assert(counted == read)
+  }
+
+  private lazy val twins = graft.sources.OrcIo.scratchDir("golden_twins")
+
+  // generated twins of reference files, on any host
+  test("golden twin: TestOrcFile.emptyFile (generated, zero rows)") {
+    checkTwin("emptyFile", OrcFixtures.emptyFile(s"$twins/empty.orc",
+      "struct<boolean1:boolean,byte1:tinyint,short1:smallint,int1:int," +
+        "long1:bigint,float1:float,double1:double,bytes1:binary," +
+        "string1:string,middle:struct<list:array<struct<int1:int," +
+        "string1:string>>>,list:array<struct<int1:int,string1:string>>," +
+        "map:map<string,struct<int1:int,string1:string>>>"), Nil)
+  }
+  Seq(1900, 2038).foreach { era =>
+    test(s"golden twin: TestOrcFile.testDate$era (generated)") {
+      checkTwin(s"testDate$era", OrcFixtures.datesFile(twins, era),
+        OrcFixtures.dateRows(era).map { case (d, ts) =>
+          Seq("time" -> ts, "date" -> d) })
+    }
+  }
+  test("golden twin: decimal (generated)") {
+    checkTwin("decimal", OrcFixtures.decimalFile(twins),
+      OrcFixtures.decimalValues.map(v => Seq("_col0" -> v)))
+  }
+  test("golden twin: orc_split_elim (generated)") {
+    checkTwin("orc_split_elim", OrcFixtures.splitElim(twins),
+      OrcFixtures.splitElimUserids.map(v => Seq("userid" -> v)))
   }
 
   // format 0.11 + the flagship all-types file (VERDICT r1 item 4)

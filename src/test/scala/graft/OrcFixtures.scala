@@ -99,19 +99,22 @@ object OrcFixtures {
     path
   }
 
-  /** Twin of `orc_split_elim.orc`: 25,000 rows, index stride 5000.
-    * `userid` is 100 everywhere except rows 0, 5000, 10000, 15000 and
-    * 20000, which hold 2, 13, 29, 70 and 5 — so only the first row
-    * group's min admits `userid <= 2`. */
-  def splitElim(dir: String): String = {
+  /** The `userid` values of [[splitElim]]: 100 everywhere except rows
+    * 0, 5000, 10000, 15000 and 20000, which hold 2, 13, 29, 70 and 5. */
+  val splitElimUserids: IndexedSeq[Long] = {
     val marks = Map(0 -> 2L, 5000 -> 13L, 10000 -> 29L, 15000 -> 70L,
       20000 -> 5L)
-    writeOrc(s"$dir/split_elim.orc", "struct<userid:bigint>", 25000,
-        stride = 5000) { (cols, r, i) =>
-      cols(0).asInstanceOf[LongColumnVector].vector(r) =
-        marks.getOrElse(i, 100L)
-    }
+    (0 until 25000).map(marks.getOrElse(_, 100L))
   }
+
+  /** Twin of `orc_split_elim.orc`: the 25,000 [[splitElimUserids]],
+    * index stride 5000, so only the first row group's min admits
+    * `userid <= 2`. */
+  def splitElim(dir: String): String =
+    writeOrc(s"$dir/split_elim.orc", "struct<userid:bigint>",
+        splitElimUserids.size, stride = 5000) { (cols, r, i) =>
+      cols(0).asInstanceOf[LongColumnVector].vector(r) = splitElimUserids(i)
+    }
 
   /** One input row of [[colN]], in `_col0` … `_col10` order (null `s`
     * is a null `_col7`). */
