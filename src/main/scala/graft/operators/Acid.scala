@@ -1,28 +1,20 @@
 package graft.operators
 
 import graft.Tables
-import graft.sources.{OrcIo, OrcMeta, UnionOrc}
-import org.apache.hadoop.conf.Configuration
+import graft.sources.{DriverScan, OrcIo, OrcMeta}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID,
   TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.catalog.HiveTableRelation
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation,
-  LogicalPlan}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
-  LogicalRelation}
-import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
-import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.execution.datasources.v2.orc.OrcTable
+import org.apache.spark.sql.{DataFrame, GraftScanBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.datasources.orc.{OrcFileFormat,
+  OrcUtils}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.internal.HiveSerDe
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
-import scala.jdk.CollectionConverters._
 
 /**
  * ACID v1 merge-on-read (SURVEY.md §2.10): the reference stores row
@@ -33,12 +25,15 @@ import scala.jdk.CollectionConverters._
  * (`site/_docs/acid.md:26-60`).
  *
  * Spark-first: the latest event per key wins (the rule is stated once,
- * on [[readTable]]). A table read resolves a small delta set on the
- * driver and passes the base rows through a broadcast key filter, so
- * the base is never shuffled. A small commit ([[writeDelta]]) and a
- * small minor compaction ([[minorCompact]]) write their one file on the
- * driver with Spark's own ORC writer, and the compaction resolves its
- * events with the same driver resolve as the read. Larger delta sets,
+ * on [[readTable]]), and every event is read by Spark's own ORC reader.
+ * A table read resolves a small delta set on the driver, reading the
+ * delta files in parallel through the driver-side read that small
+ * scans use ([[graft.sources.DriverScan.readFiles]]), and passes the
+ * base rows through a broadcast key filter, so the base is never
+ * shuffled. A small commit ([[writeDelta]]) and a small minor
+ * compaction ([[minorCompact]]) write their one file on the driver
+ * with Spark's own ORC writer, and the compaction resolves its events
+ * with the same driver resolve as the read. Larger delta sets,
  * and event frames ([[resolve]], [[changesBetween]]), go through the
  * one window dedup, [[latestPerKey]]: one shuffle on the row key, then
  * a filter. Compaction (the reference's major compaction) rewrites a
@@ -277,16 +272,10 @@ object Acid {
     * batch built on the driver) is written on the driver as one file
     * ([[writeOnDriver]]) and tallied from the same rows: no Spark job.
     *
-    * Any other frame is written by a Spark job, and the tally runs as
-    * ONE codegen aggregate over the PRE-WRITE frame: every current
-    * caller passes events derived from parquet tables or an RDD, so the
-    * vectorized path is safe (the [[tally]] row-reader constraint
-    * applies only to frames that SCAN acid-schema ORC files). That
-    * invariant is ENFORCED, not just documented: a frame whose plan
-    * reads any ORC source ([[readsOrc]]) — the natural input of a
-    * future delta rewrite — routes to the full-row [[tally]] instead.
-    * The guard is deliberately coarse (any ORC scan, acid-schema or
-    * not): a false positive only costs the slower-but-safe tally. */
+    * Any other frame is written by a Spark job and tallied from the
+    * written files ([[tally]]), as [[minorCompact]]'s window path is:
+    * the counts describe exactly the files the stats ride with, and the
+    * frame is not evaluated twice. */
   def writeDelta(events: DataFrame, outPath: String): Unit = {
     val spark = events.sparkSession
     val stats = events.queryExecution.optimizedPlan match {
@@ -299,39 +288,9 @@ object Acid {
           .map(_.get(op, opType).asInstanceOf[Number].intValue))
       case _ =>
         OrcIo.write(events, outPath)
-        if (readsOrc(events.queryExecution.analyzed)) tally(events)
-        else {
-          val r = events.agg(
-            coalesce(sum(when(col("operation") === OpInsert, 1L)
-              .otherwise(0L)), lit(0L)),
-            coalesce(sum(when(col("operation") === OpUpdate, 1L)
-              .otherwise(0L)), lit(0L)),
-            coalesce(sum(when(col("operation") === OpDelete, 1L)
-              .otherwise(0L)), lit(0L))).collect()(0)
-          AcidStats(r.getLong(0), r.getLong(1), r.getLong(2))
-        }
+        tally(spark.read.orc(outPath))
     }
     writeStatsSidecar(spark, outPath, stats)
-  }
-
-  /** Whether `plan`, or a subquery in it, reads an ORC source: a file
-    * relation over an ORC file format (Spark's `OrcFileFormat` or
-    * Hive's, both registered as "orc"), an ORC v2 table, or a Hive
-    * table with the ORC serde. */
-  private[graft] def readsOrc(plan: LogicalPlan): Boolean = {
-    val orcSerde = HiveSerDe.sourceToSerDe("orc").flatMap(_.serde)
-    plan.collectWithSubqueries {
-      case l: LogicalRelation => l.relation match {
-        case h: HadoopFsRelation => h.fileFormat match {
-          case f: DataSourceRegister => f.shortName.equalsIgnoreCase("orc")
-          case _ => false
-        }
-        case _ => false
-      }
-      case r: DataSourceV2Relation => r.table.isInstanceOf[OrcTable]
-      case h: HiveTableRelation =>
-        orcSerde.nonEmpty && h.tableMeta.storage.serde == orcSerde
-    }.contains(true)
   }
 
   /** Write `rows` of `schema` as the one data file of directory
@@ -462,13 +421,9 @@ object Acid {
     val files = dirs.flatMap(d => OrcMeta.listing(spark, s"$tableDir/$d"))
     if (files.nonEmpty &&
         files.map(_._2.length).sum <= driverMergeLimit(spark)) {
-      val (schema, latest) = latestOnDriver(
-        spark.sessionState.newHadoopConf(), files.map(_._1), _ => true)
+      val (schema, latest) = latestOnDriver(spark, files, _ => true).get
       val winners = latest.toSeq.sortBy(_._1)(KeyOrder).map(_._2)
-      val toRow = CatalystTypeConverters.createToCatalystConverter(schema.get)
-      writeOnDriver(spark, schema.get,
-        winners.iterator.map(w => toRow(w.event).asInstanceOf[InternalRow]),
-        out)
+      writeOnDriver(spark, schema, winners.iterator.map(_.event), out)
       writeStatsSidecar(spark, out, countOps(winners.iterator.map(_.op)))
     } else {
       val events = dirs.map(d => spark.read.orc(s"$tableDir/$d"))
@@ -521,8 +476,9 @@ object Acid {
    * the visible delta files total at most [[driverMergeLimit]] bytes
    * (the measured crossover, lowered to
    * `spark.sql.autoBroadcastJoinThreshold`; `-1` turns this path off),
-   * their events are read here on the driver, with no Spark job, and
-   * resolved in a map. The base rows then pass a broadcast filter on
+   * their events are read here on the driver, with no Spark job, by
+   * Spark's ORC reader (one file per driver-pool thread), and resolved
+   * in a map. The base rows then pass a broadcast filter on
    * the shadowed row ids, with no shuffle, and the winners' rows union
    * in by name as a local relation. Above the cut, the base rows lifted
    * to events and the deltas' events go through [[latestPerKey]], one
@@ -556,7 +512,7 @@ object Acid {
     val files = listed.map(_.map(_._1))
     if (deltas.isEmpty) baseRows
     else if (listed.flatten.map(_._2.length).sum <= driverMergeLimit(spark))
-      mergeOnDriver(spark, baseRows, files.flatten,
+      mergeOnDriver(spark, baseRows, listed.flatten,
         t => t > baseTxn && asOf.forall(t <= _),
         (o, b, id) => o == baseTxn && b == id % buckets, rowIdCol)
     else {
@@ -608,7 +564,7 @@ object Acid {
 
   /** A key's winning event in [[latestOnDriver]]: its
     * currentTransaction, its operation and the event row. */
-  private final case class Winner(txn: Long, op: Int, event: Row)
+  private final case class Winner(txn: Long, op: Int, event: InternalRow)
 
   /** Row keys (originalTransaction, bucket, rowId) in ascending order,
     * nulls first: the order [[latestPerKey]]'s window sorts them in. */
@@ -618,46 +574,60 @@ object Acid {
   }
 
   /** The driver resolve shared by [[readTable]] and [[minorCompact]]:
-    * the events of `files` (read in order with orc-core on `conf`)
-    * whose currentTransaction is `visible`, reduced to the latest per
-    * key (originalTransaction, bucket, rowId) by [[readTable]]'s rule,
-    * deletes included. Keys hold the fields' values as longs (null
-    * when null). The files must share one event schema up to the order
-    * of its top-level fields, as `unionByName` asks; the first file's
-    * schema comes back beside the winners, whose rows follow it. */
-  private def latestOnDriver(conf: Configuration, files: Seq[String],
-      visible: Long => Boolean)
-      : (Option[StructType], collection.Map[(Any, Any, Any), Winner]) = {
-    val latest =
-      scala.collection.mutable.HashMap[(Any, Any, Any), Winner]()
-    var first: Option[StructType] = None
-    files.foreach { f =>
-      val (schema, events) = UnionOrc.fileRows(f, conf)
-      val want = first.getOrElse(schema)
-      first = Some(want)
-      require(schema.fields.sortBy(_.name)
-          .sameElements(want.fields.sortBy(_.name)),
-        s"event schema of $f differs from the first file's: $schema, $want")
-      val order = want.fieldNames.toSeq.map(schema.fieldIndex)
+    * the events of `files` (a [[OrcMeta.listing]], in its order) whose
+    * currentTransaction is `visible`, reduced to the latest per key
+    * (originalTransaction, bucket, rowId) by [[readTable]]'s rule,
+    * deletes included. The files are read in parallel on the driver,
+    * with no Spark job, by the reader a scan uses
+    * ([[DriverScan.readFiles]]), at the full width of the event schema
+    * the first file's tail holds: a column-pruned read of an
+    * ACID-schema file throws (see [[tally]]). Every file must have that
+    * schema up to the order of its top-level fields, as `unionByName`
+    * asks. Keys hold the fields' values as longs (null when null). The
+    * schema comes back beside the winners, whose rows follow it; None
+    * when there are no files. */
+  private def latestOnDriver(spark: SparkSession,
+      files: Seq[(String, OrcMeta.TailKey)], visible: Long => Boolean)
+      : Option[(StructType, collection.Map[(Any, Any, Any), Winner])] =
+    files.headOption.map { case (_, first) =>
+      val conf = spark.sessionState.conf
+      val hadoopConf = spark.sessionState.newHadoopConf()
+      val schema =
+        OrcUtils.toCatalystSchema(OrcMeta.tail(first, hadoopConf).getSchema)
+      val read = GraftScanBridge.orcReader(conf, hadoopConf, schema,
+        new StructType(), schema, Nil,
+        new OrcFileFormat().supportBatch(spark, schema))
       val Seq(op, orig, bucket, rowId, txn) = Seq("operation",
-        "originalTransaction", "bucket", "rowId", "currentTransaction")
-        .map(schema.fieldIndex)
-      def num(e: Row, i: Int): Any =
-        if (e.isNullAt(i)) null else e.getAs[Number](i).longValue
-      events.foreach { e =>
-        val t = e.getAs[Number](txn).longValue
-        if (visible(t)) {
-          val k = (num(e, orig), num(e, bucket), num(e, rowId))
-          val o = e.getAs[Number](op).intValue
-          if (latest.get(k).forall(w =>
-              t > w.txn || (t == w.txn && o >= w.op)))
-            latest(k) = Winner(t, o,
-              if (schema == want) e else Row.fromSeq(order.map(e.get)))
+          "originalTransaction", "bucket", "rowId", "currentTransaction")
+        .map { n =>
+          val (i, t) = (schema.fieldIndex(n), schema(n).dataType)
+          (e: InternalRow) => if (e.isNullAt(i)) null
+            else e.get(i, t).asInstanceOf[Number].longValue: Any
         }
+      val byName = schema.fields.sortBy(_.name)
+      val events = DriverScan.readFiles(conf, hadoopConf,
+          files.map(_._2.split), (file, tail) => {
+        val s = OrcUtils.toCatalystSchema(tail.getSchema)
+        require(s.fields.sortBy(_.name).sameElements(byName),
+          s"event schema of ${file.toPath} differs from the first file's: " +
+            s"$s, $schema")
+        read(file, tail)
+      }) { rows =>
+        val copy = UnsafeProjection.create(schema)
+        rows.filter(e => visible(txn(e).asInstanceOf[Long]))
+          .map(copy(_).copy()).toVector
       }
+      val latest =
+        scala.collection.mutable.HashMap[(Any, Any, Any), Winner]()
+      for ((fileEvents, _) <- events; e <- fileEvents) {
+        val k = (orig(e), bucket(e), rowId(e))
+        val (t, o) = (txn(e).asInstanceOf[Long], op(e).asInstanceOf[Long].toInt)
+        if (latest.get(k).forall(w =>
+            t > w.txn || (t == w.txn && o >= w.op)))
+          latest(k) = Winner(t, o, e)
+      }
+      (schema, latest)
     }
-    (first, latest)
-  }
 
   /** [[readTable]]'s driver path: resolve the events of the delta
     * `files` that are `visible` by txn ([[latestOnDriver]]), then
@@ -665,28 +635,28 @@ object Acid {
     * originalTransaction, bucket and rowId) and append the winners
     * that are not deletes. */
   private def mergeOnDriver(spark: SparkSession, baseRows: DataFrame,
-      files: Seq[String], visible: Long => Boolean,
+      files: Seq[(String, OrcMeta.TailKey)], visible: Long => Boolean,
       shadows: (Long, Long, Long) => Boolean, rowIdCol: String)
-      : DataFrame = {
-    val (schema, latest) = latestOnDriver(
-      spark.sessionState.newHadoopConf(), files, visible)
-    val shadowed = latest.keys.collect {
-      case (o: Long, b: Long, id: Long) if shadows(o, b, id) => id
-    }.toArray.sorted
-    val kept = if (shadowed.isEmpty) baseRows else {
-      val ids = spark.sparkContext.broadcast(shadowed)
-      val unshadowed = udf((id: java.lang.Long) => id == null ||
-        java.util.Arrays.binarySearch(ids.value, id.longValue) < 0)
-      baseRows.filter(unshadowed(col(rowIdCol).cast("long")))
+      : DataFrame =
+    latestOnDriver(spark, files, visible).fold(baseRows) {
+      case (schema, latest) =>
+        val shadowed = latest.keys.collect {
+          case (o: Long, b: Long, id: Long) if shadows(o, b, id) => id
+        }.toArray.sorted
+        val kept = if (shadowed.isEmpty) baseRows else {
+          val ids = spark.sparkContext.broadcast(shadowed)
+          val unshadowed = udf((id: java.lang.Long) => id == null ||
+            java.util.Arrays.binarySearch(ids.value, id.longValue) < 0)
+          baseRows.filter(unshadowed(col(rowIdCol).cast("long")))
+        }
+        val row = schema.fieldIndex("row")
+        val rowType = schema(row).dataType.asInstanceOf[StructType]
+        val rows = latest.values.collect {
+          case w if w.op != OpDelete => w.event.getStruct(row, rowType.length)
+        }.toSeq
+        if (rows.isEmpty) kept
+        else kept.unionByName(GraftScanBridge.localFrame(spark, rowType, rows))
     }
-    val rows = latest.values.collect {
-      case w if w.op != OpDelete =>
-        w.event.getStruct(schema.get.fieldIndex("row"))
-    }.toSeq
-    if (rows.isEmpty) kept
-    else kept.unionByName(spark.createDataFrame(rows.asJava,
-      schema.get("row").dataType.asInstanceOf[StructType]))
-  }
 
   /**
    * Correctness-gate query for minor compaction: the same deterministic

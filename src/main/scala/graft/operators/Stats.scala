@@ -27,8 +27,8 @@ object Stats {
 
   /**
    * Answer per-column count / min / max / sum for an ORC dataset purely
-   * from footer statistics. Null-count derives as fileRows − colCount
-   * (ORC counts only non-null values, `ColumnStatisticsImpl`).
+   * from footer statistics. Null-count derives as a file's row count −
+   * colCount (ORC counts only non-null values, `ColumnStatisticsImpl`).
    *
    * Writer-version gated (the reference's HIVE-8732 check,
    * `OrcFile.java:116-127`): files whose writer predates the stats fix

@@ -1,5 +1,7 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.orc.impl.OrcTail
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{GraftScanBridge, SparkSession,
   SparkSessionExtensions}
@@ -12,10 +14,13 @@ import org.apache.spark.sql.execution.{CollectLimitExec, ColumnarRule,
   ColumnarToRowExec, FileSourceScanExec, FilterExec, InputAdapter,
   ProjectExec, SparkPlan, SQLExecution, UnaryExecNode,
   WholeStageCodegenExec}
+import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
 import org.apache.spark.sql.execution.metric.SQLMetrics
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.vectorized.ColumnarBatch
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 /**
  * Small collect-shaped ORC scans read on the driver, as the reference
@@ -36,6 +41,10 @@ import scala.collection.mutable.ArrayBuffer
  * passes them, but with nothing broadcast and each file opened on its
  * tail from [[OrcMeta.tails]]; then they apply the plan's filters and
  * projections on the driver.
+ *
+ * The per-file read, [[readFiles]], also serves `Acid`'s driver-side
+ * delta resolve, which reads a table's small delta files with it
+ * without planning a scan.
  *
  * The driver mode is taken only when the listed files total at most
  * [[limit]] bytes, `ignoreCorruptFiles` and `ignoreMissingFiles` are
@@ -129,6 +138,37 @@ object DriverScan extends Rule[SparkPlan] {
     }
   }
 
+  /** The driver-side read of ORC files, shared by [[rows]] and `Acid`'s
+    * delta resolve: each of `files` read on [[OrcMeta]]'s driver pool as
+    * a task reads its split, in a task context under the session's
+    * `conf` ([[GraftScanBridge.asTask]]), by `read` (an
+    * [[GraftScanBridge.orcReader]]) on the file's tail from
+    * [[OrcMeta.tails]], loaded with `hadoopConf` on a miss. `consume`
+    * gets the file's rows, batches unrolled; a batch's rows are reused,
+    * so it copies what it keeps. Returns, per file in input order, what
+    * `consume` returned and the rows of the batches it opened. */
+  private[graft] def readFiles[A](conf: SQLConf, hadoopConf: Configuration,
+      files: Seq[PartitionedFile],
+      read: (PartitionedFile, OrcTail) => Iterator[InternalRow])
+      (consume: Iterator[InternalRow] => A): Seq[(A, Long)] =
+    OrcMeta.onPool(files.map { file => () =>
+      GraftScanBridge.asTask(conf) {
+        var decoded = 0L
+        val rows = read(file,
+            OrcMeta.tail(OrcMeta.TailKey(file, hadoopConf), hadoopConf))
+          .asInstanceOf[Iterator[Any]].flatMap {
+            case b: ColumnarBatch =>
+              decoded += b.numRows
+              b.rowIterator().asScala
+            case r: InternalRow =>
+              decoded += 1
+              Iterator.single(r)
+          }
+        val out = consume(rows)
+        (out, decoded)
+      }
+    })
+
   /** The rows of `plan` (a chain [[chain]] accepts), at most `max` of
     * them when `max` is not negative, read on the driver; None when the
     * driver mode is not taken. Sets the scan's `numFiles`, `filesSize`
@@ -148,32 +188,21 @@ object DriverScan extends Rule[SparkPlan] {
     val files = listing.toPartitionArray.filter(_.length > 0)
       .sortBy(-_.length)
     val hadoopConf = spark.sessionState.newHadoopConfWithOptions(rel.options)
-    val read = GraftScanBridge.orcReader(scan, hadoopConf)
     val conf = spark.sessionState.conf
+    val read = GraftScanBridge.orcReader(conf, hadoopConf, rel.dataSchema,
+      rel.partitionSchema, scan.requiredSchema,
+      if (conf.orcFilterPushDown) GraftScanBridge.pushedFilters(scan) else Nil,
+      conf.orcVectorizedReaderEnabled && scan.supportsColumnar)
     def full(n: Int) = max >= 0 && n >= max
-    val perFile = OrcMeta.onPool(files.toSeq.map { file => () =>
-      GraftScanBridge.asTask(conf) {
-        val keep = evaluator(scan.output, ops)
-        val kept = ArrayBuffer.empty[InternalRow]
-        def offer(r: InternalRow): Unit = {
-          val k = keep(r)
-          if (k != null) kept += k
-        }
-        var decoded = 0L
-        val it = read(file,
-          OrcMeta.tail(OrcMeta.TailKey(file, hadoopConf), hadoopConf))
-        while (!full(kept.size) && it.hasNext) (it.next(): Any) match {
-          case b: ColumnarBatch =>
-            decoded += b.numRows
-            val rs = b.rowIterator()
-            while (!full(kept.size) && rs.hasNext) offer(rs.next())
-          case r: InternalRow =>
-            decoded += 1
-            offer(r)
-        }
-        (kept, decoded)
+    val perFile = readFiles(conf, hadoopConf, files.toSeq, read) { rows =>
+      val keep = evaluator(scan.output, ops)
+      val kept = ArrayBuffer.empty[InternalRow]
+      while (!full(kept.size) && rows.hasNext) {
+        val k = keep(rows.next())
+        if (k != null) kept += k
       }
-    })
+      kept
+    }
     val numOutputRows = scan.metrics("numOutputRows")
     numOutputRows.add(perFile.map(_._2).sum)
     // what `sendDriverMetrics` (protected) posts, and the row count

@@ -327,14 +327,7 @@ object OrcIo {
       if (good.nonEmpty) Some(spark.read.orc(good: _*)) else None
     val recoveredDf =
       if (recoverable.isEmpty) None
-      else {
-        val schema = UnionOrc.schemaOf(recoverable.head,
-          lens(recoverable.head))
-        val rdd = spark.sparkContext
-          .parallelize(recoverable, recoverable.size)
-          .flatMap(f => UnionOrc.localRows(f, lens(f)))
-        Some(spark.createDataFrame(rdd, schema))
-      }
+      else Some(UnionOrc.read(spark, recoverable, lens))
     val df = (goodDf, recoveredDf) match {
       case (Some(g), Some(r)) => g.unionByName(r)
       case (Some(g), None) => g

@@ -8,8 +8,10 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.orc.{ColumnStatistics, OrcFile, Reader, TypeDescription}
 import org.apache.orc.impl.OrcTail
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.util.SerializableConfiguration
@@ -93,7 +95,11 @@ object OrcMeta {
     * modification time. A writer that replaces a file in place within
     * one mtime tick evicts it instead ([[evictTails]]). */
   private[graft] case class TailKey(path: String, length: Long,
-      mtime: Long)
+      mtime: Long) {
+    /** The whole file as a scan's split. */
+    def split: PartitionedFile = PartitionedFile(InternalRow.empty,
+      SparkPath.fromPathString(path), 0L, length, Array.empty, mtime, length)
+  }
   private[graft] object TailKey {
     def apply(fs: FileSystem, s: FileStatus): TailKey = TailKey(
       fs.makeQualified(s.getPath).toString, s.getLen, s.getModificationTime)
@@ -131,7 +137,7 @@ object OrcMeta {
 
   /** The parsed tail of the file `key` names, from [[tails]], loaded
     * with `conf` on a miss. */
-  private[sources] def tail(key: TailKey, conf: Configuration): OrcTail =
+  private[graft] def tail(key: TailKey, conf: Configuration): OrcTail =
     try tails.get(key, () => {
       val opts = OrcFile.readerOptions(conf)
       open(key.path, opts)(_ => ())

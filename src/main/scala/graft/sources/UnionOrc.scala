@@ -22,6 +22,11 @@ import org.apache.spark.sql.types._
  * fieldK non-null per row, selected by tag — which is the documented
  * Spark-side model for ORC unions and round-trips losslessly.
  *
+ * It serves the files Spark's reader cannot take: union-typed columns,
+ * a non-struct root type, and a file read only up to a length (the
+ * side-file recovery of [[OrcIo.readSalvage]]). Every other ORC read,
+ * ACID events included, goes through Spark's own reader.
+ *
  * Scale: one Spark task per file (parallelize over the file list);
  * within a task the scan is the same stripe-ordered vectorized batch
  * iteration Spark's own reader performs. For stripe-level splits the
@@ -140,20 +145,15 @@ object UnionOrc {
    * this layer for that reason. Other values convert as Spark's own
    * ORC reader converts them, so a DataFrame built from these rows
    * equals `spark.read.orc` on any file that reader accepts.
+   * `maxLength` reads only that prefix of the file.
    */
-  def localRows(p: String, maxLength: Long = Long.MaxValue): Iterator[Row] =
-    fileRows(p, new Configuration(), maxLength)._2
-
-  /** [[schemaOf]] and [[localRows]] of one file, from one open; driver
-    * callers pass the session's Hadoop `conf`. */
-  private[graft] def fileRows(p: String, conf: Configuration,
-      maxLength: Long = Long.MaxValue): (StructType, Iterator[Row]) = {
+  def localRows(p: String, maxLength: Long = Long.MaxValue): Iterator[Row] = {
     val reader = OrcFile.createReader(new Path(p),
-      OrcFile.readerOptions(conf).maxLength(maxLength))
+      OrcFile.readerOptions(new Configuration()).maxLength(maxLength))
     val fileSchema = reader.getSchema
     val rows = reader.rows()
     val batch = fileSchema.createRowBatch()
-    rootSchema(fileSchema) -> new Iterator[Row] {
+    new Iterator[Row] {
       private var i = 0
       private var exhausted = false
       private def advance(): Unit =
@@ -179,12 +179,16 @@ object UnionOrc {
     }
   }
 
-  /** Read ORC files (union-typed or not) into a DataFrame. */
-  def read(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    val schema = schemaOf(paths.head)
+  /** Read ORC files (union-typed or not) into a DataFrame, one task
+    * per file; a file named in `maxLengths` is read only up to that
+    * length ([[localRows]]). */
+  def read(spark: SparkSession, paths: Seq[String],
+      maxLengths: Map[String, Long] = Map.empty): DataFrame = {
+    def maxLength(p: String) = maxLengths.getOrElse(p, Long.MaxValue)
+    val schema = schemaOf(paths.head, maxLength(paths.head))
     val rdd = spark.sparkContext
       .parallelize(paths, math.max(1, paths.size))
-      .flatMap(p => localRows(p))
+      .flatMap(p => localRows(p, maxLength(p)))
     spark.createDataFrame(rdd, schema)
   }
 }

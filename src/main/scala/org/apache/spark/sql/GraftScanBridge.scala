@@ -14,6 +14,7 @@ import org.apache.spark.memory.MemoryMode
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.JoinedRow
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.datasources.{DataSourceStrategy,
@@ -25,11 +26,18 @@ import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 
 /**
- * The package-private pieces of Spark that `graft.sources.DriverScan`
- * reads a file scan with on the driver, reached from inside Spark's
- * `sql` package.
+ * The package-private pieces of Spark that graft's driver-side ORC
+ * reads use (`graft.sources.DriverScan` and the ACID resolve), reached
+ * from inside Spark's `sql` package.
  */
 object GraftScanBridge {
+
+  /** `rows` of `schema` as a frame over a local relation: collecting it
+    * starts no Spark job. */
+  def localFrame(spark: SparkSession, schema: StructType,
+      rows: Seq[InternalRow]): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 
   /** The source filters a v1 file scan hands its reader: what
     * `FileSourceScanLike.pushedDownFilters` (protected) computes for a
@@ -40,24 +48,22 @@ object GraftScanBridge {
   }
 
   /**
-   * The per-file reader of `scan`, a v1 ORC scan: the per-file body of
-   * Spark 4.1.2's `OrcFileFormat.buildReaderWithPartitionValues`, in
-   * both its batch and its row branch, without the configuration
-   * broadcast that function makes before it. Each file is read with its
-   * own copy of `hadoopConf` (the relation's, which nothing else
-   * mutates) and opened on `tail`, the file's parsed tail; the reader's
-   * closer is registered on the calling thread's task context. Returns
-   * `ColumnarBatch`es when `scan` reads columnar, rows otherwise.
+   * A per-file ORC reader: the per-file body of Spark 4.1.2's
+   * `OrcFileFormat.buildReaderWithPartitionValues`, in both its batch
+   * and its row branch, without the configuration broadcast that
+   * function makes before it. It reads `requiredSchema` and
+   * `partitionSchema` of a relation of `dataSchema`, with the source
+   * `filters` pushed and under the session's `conf`. Each file is read
+   * with its own copy of `hadoopConf` (which nothing else mutates) and
+   * opened on `tail`, the file's parsed tail; the reader's closer is
+   * registered on the calling thread's task context. Returns
+   * `ColumnarBatch`es when `batches`, rows otherwise.
    */
-  def orcReader(scan: FileSourceScanExec, hadoopConf: Configuration)
+  def orcReader(conf: SQLConf, hadoopConf: Configuration,
+      dataSchema: StructType, partitionSchema: StructType,
+      requiredSchema: StructType, filters: Seq[Filter], batches: Boolean)
       : (PartitionedFile, OrcTail) => Iterator[InternalRow] = {
-    val rel = scan.relation
-    val conf = rel.sparkSession.sessionState.conf
-    val (dataSchema, partitionSchema, requiredSchema) =
-      (rel.dataSchema, rel.partitionSchema, scan.requiredSchema)
     val resultSchema = StructType(requiredSchema.fields ++ partitionSchema.fields)
-    val batches = conf.orcVectorizedReaderEnabled && scan.supportsColumnar
-    val filters = if (conf.orcFilterPushDown) pushedFilters(scan) else Nil
     val caseSensitive = conf.caseSensitiveAnalysis
     val capacity = conf.orcVectorizedReaderBatchSize
     val memoryMode =

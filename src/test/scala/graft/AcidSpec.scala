@@ -1035,45 +1035,58 @@ class AcidSpec extends SparkSpec {
     same()
   }
 
-  test("readsOrc finds an ORC read in any leaf or subquery, and nothing " +
-      "else") {
-    import org.apache.spark.sql.catalyst.TableIdentifier
-    import org.apache.spark.sql.catalyst.catalog.{CatalogStorageFormat,
-      CatalogTable, CatalogTableType, HiveTableRelation}
-    import org.apache.spark.sql.catalyst.types.DataTypeUtils
-    val dir = graft.sources.OrcIo.scratchDir("acid_reads_orc")
-    val flags = Seq((1L, true), (2L, false)).toDF("id", "force_flag")
-    flags.write.orc(s"$dir/o")
-    // a parquet dataset whose path and columns say "orc"
-    flags.write.parquet(s"$dir/score_orc")
-    def reads(df: org.apache.spark.sql.DataFrame) =
-      Acid.readsOrc(df.queryExecution.analyzed)
-    val orc = spark.read.orc(s"$dir/o")
-    val parquet = spark.read.parquet(s"$dir/score_orc")
-    assert(reads(orc))
-    assert(reads(parquet.join(orc, "id")))
-    orc.createOrReplaceTempView("acid_reads_orc_v")
-    assert(reads(parquet.filter("id in (select id from acid_reads_orc_v)")))
-    assert(!reads(parquet) && !reads(flags))
-    val v1 = "spark.sql.sources.useV1SourceList"
-    try {
-      spark.conf.set(v1, "")
-      val v2 = spark.read.orc(s"$dir/o")
-      assert(v2.queryExecution.analyzed.collectLeaves().exists(_.isInstanceOf[
-        org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation]))
-      assert(reads(v2) && !reads(spark.read.parquet(s"$dir/score_orc")))
-    } finally spark.conf.unset(v1)
-    def hive(format: String) = {
-      val serde = org.apache.spark.sql.internal.HiveSerDe
-        .sourceToSerDe(format).get
-      val schema = flags.schema
-      HiveTableRelation(CatalogTable(TableIdentifier("t", Some("default")),
-        CatalogTableType.EXTERNAL, CatalogStorageFormat.empty.copy(
-          inputFormat = serde.inputFormat, outputFormat = serde.outputFormat,
-          serde = serde.serde), schema, provider = Some("hive")),
-        DataTypeUtils.toAttributes(schema), Nil)
+  /** Write `events` as the one data file `name` of directory `d`. */
+  private def eventFile(d: String, name: String,
+      events: Seq[(Int, Long, Int, Long, Long, Double)]): Unit = {
+    val tmp = s"${graft.sources.OrcIo.scratchDir("acid_event_file")}/w"
+    eventsDf(events).coalesce(1).write.orc(tmp)
+    val part = new java.io.File(tmp).listFiles()
+      .filter(_.getName.endsWith(".orc")).head
+    new java.io.File(d).mkdirs()
+    java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(d, name))
+  }
+
+  test("on the driver paths, of two events equal on txn and operation " +
+      "the one in the file that sorts later by name wins") {
+    val dir = graft.sources.OrcIo.scratchDir("acid_tie_files")
+    val upd = Acid.OpUpdate
+    (1L to 4L).map(i => (i, i * 1.0)).toDF("id", "v")
+      .write.orc(s"$dir/t/base_1")
+    // b.orc is written first; a.orc sorts first
+    eventFile(s"$dir/t/delta_2", "b.orc",
+      Seq(event(upd, 1, 1L, 2L, 22.0), event(upd, 2, 2L, 2L, 20.0)))
+    eventFile(s"$dir/t/delta_2", "a.orc",
+      Seq(event(upd, 1, 1L, 2L, 11.0), event(upd, 3, 3L, 2L, 30.0)))
+    def read() = pairs(Acid.readTable(spark, s"$dir/t").collect().toSeq
+      .sortBy(_.getLong(0)))
+    val want = Seq(1L -> 22.0, 2L -> 20.0, 3L -> 30.0, 4L -> 4.0)
+    assert(read() == want)
+    var merged = ""
+    assert(jobsIn("minor-tie") {
+      merged = Acid.minorCompact(spark, s"$dir/t")
+    } == 0)
+    assert(merged.endsWith("/delta_2_2"), merged)
+    assert(read() == want)
+  }
+
+  test("a delta file whose event schema differs from the first file's " +
+      "fails readTable and minorCompact on the driver") {
+    val dir = graft.sources.OrcIo.scratchDir("acid_schema_mismatch")
+    (1L to 4L).map(i => (i, i * 1.0)).toDF("id", "v")
+      .write.orc(s"$dir/t/base_1")
+    eventsDf(Seq(event(Acid.OpUpdate, 1, 1L, 2L, 11.0)))
+      .write.orc(s"$dir/t/delta_2")
+    // the payload's `v` is a string here
+    eventsDf(Seq(event(Acid.OpUpdate, 2, 2L, 3L, 0.0)))
+      .withColumn("row", struct(col("rowId").as("id"), lit("x").as("v")))
+      .write.orc(s"$dir/t/delta_3")
+    Seq[() => Any](() => Acid.readTable(spark, s"$dir/t"),
+        () => Acid.minorCompact(spark, s"$dir/t")).foreach { call =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("differs from the first file's"),
+        e.getMessage)
     }
-    assert(Acid.readsOrc(hive("orc")) && !Acid.readsOrc(hive("parquet")))
+    assert(dirsOf(s"$dir/t") == Set("base_1", "delta_2", "delta_3"))
   }
 
   test("commits write their data and sidecar through the session's " +

@@ -1,6 +1,7 @@
 package graft
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.orc.CompressionKind.{LZ4, LZO, SNAPPY}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
@@ -160,22 +161,33 @@ class GoldenSpec extends SparkSpec {
     * answered from footers with no Spark job, equals the rows read. */
   private def checkTwin(name: String, file: String,
       input: Seq[Seq[(String, Any)]]): Unit = {
-    val golden = input.map { fields =>
-      val o = mapper.createObjectNode()
-      fields.foreach {
-        case (k, null) => o.putNull(k)
-        case (k, v: Long) => o.put(k, v)
-        case (k, v: java.math.BigDecimal) => o.put(k, v)
-        case (k, v: java.sql.Timestamp) => o.put(k, timestampText(v))
-        case (k, v) => o.put(k, v.toString)
-      }
-      o
-    }
+    val golden = input.map(dump)
     val df = spark.read.orc(file)
     val read = checkRows(name, df, golden)
     var counted = -1L
     assert(jobsIn(s"twin-$name") { counted = df.count() } == 0)
     assert(counted == read)
+  }
+
+  /** A writer's input row as the dump renders it: `fields` in order,
+    * binary as unsigned bytes and a union `(tag, value)` as
+    * `{"tag", "value"}`. */
+  private def dump(fields: Seq[(String, Any)]): JsonNode = {
+    val o = mapper.createObjectNode()
+    fields.foreach {
+      case (k, null) => o.putNull(k)
+      case (k, v: Long) => o.put(k, v)
+      case (k, v: Int) => o.put(k, v)
+      case (k, v: java.math.BigDecimal) => o.put(k, v)
+      case (k, v: java.sql.Timestamp) => o.put(k, timestampText(v))
+      case (k, v: Array[Byte]) =>
+        val a = o.putArray(k)
+        v.foreach(b => a.add(b & 0xFF))
+      case (k, (tag: Int, v)) =>
+        o.set[JsonNode](k, dump(Seq("tag" -> tag, "value" -> v)))
+      case (k, v) => o.put(k, v.toString)
+    }
+    o
   }
 
   private lazy val twins = graft.sources.OrcIo.scratchDir("golden_twins")
@@ -203,6 +215,26 @@ class GoldenSpec extends SparkSpec {
   test("golden twin: orc_split_elim (generated)") {
     checkTwin("orc_split_elim", OrcFixtures.splitElim(twins),
       OrcFixtures.splitElimUserids.map(v => Seq("userid" -> v)))
+  }
+  Seq("TestOrcFile.testSnappy" -> SNAPPY, "TestVectorOrcFile.testLzo" -> LZO,
+      "TestVectorOrcFile.testLz4" -> LZ4, "nulls-at-end-snappy" -> SNAPPY)
+    .foreach { case (name, codec) =>
+      test(s"golden twin: $name (generated)") {
+        checkTwin(name, OrcFixtures.codecFile(s"$twins/$name", codec),
+          (0 until 10000).map(OrcFixtures.codecRow).map { case (x, y) =>
+            Seq("x" -> x, "y" -> y) })
+      }
+    }
+  test("golden twin: TestOrcFile.columnProjection (generated)") {
+    checkTwin("columnProjection", OrcFixtures.projectionFile(twins),
+      (0 until 21000).map(OrcFixtures.projectionRow).map { case (a, b) =>
+        Seq("int1" -> a, "string1" -> b) })
+  }
+  test("golden twin: over1k_bloom (generated)") {
+    checkTwin("over1k_bloom", OrcFixtures.colN(twins),
+      OrcFixtures.colNRows.map(r => Seq(r.t.toInt, r.si.toInt, r.i, r.b, r.f,
+          r.d, r.bo, r.s, new java.sql.Timestamp(r.tsMillis), r.dec, r.bin)
+        .zipWithIndex.map { case (v, c) => s"_col$c" -> v }))
   }
 
   // format 0.11 + the flagship all-types file (VERDICT r1 item 4)
@@ -239,11 +271,13 @@ class GoldenSpec extends SparkSpec {
   /** The two files stock Spark can't open (bare non-struct root; union
     * type) go through [[graft.sources.UnionOrc]], compared at its
     * full-fidelity layer where timestamps keep nanoseconds. */
-  private def checkGoldenUnion(name: String): Unit = {
-    val path = s"$examples/$name.orc"
+  private def checkGoldenUnion(name: String): Unit =
+    checkGoldenUnion(name, s"$examples/$name.orc", goldenRows(name))
+
+  private def checkGoldenUnion(name: String, path: String,
+      golden: Seq[JsonNode]): Unit = {
     val schema = graft.sources.UnionOrc.schemaOf(path)
     val rows = graft.sources.UnionOrc.localRows(path).toIndexedSeq
-    val golden = goldenRows(name)
     assert(rows.length == golden.length,
       s"$name: ${rows.length} rows read, golden has ${golden.length}")
     rows.indices.foreach { i =>
@@ -261,5 +295,21 @@ class GoldenSpec extends SparkSpec {
   }
   test("golden: TestOrcFile.testUnionAndTimestamp.orc (union type)") {
     checkGoldenUnion("TestOrcFile.testUnionAndTimestamp")
+  }
+
+  // generated twins of the two files above, compared at the same layer
+  test("golden twin: TestOrcFile.testTimestamp (generated)") {
+    val f = OrcFixtures.timestampFile(s"$twins/timestamp",
+      "America/Los_Angeles")
+    checkGoldenUnion("testTimestamp", f, OrcFixtures.timestampWallClocks
+      .map(t => mapper.getNodeFactory.textNode(
+        timestampText(java.sql.Timestamp.valueOf(t)))) :+
+      mapper.getNodeFactory.nullNode())
+  }
+  test("golden twin: TestOrcFile.testUnionAndTimestamp (generated)") {
+    checkGoldenUnion("testUnionAndTimestamp",
+      OrcFixtures.unionFile(s"$twins/union"), OrcFixtures.unionRows.map(r =>
+        dump(Seq("time" -> r.ts,
+          "union" -> (if (r.tag < 0) null else (r.tag, r.value))))))
   }
 }
