@@ -178,20 +178,20 @@ object Acid {
    * reference tallies per delta file while writing.
    *
    * Deliberately tallied over FULL rows (`.rdd`), never an aggregate:
-   * ORC files carrying the exact ACID event schema cannot be read
-   * through the vectorized reader at all. Spark's
-   * OrcColumnarBatchReader detects the Hive-ACID pattern in the FILE
-   * schema (OrcUtils checkAcidSchema; `SchemaEvolution
-   * .checkAcidSchema:468-476` in the reference) and remaps requested
+   * an aggregate prunes the scan to the columns it uses, and a
+   * column-pruned read of a file carrying the exact ACID event schema
+   * throws, through the vectorized and the row reader alike. ORC's
+   * SchemaEvolution detects the ACID pattern in the FILE schema
+   * (`checkAcidSchema:468-476` in the reference) and maps the requested
    * top-level ids into the inner `row` struct's children, so a pruned
-   * scan (a `count()`, a projected aggregate) throws
-   * ArrayIndexOutOfBoundsException, and no formulation — schema-forced
-   * full width, count(struct(*)) pinned against ColumnPruning — gets
-   * past it; the ACID metadata columns are exactly what the remap
-   * hides. The row-oriented reader is the only path to them, and
-   * `AcidSpec`'s canary test pins the quirk. Every frame that scans
-   * ACID-schema ORC either references all six event columns (resolve,
-   * compaction, CDC) or goes through here.
+   * scan (a `count()`, a projected aggregate) fails with
+   * ArrayIndexOutOfBoundsException; `AcidSpec`'s canary test pins this.
+   * A full-width read works, batched or not: `.rdd` here reads all six
+   * event columns, through the vectorized reader by default
+   * (`OrcFileFormat.supportBatch` holds for the event schema), as
+   * [[latestOnDriver]] does. Every frame that
+   * scans ACID-schema ORC either references all six event columns
+   * (resolve, compaction, CDC) or goes through here.
    */
   private def tally(events: DataFrame,
       afterTxn: Long = Long.MinValue): AcidStats = {

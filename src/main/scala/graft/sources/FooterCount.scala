@@ -25,8 +25,9 @@ import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
  * v1 ORC relation, through at most an empty projection, as a
  * [[FooterCountExec]] leaf: the sum of the footer row counts of the
  * relation's listed non-empty files, read through [[OrcMeta.perFile]]
- * on the cached tails. Every other shape keeps Spark's plan: filters on
- * data or partition columns, groupings, `count(col)`, `DISTINCT`,
+ * on the cached tails, on the driver pool at any file count: the count
+ * starts no Spark job. Every other shape keeps Spark's plan: filters
+ * on data or partition columns, groupings, `count(col)`, `DISTINCT`,
  * `FILTER (WHERE …)`, bucketed and streaming relations, files read
  * with `ignoreCorruptFiles` or `ignoreMissingFiles` (which may drop
  * rows a footer counts), relations whose schema is ORC's ACID event
@@ -72,16 +73,16 @@ object FooterCount extends SparkStrategy {
     * zero-length files, as the scan does, and counts no rows of a file
     * whose schema has no columns, as Spark's reader reads none. */
   private[sources] def rows(rel: HadoopFsRelation): Long = {
-    val spark = rel.sparkSession
-    val conf = spark.sessionState.newHadoopConfWithOptions(rel.options)
+    val conf = rel.sparkSession.sessionState
+      .newHadoopConfWithOptions(rel.options)
     val files = rel.location.listFiles(Nil, Nil).flatMap(_.files)
       .filter(_.getLen > 0).map { f =>
         val p = f.getPath
         p.toString -> OrcMeta.TailKey(p.getFileSystem(conf), f.fileStatus)
       }
-    OrcMeta.perFile(spark, files, conf) { (_, r) =>
+    OrcMeta.perFile(files, conf) { (_, r) =>
       Seq(if (r.getSchema.getFieldNames.isEmpty) 0L else r.getNumberOfRows)
-    }.fold(_.sum, _.collect().sum)
+    }.sum
   }
 }
 

@@ -9,13 +9,9 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.orc.{ColumnStatistics, OrcFile, Reader, TypeDescription}
 import org.apache.orc.impl.OrcTail
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.PartitionedFile
-import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.util.SerializableConfiguration
-import scala.reflect.ClassTag
 import scala.reflect.runtime.universe.TypeTag
 
 /**
@@ -38,16 +34,13 @@ import scala.reflect.runtime.universe.TypeTag
  * module that lists or probes ORC files, goes through it and
  * [[withReader]].
  *
- * Scale: footer reads are O(#files) metadata-only IOs ([[perFile]]).
- * A dataset of at most `spark.sql.sources.parallelPartitionDiscovery
- * .threshold` files (default 32) is read on a shared driver pool and
- * answers as a local DataFrame, with no Spark job; a larger one is read
- * by one job of one task per 16 files, which keeps a large answer
- * (row-group index, stripe encodings) off the driver. The cut is
- * borrowed from Spark's partition discovery and is not measured for
- * tail reads. Either way each parsed tail is kept in a bounded cache
- * keyed by (qualified path, length, modification time), so a repeated
- * footer call costs the listing.
+ * Scale: footer reads are O(#files) metadata-only IOs ([[perFile]]),
+ * read on a shared 8-thread driver pool whatever the file count, and
+ * every surface answers as a local DataFrame with no Spark job. Each
+ * parsed tail is kept in a bounded cache keyed by (qualified path,
+ * length, modification time), so a repeated footer call costs the
+ * listing. A surface's rows are held on the driver: the largest, the
+ * row-group index, is one row per 10k-row group and column.
  */
 object OrcMeta {
 
@@ -150,19 +143,12 @@ object OrcMeta {
         throw e.getCause
     }
 
-  /** Open one file on its cached tail, loading the tail on a miss. */
-  private def cached[A](key: TailKey, conf: Configuration)
-      (f: Reader => A): A =
-    open(key.path, OrcFile.readerOptions(conf).orcTail(tail(key, conf)))(f)
-
-  /** Open one file's tail, run `f`, close. `conf` defaults to a fresh
-    * Hadoop configuration, the one tasks use; driver-side callers may
-    * pass the session's. `maxLength` reads only that prefix of the file
-    * (the side-file recovery of [[OrcIo.readSalvage]]). It reads the
-    * tail itself: the tail cache serves [[perFile]] and the readers of
-    * [[DriverScan]] alone. */
-  private[graft] def withReader[A](file: String,
-      conf: Configuration = new Configuration(),
+  /** Open one file's tail with `conf` (on the driver, the session's
+    * Hadoop configuration), run `f`, close. `maxLength` reads only that
+    * prefix of the file (the side-file recovery of
+    * [[OrcIo.readSalvage]]). It reads the tail itself: the tail cache
+    * serves [[perFile]] and the readers of [[DriverScan]] alone. */
+  private[graft] def withReader[A](file: String, conf: Configuration,
       maxLength: Long = Long.MaxValue)(f: Reader => A): A =
     open(file, OrcFile.readerOptions(conf).maxLength(maxLength))(f)
 
@@ -186,42 +172,28 @@ object OrcMeta {
   }
 
   /** The tail fan-out behind every surface: `f`'s rows per file of
-    * `files` (a [[listing]]), in order, each file opened with `conf`.
-    * Up to the partition-discovery threshold (the cut in this object's
-    * scaladoc) the files are read on the driver pool ([[onPool]]) and
-    * the rows come back as a local Seq (Left); above it one task per 16
-    * files reads them (Right), `conf` shipped to them in one broadcast. */
-  private[sources] def perFile[A: ClassTag](spark: SparkSession,
-      files: Seq[(String, TailKey)], conf: Configuration)
-      (f: (String, Reader) => Seq[A]): Either[Seq[A], RDD[A]] = {
-    if (files.size <= spark.conf
-        .get(SQLConf.PARALLEL_PARTITION_DISCOVERY_THRESHOLD.key).toInt) {
-      Left(onPool(files.map { case (file, key) =>
-        () => cached(key, conf)(f(file, _))
-      }).flatten)
-    } else {
-      val shipped = spark.sparkContext.broadcast(
-        new SerializableConfiguration(conf))
-      Right(spark.sparkContext
-        .parallelize(files, math.max(1, files.size / 16))
-        .mapPartitions(_.flatMap { case (file, key) =>
-          cached(key, shipped.value.value)(f(file, _))
-        }))
-    }
-  }
+    * `files` (a [[listing]]), in order, each file opened with `conf` on
+    * its cached tail (loaded on a miss) and read on the driver pool
+    * ([[onPool]]). */
+  private[sources] def perFile[A](files: Seq[(String, TailKey)],
+      conf: Configuration)(f: (String, Reader) => Seq[A]): Seq[A] =
+    onPool(files.map { case (file, key) => () =>
+      open(key.path, OrcFile.readerOptions(conf).orcTail(tail(key, conf)))(
+        f(file, _))
+    }).flatten
 
   /** [[perFile]] over the data files of the dataset at `path`, read
     * with the session's Hadoop configuration. */
-  private def perFile[A: ClassTag](spark: SparkSession, path: String)
-      (f: (String, Reader) => Seq[A]): Either[Seq[A], RDD[A]] =
-    perFile(spark, listing(spark, path), spark.sessionState.newHadoopConf())(f)
+  private def perFile[A](spark: SparkSession, path: String)
+      (f: (String, Reader) => Seq[A]): Seq[A] =
+    perFile(listing(spark, path), spark.sessionState.newHadoopConf())(f)
 
-  /** [[perFile]]'s rows as a DataFrame: local on the driver path, so
-    * collecting it runs no job. */
+  /** [[perFile]]'s rows as a local DataFrame: collecting it runs no
+    * job. */
   private def frame[A <: Product: TypeTag](spark: SparkSession,
-      rows: Either[Seq[A], RDD[A]]): DataFrame = {
+      rows: Seq[A]): DataFrame = {
     import spark.implicits._
-    rows.fold(_.toDF(), _.toDF())
+    rows.toDF()
   }
 
   /** One row per (file, stripe): the scan-parallelism layout
@@ -247,7 +219,7 @@ object OrcMeta {
     * footer pass, no shuffle. */
   private[graft] def typedColumnStats(spark: SparkSession, path: String)
       : Seq[(ColStats, TypeDescription.Category)] =
-    perFile(spark, path)(footerStats).fold(identity, _.collect().toSeq)
+    perFile(spark, path)(footerStats)
 
   private def footerStats(file: String, r: Reader)
       : Seq[(ColStats, TypeDescription.Category)] = {
@@ -365,7 +337,7 @@ object OrcMeta {
     * [[graft.operators.Stats]] add up on the driver. */
   private[graft] def fileMetas(spark: SparkSession, path: String)
       : Seq[FileMeta] =
-    perFile(spark, path)(fileMetaOf).fold(identity, _.collect().toSeq)
+    perFile(spark, path)(fileMetaOf)
 
   private def fileMetaOf(file: String, r: Reader): Seq[FileMeta] =
     Seq(FileMeta(file, r.getNumberOfRows, r.getRawDataSize,

@@ -8,6 +8,7 @@ import org.apache.hadoop.hive.ql.exec.vector._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.RebaseDateTime
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 /**
  * Reader for ORC files containing UNION-typed columns (SURVEY.md §1.2,
@@ -27,7 +28,8 @@ import org.apache.spark.sql.types._
  * side-file recovery of [[OrcIo.readSalvage]]). Every other ORC read,
  * ACID events included, goes through Spark's own reader.
  *
- * Scale: one Spark task per file (parallelize over the file list);
+ * Scale: one Spark task per file (parallelize over the file list,
+ * with the session's Hadoop configuration shipped in the closure);
  * within a task the scan is the same stripe-ordered vectorized batch
  * iteration Spark's own reader performs. For stripe-level splits the
  * reader options accept `range(offset, len)` — single-file-per-task is
@@ -132,10 +134,10 @@ object UnionOrc {
       case other => StructType(Seq(StructField("value", other)))
     }
 
-  /** Schema of an ORC file ([[rootSchema]]). */
-  def schemaOf(path: String, maxLength: Long = Long.MaxValue): StructType =
-    OrcMeta.withReader(path, maxLength = maxLength)(r =>
-      rootSchema(r.getSchema))
+  /** Schema of an ORC file ([[rootSchema]]), opened with `conf`. */
+  def schemaOf(path: String, conf: Configuration,
+      maxLength: Long = Long.MaxValue): StructType =
+    OrcMeta.withReader(path, conf, maxLength)(r => rootSchema(r.getSchema))
 
   /**
    * Full-fidelity row iterator over one file, usable on driver or
@@ -144,12 +146,13 @@ object UnionOrc {
    * (`TimestampType`'s resolution) — golden-content tests compare at
    * this layer for that reason. Other values convert as Spark's own
    * ORC reader converts them, so a DataFrame built from these rows
-   * equals `spark.read.orc` on any file that reader accepts.
-   * `maxLength` reads only that prefix of the file.
+   * equals `spark.read.orc` on any file that reader accepts. The file
+   * is opened with `conf`; `maxLength` reads only that prefix of it.
    */
-  def localRows(p: String, maxLength: Long = Long.MaxValue): Iterator[Row] = {
+  def localRows(p: String, conf: Configuration,
+      maxLength: Long = Long.MaxValue): Iterator[Row] = {
     val reader = OrcFile.createReader(new Path(p),
-      OrcFile.readerOptions(new Configuration()).maxLength(maxLength))
+      OrcFile.readerOptions(conf).maxLength(maxLength))
     val fileSchema = reader.getSchema
     val rows = reader.rows()
     val batch = fileSchema.createRowBatch()
@@ -180,15 +183,18 @@ object UnionOrc {
   }
 
   /** Read ORC files (union-typed or not) into a DataFrame, one task
-    * per file; a file named in `maxLengths` is read only up to that
-    * length ([[localRows]]). */
+    * per file, each opened with the session's Hadoop configuration; a
+    * file named in `maxLengths` is read only up to that length
+    * ([[localRows]]). */
   def read(spark: SparkSession, paths: Seq[String],
       maxLengths: Map[String, Long] = Map.empty): DataFrame = {
     def maxLength(p: String) = maxLengths.getOrElse(p, Long.MaxValue)
-    val schema = schemaOf(paths.head, maxLength(paths.head))
+    val conf = spark.sessionState.newHadoopConf()
+    val schema = schemaOf(paths.head, conf, maxLength(paths.head))
+    val shipped = new SerializableConfiguration(conf)
     val rdd = spark.sparkContext
       .parallelize(paths, math.max(1, paths.size))
-      .flatMap(p => localRows(p, maxLength(p)))
+      .flatMap(p => localRows(p, shipped.value, maxLength(p)))
     spark.createDataFrame(rdd, schema)
   }
 }

@@ -531,11 +531,11 @@ class AcidSpec extends SparkSpec {
 
   test("canary: a column-pruned read of an ACID-schema delta still " +
       "throws, the full-row reader does not") {
-    // the vectorized ORC reader remaps requested column ids of files
-    // carrying the ACID event schema (checkAcidSchema), so every
-    // tally of delta files goes through the row reader. If this test
-    // fails, the bundled reader has changed and the row-reader
-    // workarounds in Acid can be revisited.
+    // ORC's reader remaps requested column ids of files carrying the
+    // ACID event schema (checkAcidSchema), so a column-pruned read
+    // fails and every tally of delta files reads all six columns. If
+    // this test fails, the bundled reader has changed and the
+    // full-width workarounds in Acid can be revisited.
     val dir = graft.sources.OrcIo.scratchDir("acid_canary")
     Acid.writeDelta(eventsDf(Seq(event(Acid.OpUpdate, 1, 1L, 2L, 11.0),
       event(Acid.OpDelete, 2, 2L, 2L, 0.0))), s"$dir/delta_2")
@@ -865,7 +865,7 @@ class AcidSpec extends SparkSpec {
   /** The events of the data files under `dir`, in file order, as text. */
   private def eventsIn(dir: String): Seq[String] =
     graft.sources.OrcMeta.dataFiles(spark, dir)
-      .flatMap(f => graft.sources.UnionOrc.localRows(f).map(canon))
+      .flatMap(f => graft.sources.UnionOrc.localRows(f, hadoopConf).map(canon))
 
   test("a small local writeDelta and minorCompact start no Spark job; " +
       "each delta is one data file, _SUCCESS and its sidecar") {
@@ -904,7 +904,7 @@ class AcidSpec extends SparkSpec {
     assert(Acid.readAcidStats(spark, merged)
       .contains(Acid.AcidStats(0, 4, 16)))
     val keys = graft.sources.OrcMeta.dataFiles(spark, merged)
-      .flatMap(graft.sources.UnionOrc.localRows(_))
+      .flatMap(graft.sources.UnionOrc.localRows(_, hadoopConf))
       .map(r => (r.getLong(1), r.getInt(2), r.getLong(3)))
     assert(keys == keys.sorted && keys.size == 20, keys)
     assert(state(s"$dir/t") == before && before.size == 84)

@@ -183,8 +183,8 @@ class CompatSpec extends SparkSpec {
     }
     assert(df.collect().toSeq == want)
     // the full-fidelity layer keeps the nanoseconds
-    assert(graft.sources.UnionOrc.localRows(f).map(_.getTimestamp(0)).toSeq ==
-      OrcFixtures.unionRows.map(_.ts))
+    assert(graft.sources.UnionOrc.localRows(f, hadoopConf)
+      .map(_.getTimestamp(0)).toSeq == OrcFixtures.unionRows.map(_.ts))
   }
 
   test("edge files: empty reads as 0 rows; future version is refused") {
@@ -240,7 +240,8 @@ class CompatSpec extends SparkSpec {
     // stock Spark cannot analyze a bare `timestamp` root; the values
     // read back as the wall-clock times the writer was given
     val want = OrcFixtures.timestampWallClocks.map(java.sql.Timestamp.valueOf)
-    assert(UnionOrc.localRows(f).map(_.getTimestamp(0)).toSeq == want :+ null)
+    assert(UnionOrc.localRows(f, hadoopConf).map(_.getTimestamp(0)).toSeq ==
+      want :+ null)
     val df = UnionOrc.read(spark, Seq(f))
     assert(df.schema.fieldNames.toSeq == Seq("value"))
     assert(df.collect().map(_.getTimestamp(0)).toSeq == want.map { t =>

@@ -93,12 +93,11 @@ class FooterCountSpec extends SparkSpec {
     }
   }
 
-  test("a listing above the partition-discovery threshold counts through " +
-      "perFile's job path") {
+  test("a listing above the partition-discovery threshold counts from " +
+      "footers") {
+    // the setting no longer sends footer reads to a Spark job
     withConf("spark.sql.sources.parallelPartitionDiscovery.threshold" -> "1") {
-      val df = spark.read.orc(table)
-      assert(planned(df.agg(count(lit(1)))))
-      assert(jobsIn("footer-job")(assert(df.count() == 6000L)) == 1)
+      assert(footerCount(spark.read.orc(table)) == 6000L)
     }
   }
 

@@ -2,7 +2,7 @@ package graft
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.orc.CompressionKind.{LZ4, LZO, SNAPPY}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Encoders, Row}
 import org.apache.spark.sql.types._
 
 import java.io.{BufferedReader, InputStreamReader}
@@ -237,6 +237,46 @@ class GoldenSpec extends SparkSpec {
         .zipWithIndex.map { case (v, c) => s"_col$c" -> v }))
   }
 
+  test("golden twin: TestOrcFile.testWithoutIndex (generated)") {
+    val f = OrcFixtures.noIndexFile(twins)
+    checkTwin("testWithoutIndex", f, OrcFixtures.noIndexRows.map {
+      case (a, b) => Seq("int1" -> a, "string1" -> b) })
+    // no row index: stride 0, and no stripe carries index streams
+    assert(graft.sources.OrcMeta.withReader(f, hadoopConf)(
+      _.getRowIndexStride) == 0)
+    val stripes = graft.sources.OrcMeta.stripes(spark, f)
+      .as[graft.sources.OrcMeta.StripeInfo](Encoders.product).collect()
+    assert(stripes.length > 1 && stripes.forall(s =>
+      s.indexLength == 0L && s.dataLength > 0L), stripes.toSeq)
+  }
+
+  test("golden twin: TestOrcFile.testStripeLevelStats (generated)") {
+    val f = OrcFixtures.stripeStatsFile(twins)
+    checkTwin("testStripeLevelStats", f, (0 until 11000)
+      .map(OrcFixtures.stripeStatsRow).map { case (a, b) =>
+        Seq("int1" -> a, "string1" -> b) })
+    // each stripe's statistics are those of the rows it holds
+    import graft.sources.OrcMeta.{StripeColStats, StripeInfo}
+    val stripes = graft.sources.OrcMeta.stripes(spark, f)
+      .as[StripeInfo](Encoders.product).collect().sortBy(_.stripe)
+    assert(stripes.length >= 3, stripes.toSeq)
+    val stats = graft.sources.OrcMeta.stripeStats(spark, f)
+      .as[StripeColStats](Encoders.product).collect()
+      .map(s => (s.stripe, s.columnId) -> s).toMap
+    val firstRows = stripes.map(_.rows).scanLeft(0L)(_ + _)
+    stripes.foreach { s =>
+      val (ints, strings) = (firstRows(s.stripe) until firstRows(s.stripe + 1))
+        .map(k => OrcFixtures.stripeStatsRow(k.toInt)).unzip
+      def summary(column: Int) = {
+        val c = stats((s.stripe, column))
+        (c.count, c.min, c.max)
+      }
+      assert(summary(1) ==
+        (s.rows, ints.min.toString, ints.max.toString), s)
+      assert(summary(2) == (s.rows, strings.min, strings.max), s)
+    }
+  }
+
   // format 0.11 + the flagship all-types file (VERDICT r1 item 4)
   test("golden: TestOrcFile.test1.orc full content") {
     checkGolden("TestOrcFile.test1")
@@ -276,8 +316,8 @@ class GoldenSpec extends SparkSpec {
 
   private def checkGoldenUnion(name: String, path: String,
       golden: Seq[JsonNode]): Unit = {
-    val schema = graft.sources.UnionOrc.schemaOf(path)
-    val rows = graft.sources.UnionOrc.localRows(path).toIndexedSeq
+    val schema = graft.sources.UnionOrc.schemaOf(path, hadoopConf)
+    val rows = graft.sources.UnionOrc.localRows(path, hadoopConf).toIndexedSeq
     assert(rows.length == golden.length,
       s"$name: ${rows.length} rows read, golden has ${golden.length}")
     rows.indices.foreach { i =>

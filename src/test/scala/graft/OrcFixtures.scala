@@ -306,6 +306,45 @@ object OrcFixtures {
       cols(1).asInstanceOf[BytesColumnVector].setVal(r, b.getBytes("UTF-8"))
     }
 
+  /** The rows of [[noIndexFile]]: 10,000 pseudo-random (int, bit
+    * string) pairs from `java.util.Random(24)`, each repeated 5 times. */
+  val noIndexRows: IndexedSeq[(Int, String)] = {
+    val rand = new java.util.Random(24)
+    (0 until 10000).flatMap { _ =>
+      val a = rand.nextInt()
+      Seq.fill(5)((a, Integer.toBinaryString(rand.nextInt())))
+    }
+  }
+
+  /** Twin of `TestOrcFile.testWithoutIndex.orc`: [[noIndexRows]] of
+    * `struct<int1:int,string1:string>`, snappy, with a 5,000-byte
+    * stripe size (so several stripes) and no row index (stride 0). */
+  def noIndexFile(dir: String): String =
+    writeOrc(s"$dir/no_index.orc", "struct<int1:int,string1:string>",
+        noIndexRows.size, stride = 0, codec = Some(CompressionKind.SNAPPY),
+        stripeSize = Some(5000L)) { (cols, r, i) =>
+      val (a, b) = noIndexRows(i)
+      cols(0).asInstanceOf[LongColumnVector].vector(r) = a
+      cols(1).asInstanceOf[BytesColumnVector].setVal(r, b.getBytes("UTF-8"))
+    }
+
+  /** The rows of [[stripeStatsFile]]: 5,000 of (1, "one"), 5,000 of
+    * (2, "two") and 1,000 of (3, "three"). */
+  def stripeStatsRow(k: Int): (Int, String) =
+    if (k < 5000) (1, "one") else if (k < 10000) (2, "two") else (3, "three")
+
+  /** Twin of `TestOrcFile.testStripeLevelStats.orc`: 11,000
+    * [[stripeStatsRow]]s of `struct<int1:int,string1:string>` in stripes
+    * cut at the writer's memory checks (a stripe size of 1 KB), so each
+    * stripe's statistics cover a different run of values. */
+  def stripeStatsFile(dir: String): String =
+    writeOrc(s"$dir/stripe_stats.orc", "struct<int1:int,string1:string>",
+        11000, stride = 1000, stripeSize = Some(1024L)) { (cols, r, i) =>
+      val (a, b) = stripeStatsRow(i)
+      cols(0).asInstanceOf[LongColumnVector].vector(r) = a
+      cols(1).asInstanceOf[BytesColumnVector].setVal(r, b.getBytes("UTF-8"))
+    }
+
   /** Run `body` with the scheme `graftfs:` (the local file system under
     * another name, [[SessionSchemeFs]]) set only on `spark`'s session
     * conf, which every Hadoop configuration the session builds copies:

@@ -246,6 +246,26 @@ class OrcIoSpec extends SparkSpec {
     assert(bad2.exists(_.endsWith("lost.orc")))
   }
 
+  test("readSalvage recovers a side-file prefix on a scheme set only on " +
+      "the session") {
+    val dir = OrcIo.scratchDir("salvage_scheme")
+    OrcIo.write(Tables.load(spark, sfDir, "nation").coalesce(1), s"$dir/t")
+    val orcFile = new java.io.File(s"$dir/t").listFiles()
+      .filter(_.getName.endsWith(".orc")).head
+    val goodBytes = java.nio.file.Files.readAllBytes(orcFile.toPath)
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/t/open.orc"),
+      goodBytes ++ Array.fill[Byte](4096)(0x5A))
+    OrcIo.writeFlushLength(spark, s"$dir/t/open.orc", goodBytes.length.toLong)
+    val n = Tables.load(spark, sfDir, "nation").count()
+    OrcFixtures.withSessionScheme(spark) {
+      // the recovered file's schema is read on the driver and its rows
+      // in a task, both through the scheme
+      val (df, bad) = OrcIo.readSalvage(spark, s"graftfs://$dir/t")
+      assert(bad.isEmpty, bad)
+      assert(df.count() == 2 * n)
+    }
+  }
+
   test("every footer surface lists exactly the files spark.read.orc " +
       "scans") {
     val t = s"${OrcIo.scratchDir("listing")}/t"
@@ -390,7 +410,7 @@ class OrcIoSpec extends SparkSpec {
   }
 
   test("footer surfaces and statsOnly read through the session's Hadoop " +
-      "configuration, on both tail-read paths") {
+      "configuration") {
     val dir = OrcIo.scratchDir("meta_scheme_read")
     OrcFixtures.withSessionScheme(spark) {
       val t = s"graftfs://$dir/t"
@@ -402,13 +422,9 @@ class OrcIoSpec extends SparkSpec {
         graft.operators.Stats.statsOnlyColumnStats(spark, t))
         .map(_.collect().map(_.toString).toSeq.sorted) :+
         Seq(graft.operators.Stats.statsOnlyCount(spark, t).toString)
-      val driver = surfaces()
-      assert(driver.last == Seq("3000"))
-      // a threshold of 0 files sends every tail read to the job path
-      val job = withConf(
-        "spark.sql.sources.parallelPartitionDiscovery.threshold" -> "0")(
-        surfaces())
-      assert(job == driver)
+      val read = surfaces()
+      assert(read.forall(_.nonEmpty))
+      assert(read.last == Seq("3000"))
     }
   }
 
@@ -461,7 +477,7 @@ class OrcIoSpec extends SparkSpec {
     val f = s"${OrcIo.scratchDir("tail_prefix")}/two.orc"
     val flushed = OrcFixtures.longs(f, 3000, flushAfter = 1000)
     def prefixRows() =
-      OrcMeta.withReader(f, maxLength = flushed)(_.getNumberOfRows)
+      OrcMeta.withReader(f, conf, flushed)(_.getNumberOfRows)
     def footerRows() =
       OrcMeta.fileMeta(spark, f).as[OrcMeta.FileMeta].head().rows
     val loads = tailLoads
@@ -472,46 +488,57 @@ class OrcIoSpec extends SparkSpec {
     assert(prefixRows() == 1000L)   // and the prefix open does not use it
   }
 
-  test("driver path and job path give the same rows on every footer " +
-      "surface") {
-    val t = s"${OrcIo.scratchDir("tail_paths")}/t"
-    Tables.load(spark, sfDir, "nation").write.partitionBy("n_regionkey")
-      .orc(t)
-    OrcMeta.writeMetadataFile(s"$t/_acid_stats.orc", Map("k" -> "v"), conf)
+  test("footer calls and count() on a 40-file dataset start no Spark " +
+      "job") {
+    import graft.operators.Stats
+    val t = s"${OrcIo.scratchDir("tail_forty")}/t"
+    // 8 writer tasks, each with rows of all 5 partitions: 40 files, more
+    // than Spark's partition-discovery threshold (32), the file count
+    // above which footer reads once ran as a Spark job
+    OrcIo.write(spark.range(0, 4000, 1, 1).select(col("id").as("k"),
+        concat(lit("s"), (col("id") % 97).cast("string")).as("s"),
+        (col("id") % 5).as("p")).repartition(8), t, partitionBy = Seq("p"))
     val names = new java.io.File(t).list().toSet
-    assert(Seq("_SUCCESS", "_acid_stats.orc").forall(names.contains))
-    assert(new java.io.File(s"$t/n_regionkey=0").list()
+    assert(names.contains("_SUCCESS"))
+    assert(new java.io.File(s"$t/p=0").list()
       .exists(n => n.startsWith(".") && n.endsWith(".crc")))
-    assert(OrcMeta.dataFiles(spark, t).size == 5)
-    def surfaces(): Seq[(String, Seq[String])] = {
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(_.toString).toSeq.sorted
-      Seq(
-        "stripes" -> rows(OrcMeta.stripes(spark, t)),
-        "columnStats" -> rows(OrcMeta.columnStats(spark, t)),
-        "stripeStats" -> rows(OrcMeta.stripeStats(spark, t)),
-        "rowGroupIndex" -> rows(OrcMeta.rowGroupIndex(spark, t)),
-        "stripeEncodings" -> rows(OrcMeta.stripeEncodings(spark, t)),
-        "fileMeta" -> rows(OrcMeta.fileMeta(spark, t)),
-        "userMetadata" -> rows(OrcMeta.userMetadata(spark, t)),
-        "memoryEstimate" -> rows(OrcMeta.memoryEstimate(spark, t)),
-        "typedColumnStats" ->
-          OrcMeta.typedColumnStats(spark, t).map(_.toString).sorted,
-        "statsOnlyColumnStats" ->
-          rows(graft.operators.Stats.statsOnlyColumnStats(spark, t)),
-        "statsOnlyCount" ->
-          Seq(graft.operators.Stats.statsOnlyCount(spark, t).toString),
-        "rawDataSize" ->
-          Seq(graft.operators.Stats.rawDataSize(spark, t).toString))
-    }
-    val threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    val onDriver = surfaces()
-    val inJob =
-      try { spark.conf.set(threshold, "0"); surfaces() }
-      finally spark.conf.unset(threshold)
-    onDriver.zip(inJob).foreach { case ((surface, d), (_, j)) =>
-      assert(d.nonEmpty, surface)
-      assert(d == j, surface)
+    val files = OrcMeta.dataFiles(spark, t)
+    assert(files.size == 40)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).toSeq
+    val surfaces: Seq[(String, String => Seq[String])] = Seq(
+      "stripes" -> (p => rows(OrcMeta.stripes(spark, p))),
+      "columnStats" -> (p => rows(OrcMeta.columnStats(spark, p))),
+      "stripeStats" -> (p => rows(OrcMeta.stripeStats(spark, p))),
+      "rowGroupIndex" -> (p => rows(OrcMeta.rowGroupIndex(spark, p))),
+      "stripeEncodings" -> (p => rows(OrcMeta.stripeEncodings(spark, p))),
+      "fileMeta" -> (p => rows(OrcMeta.fileMeta(spark, p))),
+      "userMetadata" -> (p => rows(OrcMeta.userMetadata(spark, p))),
+      "memoryEstimate" -> (p => rows(OrcMeta.memoryEstimate(spark, p))),
+      "typedColumnStats" ->
+        (p => OrcMeta.typedColumnStats(spark, p).map(_.toString)),
+      "statsOnlyColumnStats" ->
+        (p => rows(Stats.statsOnlyColumnStats(spark, p)).sorted))
+    val df = spark.read.orc(t)
+    var read = Seq.empty[(String, Seq[String])]
+    var (count, statsCount, rawSize) = (-1L, -1L, -1L)
+    assert(jobsIn("footer-forty") {
+      read = surfaces.map { case (name, surface) => name -> surface(t) }
+      count = df.count()
+      statsCount = Stats.statsOnlyCount(spark, t)
+      rawSize = Stats.rawDataSize(spark, t)
+    } == 0)
+    val scanned = df.rdd.count()
+    assert(scanned == 4000L && count == scanned && statsCount == scanned)
+    val metas = OrcMeta.fileMeta(spark, t).as[OrcMeta.FileMeta].collect()
+    assert(metas.length == 40 && metas.map(_.file).toSeq == files)
+    assert(rawSize == metas.map(_.rawDataSize).sum && rawSize > 0)
+    // each per-file surface lists the files in order, each with the
+    // rows a call on that file alone gives
+    read.foreach { case (name, got) =>
+      assert(got.nonEmpty, name)
+      if (name != "statsOnlyColumnStats")
+        assert(got == files.flatMap(surfaces.toMap.apply(name)), name)
     }
   }
 
@@ -536,15 +563,6 @@ class OrcIoSpec extends SparkSpec {
         .contains(Acid.AcidStats(1, 0, 0)))
     }
     assert(footer == 0)
-    val threshold =
-      "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    val job = jobsIn("footer-job") {
-      try {
-        spark.conf.set(threshold, "0")
-        assert(Stats.statsOnlyCount(spark, t) == 25L)
-      } finally spark.conf.unset(threshold)
-    }
-    assert(job == 1)
   }
 
   test("scratch directories are deleted with their contents, and no " +

@@ -20,6 +20,10 @@ trait SparkSpec extends AnyFunSuite {
   def spark: SparkSession = SparkSpec.spark
   def sfDir: String = SparkSpec.sfDir
 
+  /** The session's Hadoop configuration, the one the engine reads with. */
+  def hadoopConf: org.apache.hadoop.conf.Configuration =
+    spark.sessionState.newHadoopConf()
+
   /** Run `body` with the session confs `kv` set, then restore them. */
   def withConf[A](kv: (String, String)*)(body: => A): A = {
     val prior = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
